@@ -363,6 +363,26 @@ def _process_day_by_day(spark: SparkSession, kind: str, in_dir: str,
     return processed
 
 
+def _spark_file_name(spark: SparkSession, path: str) -> str:
+    """The basename Spark reports for ``path`` in ``_metadata.file_name``:
+    the URI-encoded form (``2025 01%01.parquet`` → ``2025%2001%2501.parquet``)."""
+    uri = spark._jvm.org.apache.hadoop.fs.Path(path).toUri()
+    return uri.getRawPath().rsplit("/", 1)[-1]
+
+
+def _has_rows(kind: str, path: str) -> bool:
+    """Footer check for a day that wrote no outputs: True when its rows
+    were all null-keyed (commit an empty marker), False when it is empty
+    (O9 skip) or has become unreadable (warn+skip; retried next run)."""
+    from .splitter import parquet_num_rows
+
+    try:
+        return parquet_num_rows(path) > 0
+    except (OSError, ValueError) as e:  # missing, or not parquet
+        log.warning("[%s] unreadable: %s (%s)", kind, path, e)
+        return False
+
+
 def _process_batched(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
                      marker_dir: str, missing_dates: list[str],
                      key: str, manifest: str = "outputs",
@@ -371,74 +391,50 @@ def _process_batched(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
 
     The reference loops day-by-day (parquet-splitter.py:144); on Spark
     that pays per-job overhead per day. Reading every backlog file in
-    one scan (day recovered from the filename) and fanning out with a
-    single ``groupBy(key, day).applyInPandas`` amortizes scheduling to
-    one job regardless of backlog depth — the catch-up semantics and
-    the per-day marker documents are unchanged. Markers commit after
-    the whole batch succeeds: a crash mid-batch leaves no markers, so
-    the re-run redoes those days (output overwrite keeps that safe —
-    same recovery contract as the reference, :159-160 in SURVEY.md).
-    """
-    from .splitter import ORDER_COL, write_parquet_object
+    one scan and fanning out with a single ``groupBy(key, file)``
+    Arrow writer amortizes scheduling to one job regardless of backlog
+    depth — the catch-up semantics and the per-day marker documents are
+    unchanged.  The day of a row is its file's listing key, looked up
+    per group from ``_metadata.file_name``.  Markers commit after the
+    whole batch succeeds: a crash mid-batch leaves no markers, so the
+    re-run redoes those days (output overwrite keeps that safe — same
+    recovery contract as the reference, :159-160 in SURVEY.md).
 
-    import pandas as pd
+    A day whose rows are all null-keyed writes no outputs, yet must
+    commit an empty marker (day-by-day parity) or it is re-batched
+    forever; a truly EMPTY day must stay unmarked (the O9 skip).  The
+    scan cannot tell the two apart, so after the job each day without
+    outputs gets one footer read of its row count.
+    """
     from pyspark.sql import functions as F
+
+    from .splitter import resolve_fs, split_groups
 
     base = in_dir.rstrip("/")
     # missing_dates derive from the listing, so the files exist; no
     # per-file probe needed (the reference's NoSuchKey guard covers a
     # list/get race — here the batch read's own error handling does).
-    paths = [f"{base}/{date}.parquet" for date in missing_dates]
+    in_paths = {date: f"{base}/{date}.parquet" for date in missing_dates}
     try:
-        df = spark.read.parquet(*paths)
+        df = spark.read.parquet(*in_paths.values())
     except Exception as e:
         log.warning("[%s] batch read failed (%s); falling back day-by-day", kind, e)
         return None  # caller runs the per-day loop, which skips bad days
     require_columns(df, [key])
-    # basename minus '.parquet' — must mirror extract_dates, or
-    # non-8-char date keys would mis-name outputs/markers and
-    # reprocess forever
-    date_expr = F.regexp_replace(
-        F.element_at(F.split(F.input_file_name(), "/"), -1),
-        r"\.parquet$", "",
-    )
-    # presence rows: one (date, out_path=NULL) per day that has ANY
-    # input rows — null-keyed rows included.  Without them a day whose
-    # rows are all null-keyed yields no manifest rows, gets no marker,
-    # and is re-batched forever (day-by-day mode commits an empty
-    # outputs list / 0 count for the same day).  Truly EMPTY days still
-    # produce nothing and stay unmarked — the O9 skip semantics.  The
-    # projection reads no data columns, so the extra scan is parquet
-    # metadata only.
-    presence_df = (
-        df.select(date_expr.alias("date"))
-        .distinct()
-        .withColumn("out_path", F.lit(None).cast("string"))
-    )
+    # keyed by Spark's URI-encoded file name, valued by the listing's
+    # date key: outputs and markers must carry the listing's key, or an
+    # escaped name would mis-name them and reprocess forever
+    date_by_file = {_spark_file_name(spark, p): d for d, p in in_paths.items()}
     # null-key rows dropped (reference parity — pandas groupby dropna)
-    clean = df.filter(F.col(key).isNotNull())
-    tagged = (
-        clean.withColumn(ORDER_COL, F.monotonically_increasing_id())
-        .withColumn("__date", date_expr)
-    )
-
-    def _write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ORDER_COL)
-        k, date = pdf[key].iloc[0], pdf["__date"].iloc[0]
-        path = f"{out_dir}/{k}/{date}.parquet"
-        write_parquet_object(pdf.drop(columns=[ORDER_COL, "__date"]), path)
-        return pd.DataFrame({"date": [date], "out_path": [path]})
-
-    manifest_df = tagged.groupBy(key, "__date").applyInPandas(
-        _write_group, schema="date string, out_path string"
-    ).unionByName(presence_df)
+    manifest_df = split_groups(df.filter(F.col(key).isNotNull()), out_dir,
+                               key, date_by_file)
 
     stamp = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     if manifest == "counts":
         # Scale mode: the manifest itself is data — write it from the
-        # executors (one job: the applyInPandas fan-out feeds the JSON
-        # manifest write directly), then aggregate ONE count row per
-        # day in-plan.  The driver never holds a per-key list.  The
+        # executors (one job: the Arrow fan-out feeds the JSON manifest
+        # write directly), then aggregate ONE count row per day
+        # in-plan.  The driver never holds a per-key list.  The
         # manifest dir is run-scoped so the read-back below is bounded
         # by THIS backlog, not by all history; a day's manifest stays
         # immutable once its marker references it.
@@ -463,35 +459,43 @@ def _process_batched(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
         prev = spark.conf.get(infer_key, "true")
         spark.conf.set(infer_key, "false")
         try:
-            counts = (
+            counts = {
+                r["date"]: r["count"] for r in
                 spark.read.schema("date string, out_path string")
-                .json(run_dir)
-                # count("out_path") skips the NULL presence rows while
-                # their date still yields a row — an all-null-keyed day
-                # commits a 0-count marker instead of re-scheduling
-                # forever
-                .groupBy("date").agg(F.count("out_path").alias("count"))
+                .json(run_dir).groupBy("date").count()
                 .collect()  # one row per day
-            )
+            }
         finally:
             spark.conf.set(infer_key, prev)
-        for row in sorted(counts, key=lambda r: r["date"]):
-            date = row["date"]
+        escape = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+                  .ExternalCatalogUtils.escapePathName)
+        for date in missing_dates:
+            # the partition dir as Spark named it (it escapes '%', ':',
+            # '=' ... in partition values)
+            day_dir = f"{run_dir}/date={escape(date)}"
+            if date not in counts:
+                if not _has_rows(kind, in_paths[date]):
+                    continue  # no marker: retried next run
+                # all rows null-keyed: an empty manifest dir, as the
+                # day-by-day path leaves
+                filesystem, fs_path = resolve_fs(day_dir)
+                filesystem.create_dir(fs_path, recursive=True)
+                counts[date] = 0
+            n = counts[date]
             write_marker(f"{marker_dir.rstrip('/')}/{date}.json", {
                 "kind": kind,
                 "date": date,
-                "input_key": f"{base}/{date}.parquet",
+                "input_key": in_paths[date],
                 "input_fingerprint": (fingerprints or {}).get(date),
-                "outputs_manifest": f"{run_dir}/date={date}",
-                "output_count": row["count"],
+                "outputs_manifest": day_dir,
+                "output_count": n,
                 "generated_at": stamp,
             })
-            log.info("[OK] %s %s: %d outputs (manifest mode)",
-                     kind, date, row["count"])
+            log.info("[OK] %s %s: %d outputs (manifest mode)", kind, date, n)
         return len(counts)
 
     try:
-        rows = manifest_df.collect()  # one row per (key, day) output object
+        rows = manifest_df.collect()
     except Exception as e:
         # a corrupt/unreadable file fails at EXECUTION, not at the lazy
         # read above — fall back day-by-day so good days still process.
@@ -500,24 +504,23 @@ def _process_batched(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
                     kind, str(e)[:200])
         return None
     by_date: dict[str, list[str]] = {}
-    for r in rows:
-        # NULL out_path = presence row: the day had input rows but none
-        # survived the null-key filter — commit an empty outputs list
-        # (day-by-day parity) instead of leaving the day unmarked
-        lst = by_date.setdefault(r.date, [])
-        if r.out_path is not None:
-            lst.append(r.out_path)
+    for r in rows:  # one row per (key, day) output object
+        by_date.setdefault(r.date, []).append(r.out_path)
 
-    for date in sorted(by_date):
-        outputs = sorted(by_date[date])
+    processed = 0
+    for date in missing_dates:
+        if date not in by_date and not _has_rows(kind, in_paths[date]):
+            continue  # no marker: retried next run
+        outputs = sorted(by_date.get(date, []))  # [] = all rows null-keyed
         write_marker(f"{marker_dir.rstrip('/')}/{date}.json", {
             "kind": kind,
             "date": date,
-            "input_key": f"{base}/{date}.parquet",
+            "input_key": in_paths[date],
             "input_fingerprint": (fingerprints or {}).get(date),
             "outputs": outputs,
             "output_count": len(outputs),
             "generated_at": stamp,
         })
         log.info("[OK] %s %s: %d outputs", kind, date, len(outputs))
-    return len(by_date)
+        processed += 1
+    return processed

@@ -3,7 +3,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this suite belongs to, wherever it lies
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from glue_parquet_splitter_spark.session import get_spark  # noqa: E402
 

@@ -11,6 +11,7 @@ path an ``s3://``/``gs://`` deployment would take.
 import json
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from glue_parquet_splitter_spark.pipeline import run_incremental
@@ -51,7 +52,7 @@ def test_resolve_fs_maps_s3a_scheme():
 def test_write_parquet_object_file_uri(tmp_path):
     pdf = pd.DataFrame({"a": [1, 2], "b": ["x", "y"]})
     uri = f"file://{tmp_path}/nested/dir/out.parquet"
-    write_parquet_object(pdf, uri)
+    write_parquet_object(pa.Table.from_pandas(pdf, preserve_index=False), uri)
     local = tmp_path / "nested" / "dir" / "out.parquet"
     assert local.exists()
     assert pd.read_parquet(local).equals(pdf)

@@ -89,3 +89,38 @@ def test_day_by_day_null_day_matches_batched(spark, tmp_path, mode):
     docs = _markers(mk)
     assert set(docs) == {"20250401", "20250402"}
     assert docs["20250402"]["output_count"] == 0
+
+
+@pytest.mark.parametrize("mode", ["outputs", "counts"])
+def test_escaped_day_name_settles_after_one_run(spark, tmp_path, mode):
+    """Spark URI-encodes file names (``2025 01%01`` → ``2025%2001%2501``).
+    Outputs and markers must carry the listing's date key, or the
+    scheduler never sees the day as done and reprocesses it forever."""
+    from glue_parquet_splitter_spark.pipeline.incremental import (
+        extract_dates, list_files)
+
+    in_dir, out, mk = (str(tmp_path / d) for d in ("input", "out", "mk"))
+    os.makedirs(in_dir)
+    pq.write_table(pa.table({
+        "date": ["x"] * 3,
+        "item_id": ["a", "b", "a"],
+        "sales_figures": [1, 2, 3],
+    }, schema=SCHEMA), f"{in_dir}/2025 01%01.parquet")
+    (date,) = extract_dates(list_files(spark, in_dir, ".parquet"), ".parquet")
+    assert date == "2025 01%01"
+
+    first = run_incremental(spark, "t", in_dir, out, mk, manifest=mode)
+    second = run_incremental(spark, "t", in_dir, out, mk, manifest=mode)
+    assert (first["processed_days"], second["processed_days"]) == (1, 0)
+
+    docs = _markers(mk)
+    assert set(docs) == {date} and docs[date]["date"] == date
+    assert docs[date]["output_count"] == 2
+    assert sorted(glob.glob(f"{out}/*/*.parquet")) == [
+        f"{out}/a/{date}.parquet", f"{out}/b/{date}.parquet"]
+    if mode == "outputs":
+        assert docs[date]["outputs"] == [f"{out}/a/{date}.parquet",
+                                         f"{out}/b/{date}.parquet"]
+    else:  # the manifest pointer names the dir Spark wrote
+        assert len(glob.glob(
+            f"{glob.escape(docs[date]['outputs_manifest'])}/*.json")) >= 1

@@ -44,3 +44,60 @@ def test_split_partition_properties(data, spark, tmp_path_factory):
     union = (pd.concat(parts, ignore_index=True) if parts
              else pd.DataFrame(columns=["item_id", "val"]))
     assert len(union) == len(nn)                     # union == input (sans null keys)
+
+
+# the batched catch-up (``run_incremental``): several days in one scan,
+# each file cut into several scan splits, null keys and one hot key
+day_keys = st.lists(st.sampled_from(["hot"] * 6 + ["k1", "k2", "k3", None]),
+                    min_size=60, max_size=160).map(lambda ks: [None, "hot"] + ks)
+
+
+@settings(max_examples=4, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(days=st.lists(day_keys, min_size=2, max_size=3))
+def test_batched_split_keeps_input_order(days, spark, tmp_path_factory):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from glue_parquet_splitter_spark.pipeline import run_incremental
+
+    tmp = tmp_path_factory.mktemp("batched")
+    in_dir = tmp / "in"
+    in_dir.mkdir()
+    inputs = {}
+    for i, ks in enumerate(days):
+        date = f"2025010{i + 1}"
+        # seq numbers the rows in input order
+        pdf = pd.DataFrame({"item_id": pd.Series(ks, dtype=object),
+                            "seq": range(len(ks))})
+        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
+                       in_dir / f"{date}.parquet", row_group_size=8)
+        inputs[date] = pdf
+
+    confs = {"spark.sql.files.maxPartitionBytes": "512",
+             "spark.sql.files.openCostInBytes": "0"}
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        # every file spans several scan splits
+        assert all(os.path.getsize(in_dir / f) > 2 * 512
+                   for f in os.listdir(in_dir))
+        splits = spark.read.parquet(str(in_dir)).rdd.getNumPartitions()
+        assert splits > 2 * len(days)
+        res = run_incremental(spark, "t", str(in_dir), str(tmp / "out"),
+                              str(tmp / "mk"))
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert res["processed_days"] == len(days)
+
+    for date, pdf in inputs.items():
+        nn = pdf[pdf.item_id.notna()]
+        for k, want in nn.groupby("item_id"):
+            got = pd.read_parquet(tmp / "out" / k / f"{date}.parquet")
+            pd.testing.assert_frame_equal(got, want.reset_index(drop=True))
+    written = {(k, f) for k in os.listdir(tmp / "out")
+               for f in os.listdir(tmp / "out" / k)}
+    assert written == {(k, f"{date}.parquet") for date, pdf in inputs.items()
+                       for k in pdf.item_id.dropna()}
