@@ -35,8 +35,7 @@ _COMPACT_CONFS = {
     # split layout's partition values are zero-padded strings
     # (``item_id=0000000005``); default inference would re-type them as
     # long ``5`` and the compacted rewrite would silently corrupt every
-    # partition key.  Same guard as the counts-mode manifest read in
-    # ``incremental.py``.
+    # partition key.
     "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
     # Pack many small files per scan task — the input is BY DEFINITION
     # a many-tiny-files layout, and per-file tasks make the rewrite

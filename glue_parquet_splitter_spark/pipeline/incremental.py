@@ -6,16 +6,25 @@ Reproduces the reference's lifecycle
 1. list ``<in>/*.parquet`` and ``<markers>/*.json``        (O2)
 2. extract YYYYMMDD dates from basenames                   (O3/O4)
 3. work set = input_dates − done_dates, sorted             (O5 anti-join)
-4. per missing day: read → guard → split by key → write    (O7-O16)
-5. commit a JSON marker listing all outputs                (O18)
+4. read the missing days → split by key → write            (O7-O16)
+5. commit one JSON marker per day                          (O18)
+
+Steps 4-5 are one function, :func:`_split_days`: it reads the given
+days in one scan, writes them with one Spark job and builds each day's
+marker in one place for every manifest mode and layout.  The whole
+backlog goes through it at once; when that read or job fails, it runs
+again on each day alone, so a bad file skips only its own day.  A day
+run alone reads its footer first: an unreadable file is skipped before
+any job, so a failure of the job itself is a write error and raises.
 
 Listing uses the Hadoop FileSystem API so the same code handles
 ``file://``, ``hdfs://`` and ``s3a://``.  The scheduling set-difference
 runs driver-side on listings (metadata, thousands of entries — the same
 place Spark's own file index does this work); the *data* path is fully
-distributed.  Error taxonomy preserved: missing file → warn+skip, empty
-file → info+skip, missing key column → hard fail, any write failure →
-day fails before its marker is written (so a crash is safely re-run).
+distributed.  Error taxonomy preserved: missing or corrupt file →
+warn+skip that day, empty file → skip with no marker, all-null-key day
+→ empty marker, day with rows but no key column → hard fail, write
+failure → raised, with no marker for the day (so a re-run redoes it).
 """
 
 from __future__ import annotations
@@ -23,10 +32,13 @@ from __future__ import annotations
 import json
 import logging
 import time
+import uuid
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
-from .splitter import require_columns, split_day
+from .splitter import (parquet_footer, resolve_fs, split_groups,
+                       write_partitioned)
 
 log = logging.getLogger(__name__)
 
@@ -67,7 +79,7 @@ def extract_dates(keys: list[str], suffix: str) -> set[str]:
     return dates
 
 
-def _changed_days(in_status: dict[str, str], marker_keys: list[str],
+def _changed_days(fp_by_date: dict[str, str], marker_keys: list[str],
                   candidate_dates: set[str]) -> set[str]:
     """Marked days whose input fingerprint no longer matches the marker.
 
@@ -75,10 +87,6 @@ def _changed_days(in_status: dict[str, str], marker_keys: list[str],
     as the listing itself).  A marker without ``input_fingerprint``
     (pre-feature history) is treated as current.
     """
-    from .splitter import resolve_fs
-
-    fp_by_date = {k.rsplit("/", 1)[-1][: -len(".parquet")]: v
-                  for k, v in in_status.items()}
     changed: set[str] = set()
     for mk in marker_keys:
         date = mk.rsplit("/", 1)[-1][: -len(".json")]
@@ -114,8 +122,6 @@ def gc_manifest_runs(spark: SparkSession, marker_dir: str) -> int:
     (a concurrent writer's un-marked run could be swept; don't run two
     drivers against one marker_dir).
     """
-    from .splitter import resolve_fs
-
     base = f"{marker_dir.rstrip('/')}/_manifests"
     jvm = spark._jvm
     base_path = jvm.org.apache.hadoop.fs.Path(base)
@@ -183,8 +189,6 @@ def gc_manifest_runs(spark: SparkSession, marker_dir: str) -> int:
 
 def write_marker(marker_path: str, doc: dict) -> None:
     """Commit a JSON marker (driver-side; any pyarrow-supported FS)."""
-    from .splitter import resolve_fs
-
     filesystem, fs_path = resolve_fs(marker_path)
     filesystem.create_dir(fs_path.rsplit("/", 1)[0], recursive=True)
     with filesystem.open_output_stream(fs_path) as f:
@@ -199,6 +203,15 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     """Process every not-yet-marked day; returns the summary dict the
     reference's ``process_kind`` returns (parquet-splitter.py:190-196).
 
+    The missing days are split in one scan and one job, and each gets
+    its marker once that job succeeds.  If the read or the job fails
+    (a missing or corrupt file anywhere in the backlog), the same split
+    runs on each day alone: a bad day is warned about and left unmarked,
+    the others commit.  A day that is readable but cannot be written
+    raises.  ``exact_layout=False`` writes the Hive layout
+    ``<out>/date=<d>/<key>=<k>/part-*.parquet`` and always goes day by
+    day.
+
     ``manifest`` selects how the per-day marker records its outputs:
 
     - ``"outputs"`` (default, reference parity): the marker embeds the
@@ -206,11 +219,12 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
       driver — fine at reference shape (tens of keys/day), the wrong
       thing at millions of keys/day.
     - ``"counts"``: executors write per-day manifest files (JSON lines,
-      ``<marker_dir>/_manifests/date=<d>/``) as part of the split job
-      itself; the driver aggregates only one count row per day in-plan
+      ``<marker_dir>/_manifests/run-<id>/date=<d>/``) as part of the
+      split job itself; the driver collects only one count row per day
       and the marker stores ``outputs_manifest`` (the manifest
-      directory) + ``output_count``.  No driver-side per-key list at
-      any scale.  All other marker fields are identical.
+      directory; null for the Hive layout, which has one output dir per
+      day) + ``output_count``.  No driver-side per-key list at any
+      scale.  All other marker fields are identical.
 
     ``reprocess_changed``: the reference reprocesses a late row only if
     its whole day-file reappears unmarked (SURVEY §2); with this flag a
@@ -222,16 +236,17 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     """
     t0 = time.perf_counter()
     in_status = list_file_status(spark, in_dir, ".parquet")
-    in_keys = sorted(in_status)
     marker_keys = list_files(spark, marker_dir, ".json")
     log.info("[list] inputs=%d markers=%d elapsed=%.2fs",
-             len(in_keys), len(marker_keys), time.perf_counter() - t0)
+             len(in_status), len(marker_keys), time.perf_counter() - t0)
 
-    input_dates = extract_dates(in_keys, ".parquet")
+    input_dates = extract_dates(list(in_status), ".parquet")
     done_dates = extract_dates(marker_keys, ".json")
     missing = input_dates - done_dates
+    fp_by_date = {p.rsplit("/", 1)[-1][: -len(".parquet")]: v
+                  for p, v in in_status.items()}
     if reprocess_changed:
-        changed = _changed_days(in_status, marker_keys,
+        changed = _changed_days(fp_by_date, marker_keys,
                                 input_dates & done_dates)
         if changed:
             log.info("[%s] reopening %d changed day(s): %s", kind,
@@ -241,23 +256,17 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     log.info("[%s] input=%d done=%d missing=%d", kind,
              len(input_dates), len(done_dates), len(missing_dates))
 
-    fp_by_date = {p.rsplit("/", 1)[-1][: -len(".parquet")]: v
-                  for p, v in in_status.items()}
-    processed = 0
-    if missing_dates and exact_layout:
-        processed = _process_batched(spark, kind, in_dir, out_dir, marker_dir,
-                                     missing_dates, key, manifest=manifest,
-                                     fingerprints=fp_by_date)
-        if processed is None:  # batch read failed → day-by-day (skips bad days)
-            processed = _process_day_by_day(spark, kind, in_dir, out_dir,
-                                            marker_dir, missing_dates, key,
-                                            exact_layout, fp_by_date,
-                                            manifest=manifest)
-    else:
-        processed = _process_day_by_day(spark, kind, in_dir, out_dir,
-                                        marker_dir, missing_dates, key,
-                                        exact_layout, fp_by_date,
-                                        manifest=manifest)
+    def split(dates: list[str]) -> int | None:
+        return _split_days(spark, kind, in_dir, out_dir, marker_dir, dates,
+                           key, exact_layout, manifest, fp_by_date)
+
+    # the whole backlog in one scan; if that fails, the same path runs on
+    # each day alone, so a bad file skips only its own day.  The Hive
+    # layout writes one directory per day, so it always goes day by day.
+    processed = (split(missing_dates)
+                 if exact_layout and len(missing_dates) > 1 else None)
+    if processed is None:
+        processed = sum(split([d]) for d in missing_dates)
 
     if manifest == "counts":
         # reclaim run dirs orphaned by reopened days / historic runs
@@ -272,97 +281,6 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     }
 
 
-def _process_day_by_day(spark: SparkSession, kind: str, in_dir: str,
-                        out_dir: str, marker_dir: str,
-                        missing_dates: list[str], key: str,
-                        exact_layout: bool,
-                        fingerprints: dict[str, str] | None = None,
-                        manifest: str = "outputs") -> int:
-    """One day per Spark job — the resilient path (a bad file skips
-    only its own day, matching the reference's error taxonomy).
-
-    ``manifest="counts"`` keeps the scale guarantee here too: each
-    day's per-key manifest is written from the executors and only ONE
-    count crosses to the driver — a batch-read failure no longer
-    silently degrades a counts-mode run to driver-side output lists
-    (and marker schemas stay uniform across days).
-    """
-    fingerprints = fingerprints or {}
-    counts_mode = manifest == "counts" and exact_layout
-    if manifest == "counts" and not exact_layout:
-        # hive-layout days emit ONE output dir per day — nothing to
-        # keep off the driver; the marker still uses the counts schema
-        log.info("[%s] manifest='counts' with exact_layout=False: "
-                 "single-dir outputs, no per-key manifest needed", kind)
-    run_dir = None
-    if counts_mode:
-        import uuid as _uuid
-
-        run_dir = (f"{marker_dir.rstrip('/')}/_manifests/"
-                   f"run-{_uuid.uuid4().hex[:12]}")
-    processed = 0
-    for date in missing_dates:
-        in_path = f"{in_dir.rstrip('/')}/{date}.parquet"
-        try:
-            df = spark.read.parquet(in_path)
-            empty = df.isEmpty()  # corrupt files surface here, not at read()
-        except Exception as e:  # missing/corrupt input → skip+warn
-            log.warning("[%s] unreadable: %s (%s)", kind, in_path, e)
-            continue
-        if empty:
-            log.info("[%s] empty: %s", kind, in_path)
-            continue
-        require_columns(df, [key])  # write failures below still propagate
-
-        stamp = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        marker_path = f"{marker_dir.rstrip('/')}/{date}.json"
-        if counts_mode:
-            from pyspark.sql import functions as F
-
-            from .splitter import split_day_manifest
-
-            day_dir = f"{run_dir}/date={date}"
-            clean = df.filter(F.col(key).isNotNull())
-            (split_day_manifest(clean, out_dir, date, key=key)
-             .write.mode("overwrite").json(day_dir))
-            # explicit schema: a day whose rows were all null-keyed
-            # leaves an EMPTY manifest dir, and schema inference would
-            # throw 'Unable to infer schema' and abort the whole run —
-            # with the schema pinned it counts as 0 and the marker
-            # still commits (parity with outputs-mode's empty list)
-            n = spark.read.schema("out_path string, rows long") \
-                .json(day_dir).count()  # one number to driver
-            write_marker(marker_path, {
-                "kind": kind,
-                "date": date,
-                "input_key": in_path,
-                "input_fingerprint": fingerprints.get(date),
-                "outputs_manifest": day_dir,
-                "output_count": n,
-                "generated_at": stamp,
-            })
-            log.info("[OK] %s %s: %d outputs (manifest mode)", kind, date, n)
-        else:
-            outputs = split_day(df, out_dir, date, key=key,
-                                exact_layout=exact_layout)
-            marker = {
-                "kind": kind,
-                "date": date,
-                "input_key": in_path,
-                "input_fingerprint": fingerprints.get(date),
-                "outputs": outputs,
-                "output_count": len(outputs),
-                "generated_at": stamp,
-            }
-            if manifest == "counts":  # non-exact layout: uniform schema
-                marker["outputs_manifest"] = None
-                del marker["outputs"]
-            write_marker(marker_path, marker)
-            log.info("[OK] %s %s: %d outputs", kind, date, len(outputs))
-        processed += 1
-    return processed
-
-
 def _spark_file_name(spark: SparkSession, path: str) -> str:
     """The basename Spark reports for ``path`` in ``_metadata.file_name``:
     the URI-encoded form (``2025 01%01.parquet`` → ``2025%2001%2501.parquet``)."""
@@ -370,157 +288,127 @@ def _spark_file_name(spark: SparkSession, path: str) -> str:
     return uri.getRawPath().rsplit("/", 1)[-1]
 
 
-def _has_rows(kind: str, path: str) -> bool:
-    """Footer check for a day that wrote no outputs: True when its rows
-    were all null-keyed (commit an empty marker), False when it is empty
-    (O9 skip) or has become unreadable (warn+skip; retried next run)."""
-    from .splitter import parquet_num_rows
-
+def _has_rows(kind: str, path: str, key: str) -> bool:
+    """Footer check of one day's file: True when it has rows, False
+    when it is empty (O9 skip) or unreadable (warn+skip; retried next
+    run).  Raises ``ValueError`` when the day has rows but no ``key``
+    column (a scan of several files would read it with null keys)."""
     try:
-        return parquet_num_rows(path) > 0
+        num_rows, columns = parquet_footer(path)
     except (OSError, ValueError) as e:  # missing, or not parquet
         log.warning("[%s] unreadable: %s (%s)", kind, path, e)
         return False
+    if num_rows and key not in columns:
+        raise ValueError(f"required column(s) missing: {[key]} in {path}")
+    return num_rows > 0
 
 
-def _process_batched(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
-                     marker_dir: str, missing_dates: list[str],
-                     key: str, manifest: str = "outputs",
-                     fingerprints: dict[str, str] | None = None) -> int | None:
-    """Process ALL missing days in one Spark job.
+def _has_partitions(spark: SparkSession, directory: str, key: str) -> bool:
+    """Whether a ``partitionBy(key)`` write left any ``<key>=<k>`` dir
+    under ``directory`` (one Hadoop FS listing, no data read)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(directory)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return any(st.isDirectory() and st.getPath().getName().startswith(
+        f"{key}=") for st in fs.listStatus(hpath))
 
-    The reference loops day-by-day (parquet-splitter.py:144); on Spark
-    that pays per-job overhead per day. Reading every backlog file in
-    one scan and fanning out with a single ``groupBy(key, file)``
-    Arrow writer amortizes scheduling to one job regardless of backlog
-    depth — the catch-up semantics and the per-day marker documents are
-    unchanged.  The day of a row is its file's listing key, looked up
-    per group from ``_metadata.file_name``.  Markers commit after the
-    whole batch succeeds: a crash mid-batch leaves no markers, so the
-    re-run redoes those days (output overwrite keeps that safe — same
-    recovery contract as the reference, :159-160 in SURVEY.md).
 
-    A day whose rows are all null-keyed writes no outputs, yet must
-    commit an empty marker (day-by-day parity) or it is re-batched
-    forever; a truly EMPTY day must stay unmarked (the O9 skip).  The
-    scan cannot tell the two apart, so after the job each day without
-    outputs gets one footer read of its row count.
+def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
+                marker_dir: str, dates: list[str], key: str,
+                exact_layout: bool, manifest: str,
+                fingerprints: dict[str, str]) -> int | None:
+    """Split ``dates`` in one scan and commit one marker per day; returns
+    the number of markers written.
+
+    The exact layout fans every day out in one ``split_groups`` job, the
+    day of a row looked up per input file from ``_metadata.file_name``;
+    the Hive layout (one day only) writes ``<out>/date=<d>/<key>=<k>/``.
+    Markers commit after the job succeeds, so a crash leaves the days
+    unmarked and the re-run redoes them.
+
+    Several days: a failed read or job returns None (no marker written;
+    partial outputs are overwrite-safe) and the caller retries day by
+    day.  The scan cannot tell an empty day (O9 skip, no marker) from one
+    whose rows were all null-keyed (empty marker), so each day without
+    outputs gets one footer read afterwards.  One day: the footer is
+    read first, so an unreadable or empty file is skipped before any
+    job runs, and a failure of the job itself (a write error) raises.
     """
-    from pyspark.sql import functions as F
-
-    from .splitter import resolve_fs, split_groups
-
-    base = in_dir.rstrip("/")
-    # missing_dates derive from the listing, so the files exist; no
-    # per-file probe needed (the reference's NoSuchKey guard covers a
-    # list/get race — here the batch read's own error handling does).
-    in_paths = {date: f"{base}/{date}.parquet" for date in missing_dates}
+    in_paths = {d: f"{in_dir.rstrip('/')}/{d}.parquet" for d in dates}
+    single = len(dates) == 1
+    if single and not _has_rows(kind, in_paths[dates[0]], key):
+        return 0  # unreadable (warned) or empty; raises if keyless
+    counts: dict[str, int] = {}
+    outputs: dict[str, list[str]] = {}
+    run_dir = None
     try:
         df = spark.read.parquet(*in_paths.values())
+        if key not in df.columns:
+            # the scan took its schema from one file: judge each day alone
+            return None
+        # null-key rows dropped (reference parity — pandas groupby dropna)
+        df = df.filter(F.col(key).isNotNull())
+        if not exact_layout:
+            (date,) = dates
+            day_dir = f"{out_dir}/date={date}"
+            write_partitioned(df, day_dir, key)
+            # an all-null-key day writes no <key>=<k> dir: no output
+            outputs[date] = [day_dir] if _has_partitions(
+                spark, day_dir, key) else []
+        else:
+            # keyed by Spark's URI-encoded file name, valued by the
+            # listing's date key: outputs and markers must carry the
+            # listing's key, or an escaped name would reprocess forever
+            groups = split_groups(df, out_dir, key, {
+                _spark_file_name(spark, p): d for d, p in in_paths.items()})
+            if manifest == "counts":
+                # the manifest is data: executors write it in the split
+                # job itself and the driver collects one count per day.
+                # Each call gets its own run dir, as the overwrite would
+                # delete the manifests of days already committed.
+                run_dir = (f"{marker_dir.rstrip('/')}/_manifests/"
+                           f"run-{uuid.uuid4().hex[:12]}")
+                (groups.repartition("date")
+                 .write.mode("overwrite").partitionBy("date").json(run_dir))
+                # the pinned schema keeps partition values verbatim and
+                # reads a run with no data files (all keys null) as empty
+                counts = {r["date"]: r["count"] for r in
+                          spark.read.schema("date string, out_path string")
+                          .json(run_dir).groupBy("date").count().collect()}
+                escape = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+                          .ExternalCatalogUtils.escapePathName)
+            else:
+                for r in groups.collect():  # one row per output object
+                    outputs.setdefault(r.date, []).append(r.out_path)
     except Exception as e:
-        log.warning("[%s] batch read failed (%s); falling back day-by-day", kind, e)
-        return None  # caller runs the per-day loop, which skips bad days
-    require_columns(df, [key])
-    # keyed by Spark's URI-encoded file name, valued by the listing's
-    # date key: outputs and markers must carry the listing's key, or an
-    # escaped name would mis-name them and reprocess forever
-    date_by_file = {_spark_file_name(spark, p): d for d, p in in_paths.items()}
-    # null-key rows dropped (reference parity — pandas groupby dropna)
-    manifest_df = split_groups(df.filter(F.col(key).isNotNull()), out_dir,
-                               key, date_by_file)
+        if single:
+            raise  # the file is readable, so this is a write failure
+        # a corrupt file fails at execution, not at the lazy read above
+        log.warning("[%s] split failed for %s (%s)", kind, dates,
+                    str(e)[:200])
+        return None
+    counts = counts or {d: len(v) for d, v in outputs.items()}
 
     stamp = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-    if manifest == "counts":
-        # Scale mode: the manifest itself is data — write it from the
-        # executors (one job: the Arrow fan-out feeds the JSON manifest
-        # write directly), then aggregate ONE count row per day
-        # in-plan.  The driver never holds a per-key list.  The
-        # manifest dir is run-scoped so the read-back below is bounded
-        # by THIS backlog, not by all history; a day's manifest stays
-        # immutable once its marker references it.
-        import uuid as _uuid
-
-        run_dir = (f"{marker_dir.rstrip('/')}/_manifests/"
-                   f"run-{_uuid.uuid4().hex[:12]}")
-        try:
-            (manifest_df.repartition("date")
-             .write.mode("overwrite").partitionBy("date").json(run_dir))
-        except Exception as e:
-            log.warning("[%s] batch job failed (%s); falling back day-by-day",
-                        kind, str(e)[:200])
-            return None
-        # partition-column inference would re-type date=20250101 as a
-        # long (and 2025-01-01 as a DATE), corrupting the marker key —
-        # read the partition column verbatim.  The schema is pinned for
-        # the same reason as the day-by-day read: a backlog whose rows
-        # were ALL null-keyed leaves a manifest dir with no data files,
-        # and inference would abort the run.
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev = spark.conf.get(infer_key, "true")
-        spark.conf.set(infer_key, "false")
-        try:
-            counts = {
-                r["date"]: r["count"] for r in
-                spark.read.schema("date string, out_path string")
-                .json(run_dir).groupBy("date").count()
-                .collect()  # one row per day
-            }
-        finally:
-            spark.conf.set(infer_key, prev)
-        escape = (spark._jvm.org.apache.spark.sql.catalyst.catalog
-                  .ExternalCatalogUtils.escapePathName)
-        for date in missing_dates:
-            # the partition dir as Spark named it (it escapes '%', ':',
-            # '=' ... in partition values)
-            day_dir = f"{run_dir}/date={escape(date)}"
-            if date not in counts:
-                if not _has_rows(kind, in_paths[date]):
-                    continue  # no marker: retried next run
-                # all rows null-keyed: an empty manifest dir, as the
-                # day-by-day path leaves
-                filesystem, fs_path = resolve_fs(day_dir)
-                filesystem.create_dir(fs_path, recursive=True)
-                counts[date] = 0
-            n = counts[date]
-            write_marker(f"{marker_dir.rstrip('/')}/{date}.json", {
-                "kind": kind,
-                "date": date,
-                "input_key": in_paths[date],
-                "input_fingerprint": (fingerprints or {}).get(date),
-                "outputs_manifest": day_dir,
-                "output_count": n,
-                "generated_at": stamp,
-            })
-            log.info("[OK] %s %s: %d outputs (manifest mode)", kind, date, n)
-        return len(counts)
-
-    try:
-        rows = manifest_df.collect()
-    except Exception as e:
-        # a corrupt/unreadable file fails at EXECUTION, not at the lazy
-        # read above — fall back day-by-day so good days still process.
-        # No markers were written; partial outputs are overwrite-safe.
-        log.warning("[%s] batch job failed (%s); falling back day-by-day",
-                    kind, str(e)[:200])
-        return None
-    by_date: dict[str, list[str]] = {}
-    for r in rows:  # one row per (key, day) output object
-        by_date.setdefault(r.date, []).append(r.out_path)
-
     processed = 0
-    for date in missing_dates:
-        if date not in by_date and not _has_rows(kind, in_paths[date]):
+    for date in dates:
+        n = counts.get(date, 0)
+        if not (n or single or _has_rows(kind, in_paths[date], key)):
             continue  # no marker: retried next run
-        outputs = sorted(by_date.get(date, []))  # [] = all rows null-keyed
-        write_marker(f"{marker_dir.rstrip('/')}/{date}.json", {
-            "kind": kind,
-            "date": date,
-            "input_key": in_paths[date],
-            "input_fingerprint": (fingerprints or {}).get(date),
-            "outputs": outputs,
-            "output_count": len(outputs),
-            "generated_at": stamp,
-        })
-        log.info("[OK] %s %s: %d outputs", kind, date, len(outputs))
+        marker = {"kind": kind, "date": date, "input_key": in_paths[date],
+                  "input_fingerprint": fingerprints.get(date)}
+        if manifest == "counts":
+            # the Hive layout has one output dir per day and no manifest;
+            # the partition dir is named as Spark escapes it ('%', ':' ...)
+            manifest_dir = run_dir and f"{run_dir}/date={escape(date)}"
+            if manifest_dir and not n:  # all keys null: empty manifest
+                filesystem, fs_path = resolve_fs(manifest_dir)
+                filesystem.create_dir(fs_path, recursive=True)
+            marker["outputs_manifest"] = manifest_dir
+        else:
+            marker["outputs"] = sorted(outputs.get(date, []))
+        marker["output_count"] = n
+        marker["generated_at"] = stamp
+        write_marker(f"{marker_dir.rstrip('/')}/{date}.json", marker)
+        log.info("[OK] %s %s: %d outputs", kind, date, n)
         processed += 1
     return processed

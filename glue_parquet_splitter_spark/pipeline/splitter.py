@@ -20,9 +20,9 @@ Two writers:
   ``pyarrow.Table``; its order is restored from a pre-shuffle row id
   with ``take(sort_indices(...))`` and it is written with
   ``pq.write_table`` — no pandas hop.  :func:`split_day` (one day) and
-  the incremental driver's batched catch-up (every missing day in one
-  scan, the day looked up per input *file* from ``_metadata.file_name``)
-  both use it.  Group files are written through pyarrow.fs
+  the incremental driver (its missing days in one scan, the day looked
+  up per input *file* from ``_metadata.file_name``) both use it.
+  Group files are written through pyarrow.fs
   (:func:`write_parquet_object`), so output paths may be plain local
   paths or ``file://``/``s3://``/``s3a://``/``gs://``/``hdfs://`` URIs —
   no extra executor dependencies.
@@ -90,14 +90,15 @@ def write_parquet_object(table: pa.Table, path: str) -> None:
                    compression="snappy")
 
 
-def parquet_num_rows(path: str) -> int:
-    """Row count from the footer of the parquet object at ``path`` —
-    metadata only, no data pages read."""
+def parquet_footer(path: str) -> tuple[int, list[str]]:
+    """(row count, top-level column names) from the footer of the
+    parquet object at ``path`` — metadata only, no data pages read."""
     import pyarrow.parquet as pq
 
     filesystem, fs_path = resolve_fs(path)
     with filesystem.open_input_file(fs_path) as f:
-        return pq.ParquetFile(f).metadata.num_rows
+        pf = pq.ParquetFile(f)
+        return pf.metadata.num_rows, pf.schema_arrow.names
 
 
 def require_columns(df: DataFrame, cols: Iterable[str]) -> None:
@@ -150,22 +151,8 @@ def split_day(df: DataFrame, out_dir: str, date: str, key: str = "item_id",
         write_partitioned(df, day_dir, key)
         return [day_dir]
 
-    manifest = (
-        split_day_manifest(df, out_dir, date, key=key)
-        .collect()  # manifest only: one row per key, not per data row
-    )
+    manifest = split_groups(df, out_dir, key, date).collect()  # one row per key
     return sorted(r.out_path for r in manifest)
-
-
-def split_day_manifest(df: DataFrame, out_dir: str, date: str,
-                       key: str = "item_id") -> DataFrame:
-    """One day's exact-layout fan-out as a LAZY manifest DataFrame
-    (``out_path``, ``rows`` — one row per key).  The per-key parquet
-    writes happen when the returned frame is consumed, so a caller can
-    aggregate counts or sink the manifest from executors without the
-    driver ever holding the per-key list (the ``manifest="counts"``
-    scale path of ``run_incremental``)."""
-    return split_groups(df, out_dir, key, date).select("out_path", "rows")
 
 
 def split_groups(df: DataFrame, out_dir: str, key: str,
@@ -205,11 +192,3 @@ def split_groups(df: DataFrame, out_dir: str, key: str,
     return ordered.groupBy(key, *helpers[1:]).applyInArrow(
         _write_group, schema="date string, out_path string, rows long")
 
-
-def split_counts(df: DataFrame, key: str = "item_id") -> DataFrame:
-    """Per-key row counts + distinct-key cardinality helper.
-
-    Mirrors the reference's success log (``nunique`` at
-    parquet-splitter.py:173) as a DataFrame instead of a driver loop.
-    """
-    return df.groupBy(key).agg(F.count("*").alias("rows"))

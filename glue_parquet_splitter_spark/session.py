@@ -154,6 +154,33 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_mem() -> str:
+    """Half the memory this process may use, capped at 64g: the lower of
+    the host's physical memory and the cgroup limit (v2 ``memory.max``
+    or v1 ``memory.limit_in_bytes``), so a container is sized by its own
+    limit, not by its host's RAM.
+
+    In local mode the driver heap is the whole cluster, but a ``-Xmx``
+    above the usable memory lets G1 grow the heap until the OOM killer
+    takes the JVM (a 64g heap on a 16 GB host died mid-suite).
+    """
+    limits = []
+    try:
+        limits.append(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    except (ValueError, OSError, AttributeError):  # no sysconf here
+        pass
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limits.append(int(f.read()))
+        except (OSError, ValueError):  # absent, or "max" (no limit)
+            pass
+    if not limits:
+        return "64g"
+    return f"{max(1024, min(64 * 1024, (min(limits) >> 20) // 2))}m"
+
+
 def get_spark(app_name: str = "glue_parquet_splitter_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -174,7 +201,9 @@ def get_spark(app_name: str = "glue_parquet_splitter_spark",
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         # local mode: the driver JVM is the whole cluster — give it room
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_mem())
     )
     for k, v in {**_RUNTIME_CONFS, **_split_size_confs(master),
                  **_join_confs(master)}.items():

@@ -115,7 +115,7 @@ def main():
 | O6 counts | summary dict; `agg_stats` etc. | oracles |
 | O7 parquet scan | `catalog.load_table` / `spark.read.parquet` | everywhere |
 | O8 missing-source guard | batch-read fallback + warning | unreadable-input path |
-| O9 empty-relation guard | `split_day` isEmpty skip | `test_empty_and_missing_column` |
+| O9 empty-relation guard | `split_day` isEmpty skip; `run_incremental` footer row count | `test_empty_and_missing_column` |
 | O10 schema assertion | `splitter.require_columns` | same test |
 | O11 group-by partition | `split_day` (exact layout) / `write_partitioned` (Hive) | 9/9 golden replay, property tests |
 | O12 filter-by-key | partition outputs ≡ key filter | golden + property tests |

@@ -3,10 +3,13 @@ must agree with the operator it audits — properties no single-query
 oracle can check.
 """
 
+import os
+
 from pyspark.sql import functions as F
 
 from glue_parquet_splitter_spark.queries import load_all_modules
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REG = load_all_modules()
 
 
@@ -74,7 +77,7 @@ def test_pk_uniqueness_audit_plan_and_planted_counts(spark, sf_dir,
     n_excess_rows == appended rows."""
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     import pyarrow.parquet as pq
     from fuzz_oracle import _DUPKEY_SPECS, gen_fixtures
 

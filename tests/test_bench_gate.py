@@ -447,9 +447,9 @@ def test_anchor_armed_against_committed_baseline():
     is ARMED for the next canonical run, not just unit-tested."""
     import json
 
-    with open("/root/repo/BENCH_METRICS.json") as f:
+    with open(os.path.join(REPO, "BENCH_METRICS.json")) as f:
         mdoc = json.load(f)
-    prev = bench.load_prev_anchor("/root/repo", mdoc["sf"])
+    prev = bench.load_prev_anchor(REPO, mdoc["sf"])
     assert prev, "wall_anchor missing from committed BENCH_METRICS.json"
     cal = {k: float(v) for k, v in mdoc["cal_by_query"].items()}
     timings = {k: float(v) for k, v in mdoc["queries"].items()}

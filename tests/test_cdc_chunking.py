@@ -81,7 +81,8 @@ def test_arrow_chunker_edge_contracts(spark):
         _cdc_chunks(bad).collect()
 
 
-def test_streaming_runner_arrow_chunker_matches_expression(spark, sf_dir):
+def test_streaming_runner_arrow_chunker_matches_expression(spark, sf_dir,
+                                                           tmp_path):
     """The streaming twin now runs the NumPy chunker via stateless
     mapInPandas (r16); the expression form stays the dependency-free
     fallback.  Both runner paths must produce identical chunk rows for
@@ -93,8 +94,19 @@ def test_streaming_runner_arrow_chunker_matches_expression(spark, sf_dir):
     from glue_parquet_splitter_spark.streaming.windows import (
         run_cdc_chunk_index_stream)
 
-    winners = unique_documents(load_table(spark, sf_dir, "documents"))
-    path = f"{sf_dir}/documents.parquet"
+    # the landing table plus one doc with NULL n_chars: it has no span
+    # to chunk, so both forms must drop it
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    null_id = docs.agg(F.max("doc_id")).first()[0] + 1
+    null_row = docs.limit(1).select(
+        *[F.lit(null_id).cast(f.dataType).alias(f.name) if f.name == "doc_id"
+          else F.lit(None).cast(f.dataType).alias(f.name)
+          if f.name == "n_chars" else F.col(f.name)
+          for f in docs.schema.fields])
+    path = str(tmp_path / "landing")
+    docs.unionByName(null_row).write.parquet(path)
+    winners = unique_documents(load_table(spark, sf_dir, "documents")
+                               .unionByName(null_row))
     via_expr = run_cdc_chunk_index_stream(
         spark, path, _cdc_chunk_list_expr(), winners=winners)
     via_arrow = run_cdc_chunk_index_stream(
@@ -103,5 +115,6 @@ def test_streaming_runner_arrow_chunker_matches_expression(spark, sf_dir):
     # output is nullable) — names and types must match exactly
     assert [(f.name, f.dataType) for f in via_expr.schema.fields] == \
         [(f.name, f.dataType) for f in via_arrow.schema.fields]
-    assert sorted(map(tuple, via_expr.collect())) == \
-        sorted(map(tuple, via_arrow.collect()))
+    got = sorted(map(tuple, via_arrow.collect()))
+    assert sorted(map(tuple, via_expr.collect())) == got
+    assert got and null_id not in {r[0] for r in got}

@@ -9,12 +9,13 @@
   exist in the catalog at all).
 """
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from glue_parquet_splitter_spark.catalog import load_table  # noqa: E402
 from glue_parquet_splitter_spark.queries import load_all_modules  # noqa: E402

@@ -11,6 +11,7 @@ from glue_parquet_splitter_spark.catalog import load_table
 from glue_parquet_splitter_spark.pipeline.compact import compact_dataset
 
 SAMPLE = "/root/reference/sample-data/data"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_json_csv_roundtrip(spark, sf_dir, tmp_path):
@@ -85,7 +86,7 @@ def test_cli_entry(tmp_path):
          "--IN_DIR", f"{SAMPLE}/input",
          "--OUT_DIR", str(tmp_path / "out"),
          "--MARKER_DIR", str(tmp_path / "markers")],
-        cwd="/root/repo", capture_output=True, text=True, timeout=300,
+        cwd=REPO, capture_output=True, text=True, timeout=300,
         env={**os.environ, "SPARK_GRAFT_CPUS": "8", "SPARK_GRAFT_DRIVER_MEM": "4g"},
     )
     assert out.returncode == 0, out.stderr[-2000:]

@@ -3,13 +3,15 @@ schema-compatible with the driver fixtures — a drifted column type
 would make every fuzz failure noise — and its hostile content must
 actually be hostile (nulls, unicode, ties, dangling FKs present)."""
 
+import os
 import sys
 
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, "/root/repo/scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 from fuzz_oracle import classify_exception, gen_fixtures  # noqa: E402
 

@@ -124,3 +124,103 @@ def test_escaped_day_name_settles_after_one_run(spark, tmp_path, mode):
     else:  # the manifest pointer names the dir Spark wrote
         assert len(glob.glob(
             f"{glob.escape(docs[date]['outputs_manifest'])}/*.json")) >= 1
+
+
+@pytest.mark.parametrize("mode", ["outputs", "counts"])
+def test_day_without_key_column_fails_in_backlog(spark, tmp_path, mode):
+    """A day with rows but no key column is a hard failure, as when it is
+    split alone — also when a good day ahead of it gives the backlog
+    scan its schema, so the scan reads the bad day's keys as null."""
+    in_dir, out, mk = (str(tmp_path / d) for d in ("input", "out", "mk"))
+    os.makedirs(in_dir)
+    pq.write_table(pa.table({
+        "date": ["20250501"] * 2,
+        "item_id": ["a", "b"],
+        "sales_figures": [1, 2],
+    }, schema=SCHEMA), f"{in_dir}/20250501.parquet")
+    pq.write_table(pa.table({
+        "date": ["20250502"] * 2,
+        "sales_figures": [3, 4],
+    }), f"{in_dir}/20250502.parquet")
+
+    with pytest.raises(ValueError, match="item_id"):
+        run_incremental(spark, "t", in_dir, out, mk, manifest=mode)
+    assert "20250502" not in _markers(mk)
+
+
+def test_empty_day_without_key_column_is_skipped(spark, tmp_path):
+    """An empty day is the O9 skip even when its schema lacks the key
+    column, and it does not stop the good day behind it."""
+    in_dir, out, mk = (str(tmp_path / d) for d in ("input", "out", "mk"))
+    os.makedirs(in_dir)
+    pq.write_table(pa.schema([("date", pa.string())]).empty_table(),
+                   f"{in_dir}/20250601.parquet")
+    pq.write_table(pa.table({
+        "date": ["20250602"] * 2,
+        "item_id": ["a", "b"],
+        "sales_figures": [1, 2],
+    }, schema=SCHEMA), f"{in_dir}/20250602.parquet")
+
+    summary = run_incremental(spark, "t", in_dir, out, mk)
+    assert summary["processed_days"] == 1
+    assert set(_markers(mk)) == {"20250602"}
+
+
+@pytest.mark.parametrize("mode", ["outputs", "counts"])
+def test_hive_layout_run(spark, tmp_path, mode):
+    """``exact_layout=False``: each day with non-null keys lands under
+    ``<out>/date=<d>/item_id=<k>/``; the all-null day commits an empty
+    marker, the empty day none, and a second run has nothing to do."""
+    tmp = str(tmp_path)
+    in_dir = f"{tmp}/input"
+    _make_input(spark, in_dir)
+    out, mk = f"{tmp}/out_{mode}", f"{tmp}/mk_{mode}"
+    first = run_incremental(spark, "t", in_dir, out, mk,
+                            exact_layout=False, manifest=mode)
+    assert first["processed_days"] == 2
+
+    got = []
+    for f in glob.glob(f"{out}/date=*/item_id=*/part-*.parquet"):
+        day = f.split("/date=", 1)[1].split("/", 1)[0]
+        k = f.split("/item_id=", 1)[1].split("/", 1)[0]
+        got += [(day, k, r["date"], r["sales_figures"])
+                for r in pq.read_table(f).to_pylist()]
+    want = []
+    for f in sorted(glob.glob(f"{in_dir}/*.parquet")):
+        day = os.path.basename(f)[: -len(".parquet")]
+        want += [(day, r["item_id"], r["date"], r["sales_figures"])
+                 for r in pq.read_table(f).to_pylist()
+                 if r["item_id"] is not None]
+    assert sorted(got) == sorted(want)
+
+    docs = _markers(mk)
+    assert set(docs) == {"20250401", "20250402"}
+    assert [docs[d]["output_count"] for d in sorted(docs)] == [1, 0]
+    if mode == "outputs":
+        assert docs["20250401"]["outputs"] == [f"{out}/date=20250401"]
+        assert docs["20250402"]["outputs"] == []
+    else:
+        for doc in docs.values():
+            assert doc["outputs_manifest"] is None and "outputs" not in doc
+
+    second = run_incremental(spark, "t", in_dir, out, mk,
+                             exact_layout=False, manifest=mode)
+    assert second["processed_days"] == 0
+
+
+@pytest.mark.parametrize("exact_layout", [True, False])
+@pytest.mark.parametrize("mode", ["outputs", "counts"])
+def test_write_failure_raises(spark, tmp_path, mode, exact_layout):
+    """A readable day that cannot be written stops the run and gets no
+    marker; it is not skipped like an unreadable input file."""
+    tmp = str(tmp_path)
+    in_dir = f"{tmp}/input"
+    _make_input(spark, in_dir)
+    out, mk = f"{tmp}/out", f"{tmp}/mk"
+    with open(out, "w") as f:
+        f.write("a file where the output directory should be")
+
+    with pytest.raises(Exception):
+        run_incremental(spark, "t", in_dir, out, mk,
+                        exact_layout=exact_layout, manifest=mode)
+    assert _markers(mk) == {}

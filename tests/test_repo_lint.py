@@ -9,16 +9,18 @@ proof: a global .agg() scalar, a .limit(k), a region|nation fixture
 dim, or a `# bounded: <cardinality argument>` comment.
 """
 
+import os
 import sys
 import textwrap
 
-sys.path.insert(0, "/root/repo/scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 from check_repo import scan_broadcast_sites  # noqa: E402
 
 
 def test_repo_has_no_unjustified_broadcasts():
-    hits = scan_broadcast_sites("/root/repo/glue_parquet_splitter_spark")
+    hits = scan_broadcast_sites(os.path.join(REPO, "glue_parquet_splitter_spark"))
     assert hits == [], "unjustified F.broadcast sites:\n" + "\n".join(hits)
 
 
@@ -95,7 +97,7 @@ from check_repo import scan_window_sites  # noqa: E402
 
 
 def test_repo_has_no_unjustified_global_windows():
-    hits = scan_window_sites("/root/repo/glue_parquet_splitter_spark")
+    hits = scan_window_sites(os.path.join(REPO, "glue_parquet_splitter_spark"))
     assert hits == [], "unjustified global Window.orderBy sites:\n" + \
         "\n".join(hits)
 
@@ -174,7 +176,7 @@ from check_repo import scan_lambda_sites  # noqa: E402
 
 
 def test_repo_has_no_lambda_cse_hits():
-    hits = scan_lambda_sites("/root/repo/glue_parquet_splitter_spark")
+    hits = scan_lambda_sites(os.path.join(REPO, "glue_parquet_splitter_spark"))
     assert hits == [], "lambda-CSE hits:\n" + "\n".join(hits)
 
 
@@ -220,7 +222,7 @@ from check_repo import scan_pick_window_sites  # noqa: E402
 
 
 def test_repo_has_no_unjustified_pick_windows():
-    hits = scan_pick_window_sites("/root/repo/glue_parquet_splitter_spark")
+    hits = scan_pick_window_sites(os.path.join(REPO, "glue_parquet_splitter_spark"))
     assert hits == [], "pick windows with no totality proof:\n" + \
         "\n".join(hits)
 

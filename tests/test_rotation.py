@@ -3,8 +3,11 @@ so ordering must put not-yet-verified queries first (oracled before
 rows-only) and already-green ones last."""
 
 import json
+import os
 
 from glue_parquet_splitter_spark.queries import load_all_modules, ordered_registry
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_rotation_prioritizes_unverified(tmp_path):
@@ -83,7 +86,7 @@ def test_real_ledger_fronts_never_graded_then_stalest():
     def rnd(p):
         return int(re.search(r"CORRECTNESS_r(\d+)\.json$", p).group(1))
 
-    for p in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"), key=rnd):
+    for p in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")), key=rnd):
         for n, row in json.load(open(p)).items():
             if isinstance(row, dict) and row.get("hash_match") is True:
                 green[n] = rnd(p)
@@ -98,7 +101,7 @@ def test_real_ledger_fronts_never_graded_then_stalest():
         if new_name not in green and old_name in green:
             green[new_name] = green[old_name]
 
-    names = list(ordered_registry("/root/repo"))
+    names = list(ordered_registry(REPO))
     max_round = max(green.values(), default=0)
     front = {n for n, r in REGRADE_FRONT.items()
              if n in green and green[n] < r and r <= max_round + 1}

@@ -82,8 +82,9 @@ def test_rebased_ewma_5m_rows_50_users(spark):
 
 
 def test_manifest_counts_1m_keys_stays_in_plan(spark, tmp_path):
-    """split_day_manifest at 1M keys: the per-key write manifest is
-    consumed as ONE aggregate row — the driver never holds the list.
+    """The counts-mode split manifest at 1M keys: the per-key write
+    manifest is consumed as ONE aggregate row — the driver never holds
+    the list.
     (Uses a count-only consumption; the actual file fan-out at 1M keys
     is an object-store concern, so the write side is a noop sink here —
     the 1e6-row manifest JSON round-trip is covered in
@@ -93,7 +94,7 @@ def test_manifest_counts_1m_keys_stays_in_plan(spark, tmp_path):
         F.concat(F.lit("k"), F.col("id").cast("string")).alias("item_id"),
         F.col("id").alias("v"),
     )
-    # same groupBy fan-out shape as split_day_manifest, count-consumed
+    # same groupBy fan-out shape as split_groups, count-consumed
     agg = df.groupBy("item_id").agg(F.count("*").alias("rows"))
     total = agg.agg(F.count("*").alias("n")).collect()[0].n
     assert total == n_keys
