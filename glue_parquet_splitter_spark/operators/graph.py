@@ -21,10 +21,10 @@ O(log n)-round large-star/small-star alternation (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14) only pays
 off on long-chain graphs that dedup workloads don't produce.
 
-``localCheckpoint`` truncates lineage each round so the plan stays
-constant-size; the one ``count()`` per round is driver-side loop
-control, the same pattern as Spark MLlib's iterative algorithms (it
-reads a 1-row convergence signal, not data).
+``stage_table(must_cut=True)`` truncates lineage each round so the
+plan stays constant-size; the one ``count()`` per round is driver-side
+loop control, the same pattern as Spark MLlib's iterative algorithms
+(it reads a 1-row convergence signal, not data).
 """
 
 from __future__ import annotations

@@ -285,8 +285,9 @@ def pq_adc_topk(emb: DataFrame, query_id: int, m: int = 4, dsub: int = 16,
     # one row before any exchange — no sort, 1/nc the shuffled rows.
     # Fixture-hostile vectors (null elements / short arrays) make d2
     # NULL; struct ordering ranks null fields first exactly like the
-    # old window's ASC NULLS FIRST (equality pinned in
-    # tests/test_similarity_recall.py and the stability ledger).
+    # old window's ASC NULLS FIRST (pinned by the NULL-centroid case of
+    # tests/test_similarity_recall.py::
+    # test_pq_adc_ranks_planted_neighbors_first).
     assign = (
         # bounded: cent is the PQ codebook (n_sub x 256 centroids, constant)
         sub.join(F.broadcast(cent), "s")

@@ -28,6 +28,8 @@ audit grades against the SAME DuckDB oracle as ``curation_funnel_v3``.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,14 +51,14 @@ def materialize_funnel_signals(spark: SparkSession, sf_dir: str,
     from ..queries.curation5_q import winnowing_fingerprints
     from ..queries.curation6_q import _clf_scores
     from ..queries.quality_q import doc_avg_nll, score_percentile_by_source
-    from ..staging import stage_table
+    from ..staging import run_concurrently, stage_table
 
     # ONE identity-dedup pass shared by all four signal jobs (r16, the
-    # funnel-v3 recipe): staged EAGERLY before the pool so the four
-    # worker threads consume pinned blocks instead of racing to
+    # funnel-v3 recipe): staged EAGERLY before the arms so the four
+    # arm threads consume pinned blocks instead of racing to
     # materialize a lazy checkpoint.  Each signal job stays a separate
     # restartable write; the shared stage is just their common input
-    # (on a cluster, a real parquet stage table — staging.py).
+    # (on a cluster, a reliable checkpoint — staging.py).
     docs = stage_table(
         unique_documents(load_table(spark, sf_dir, "documents")),
         label="unique_docs", eager=True)
@@ -71,26 +73,16 @@ def materialize_funnel_signals(spark: SparkSession, sf_dir: str,
         .select("doc_id", "source", "pct"),
     }
     # The four signal jobs are INDEPENDENT (each reads the corpus,
-    # none reads another's output), so they are submitted from a small
-    # thread pool instead of sequentially: Spark schedules concurrent
-    # jobs FIFO, so the next job's tasks back-fill executors freed by
-    # the current job's straggler tail (optimization guide §2.6).
-    # Same four writes, same outputs — only the job submission
-    # overlaps; r15 measured 12.6 s -> 10.6 s at sf0.1/local[32] for
-    # the overlap alone (the classifier lineage cut landed alongside
-    # takes the full query to ~5.3 s).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def write_one(item: tuple[str, DataFrame]) -> tuple[str, str]:
-        name, df = item
-        spark.sparkContext.setJobDescription(f"funnel signal: {name}")
-        path = f"{out_dir}/{name}.parquet"
-        df.write.mode("overwrite").parquet(path)
-        return name, path
-
-    with ThreadPoolExecutor(max_workers=len(signals)) as pool:
-        paths = dict(pool.map(write_one, signals.items()))
-    spark.sparkContext.setJobDescription(None)
+    # none reads another's output), so they run as concurrent arms
+    # instead of sequentially.  Same four writes, same outputs — only
+    # the job submission overlaps; r15 measured 12.6 s -> 10.6 s at
+    # sf0.1/local[32] for the overlap alone (the classifier lineage
+    # cut landed alongside takes the full query to ~5.3 s).
+    paths = {name: f"{out_dir}/{name}.parquet" for name in signals}
+    run_concurrently(spark, {
+        f"funnel signal: {name}":
+            partial(df.write.mode("overwrite").parquet, paths[name])
+        for name, df in signals.items()})
     return paths
 
 

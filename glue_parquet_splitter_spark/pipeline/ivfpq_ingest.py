@@ -38,11 +38,13 @@ base corpus size.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as S
-from ..staging import stage_table
+from ..staging import run_concurrently, stage_table
 
 STAGE_TABLES = ("ivf_cents", "ivf_book", "ivf_codes_base")
 BASE_SPLIT = 400    # vec_id < 400 = base corpus; >= 400 = delta batch
@@ -72,18 +74,13 @@ def materialize_ivfpq_base(spark: SparkSession, sf_dir: str,
                                 nc=NC, stride=STRIDE)
     paths = {t: f"{out_dir}/{t}.parquet" for t in STAGE_TABLES}
     # the two model writes are independent jobs (book's plan embeds
-    # cents' lineage but reads nothing cents WRITES); submitting them
-    # from a thread pool back-fills each tiny job's tail (guide §2.6).
+    # cents' lineage but reads nothing cents WRITES); running them as
+    # concurrent arms back-fills each tiny job's tail (guide §2.6).
     # codes_base still waits on both read-backs below.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def write_one(item):
-        df, path = item
-        df.write.mode("overwrite").parquet(path)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(write_one, [(cents, paths["ivf_cents"]),
-                                  (book, paths["ivf_book"])]))
+    run_concurrently(spark, {
+        f"ivfpq stage: {t}": partial(df.write.mode("overwrite").parquet,
+                                     paths[t])
+        for t, df in (("ivf_cents", cents), ("ivf_book", book))})
     cents_t = spark.read.parquet(paths["ivf_cents"])
     book_t = spark.read.parquet(paths["ivf_book"])
     codes_base = S.ivfpq_encode(
@@ -177,14 +174,11 @@ def run_incremental_ivfpq(spark: SparkSession, sf_dir: str,
     out_dir = out_dir or _default_stages_dir()
     # The certification (scratch) arm reads nothing the base
     # materialization writes — it re-derives the model from raw vectors
-    # BY DESIGN — so it runs concurrently with the base-stage writes
-    # from a worker thread and lands as an eagerly staged |queries|·k
-    # row table (guide §2.6; the r16 fertility-matrix pattern).  The
-    # incremental arm still waits on the stage writes it reads.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def scratch_arm():
-        spark.sparkContext.setJobDescription("ivfpq certification arm")
+    # BY DESIGN — so the two run as concurrent arms, and the scratch
+    # arm lands as an eagerly staged |queries|·k row table (guide §2.6;
+    # the r16 fertility-matrix pattern).  The incremental arm still
+    # waits on the stage writes it reads.
+    def scratch_arm() -> DataFrame:
         arm = (ivfpq_scratch_search(spark, sf_dir, k=k)
                .select(F.col("query_id").alias("s_qid"),
                        F.col("rank").alias("s_rank"),
@@ -192,11 +186,11 @@ def run_incremental_ivfpq(spark: SparkSession, sf_dir: str,
                        F.col("est_d2").alias("s_d2")))
         return stage_table(arm, label="ivfpq_scratch_topk", eager=True)
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        scr_future = pool.submit(scratch_arm)
-        materialize_ivfpq_base(spark, sf_dir, out_dir)
-        scr = scr_future.result()
-    spark.sparkContext.setJobDescription(None)
+    scr = run_concurrently(spark, {
+        "ivfpq certification arm": scratch_arm,
+        "ivfpq base stages":
+            partial(materialize_ivfpq_base, spark, sf_dir, out_dir),
+    })["ivfpq certification arm"]
     incr = ivfpq_incremental_search(spark, sf_dir, out_dir, k=k)
     j = incr.join(scr, (incr["query_id"] == scr["s_qid"])
                   & (incr["rank"] == scr["s_rank"]), "full")

@@ -18,11 +18,13 @@ Engine-parity notes (probed on this container, Spark 4.1 / DuckDB 1.0):
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.text import unique_documents
-from ..staging import stage_table
+from ..staging import run_concurrently, stage_table
 from . import register
 from .curation4_q import hex_hash_expr
 
@@ -1622,34 +1624,27 @@ def tokenizer_fertility_matrix(spark, sf_dir):
     ]
     # the unigram/wordpiece arms do driver-sequenced model work while
     # BUILDING their DataFrames (EM cost collects, piece-store
-    # collects); constructing the three arms from a thread pool
-    # overlaps those independent jobs (guide §2.6 — Spark schedules
+    # collects); constructing the three as concurrent arms overlaps
+    # those independent jobs (guide §2.6 — Spark schedules
     # concurrent jobs FIFO and back-fills idle executors).  Arm order
     # in the union is fixed by the arms list, not completion order.
     # r15 in-session A/B at sf0.1: 8.4 s -> 6.7 s, identical rows.
     # r16 (VERDICT r15 #5): each arm's |langs|-row RESULT is staged
-    # EAGERLY inside its worker thread, so the three corpus-side
+    # EAGERLY inside its arm thread, so the three corpus-side
     # encode jobs also run concurrently instead of serially inside
     # the one union action; the final plan unions three tiny staged
     # tables.  The arms still compute per invocation inside fn() —
     # the one-lazy-plan contract is deliberately relaxed to the
     # funnel-materialized pattern.  A/B at sf0.1 (6 interleaved
     # reps): med 4.52 s -> 2.87 s, identical rows.
-    # Job descriptions are set INSIDE each worker thread, which under
-    # pinned-thread mode scopes them to that thread's own jobs; the
-    # main-thread reset below is best-effort cosmetics (ADVICE r15).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def build(item):
-        name, fn = item
-        spark.sparkContext.setJobDescription(f"fertility arm: {name}")
+    def build(name, fn):
         arm = fn(spark, sf_dir).select(
             "lang", F.lit(name).alias("tokenizer"), "chars_per_token")
         return stage_table(arm, label=f"fertility_{name}", eager=True)
 
-    with ThreadPoolExecutor(max_workers=len(arms)) as pool:
-        parts = list(pool.map(build, arms))
-    spark.sparkContext.setJobDescription(None)
+    parts = list(run_concurrently(spark, {
+        f"fertility arm: {name}": partial(build, name, fn)
+        for name, fn in arms}).values())
     m = parts[0].unionByName(parts[1]).unionByName(parts[2])
     from pyspark.sql import Window as W
 

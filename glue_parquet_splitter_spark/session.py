@@ -10,8 +10,18 @@ path.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def is_local_master(master: str | None) -> bool:
+    """True for the single-JVM masters ``local``, ``local[N]``,
+    ``local[*]`` and ``local[N,F]``; false for ``local-cluster[...]``
+    (separate executor JVMs), cluster URLs and ``None``."""
+    return master is not None and re.fullmatch(
+        r"local(\[([0-9]+|\*)(\s*,\s*[0-9]+)?\])?", master) is not None
+
 
 # Session-level confs that must hold even when the caller (e.g. the
 # verification driver) built the SparkSession itself.  All of these are
@@ -64,7 +74,7 @@ def _join_confs(master: str | None) -> dict:
         allow = override not in ("0", "false", "")
         return {"spark.sql.join.preferSortMergeJoin":
                 "false" if allow else "true"}
-    if master is not None and master.startswith("local"):
+    if is_local_master(master):
         return dict(_LOCAL_ONLY_JOIN_CONFS)
     return {}
 
@@ -85,7 +95,7 @@ def _split_size_confs(master: str | None) -> dict:
     override = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
     if override:
         return {"spark.sql.files.maxPartitionBytes": override}
-    if master is not None and master.startswith("local"):
+    if is_local_master(master):
         return dict(_LOCAL_ONLY_DEFAULTS)
     return {}
 

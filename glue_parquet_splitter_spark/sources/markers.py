@@ -43,6 +43,46 @@ SCHEMA = ("kind string, date string, input_key string, "
 _FILES_PER_PARTITION = 64
 
 
+def _marker_names(marker_dir: str) -> list[str]:
+    """Sorted ``*.json`` base names in ``marker_dir`` (driver-side
+    metadata listing only)."""
+    from pyarrow.fs import FileSelector
+
+    from ..pipeline.splitter import resolve_fs
+
+    filesystem, fs_path = resolve_fs(marker_dir)
+    infos = filesystem.get_file_info(
+        FileSelector(fs_path, recursive=False, allow_not_found=True))
+    return sorted(i.base_name for i in infos
+                  if i.base_name.endswith(".json"))
+
+
+def _marker_rows(marker_dir: str, names: list[str]):
+    """One SCHEMA row per marker name; both marker schemas normalize
+    to ``output_count`` (``outputs`` mode: its list's length)."""
+    from ..pipeline.splitter import resolve_fs
+
+    # one resolve per call, from the ORIGINAL scheme-carrying
+    # marker_dir — the same filesystem the driver listed with
+    filesystem, dir_path = resolve_fs(marker_dir)
+    for name in names:
+        with filesystem.open_input_stream(
+                f"{dir_path.rstrip('/')}/{name}") as f:
+            doc = json.loads(f.read().decode("utf-8"))
+        count = doc.get("output_count")
+        if count is None and doc.get("outputs") is not None:
+            count = len(doc["outputs"])
+        yield (
+            doc.get("kind"),
+            doc.get("date"),
+            doc.get("input_key"),
+            doc.get("input_fingerprint"),
+            count,
+            doc.get("outputs_manifest"),
+            doc.get("generated_at"),
+        )
+
+
 class _MarkerPartition(InputPartition):
     def __init__(self, names: list[str]):
         # marker BASE NAMES, not listed paths: pyarrow's FileInfo.path
@@ -88,44 +128,15 @@ class MarkerReader(DataSourceReader):
         self.marker_dir = marker_dir
 
     def partitions(self) -> list[_MarkerPartition]:
-        # driver-side metadata listing only — file CONTENT is read on
-        # executors, chunked so a million marked days still fan out
-        from pyarrow.fs import FileSelector
-
-        from ..pipeline.splitter import resolve_fs
-
-        filesystem, fs_path = resolve_fs(self.marker_dir)
-        infos = filesystem.get_file_info(
-            FileSelector(fs_path, recursive=False, allow_not_found=True))
-        names = sorted(i.base_name for i in infos
-                       if i.base_name.endswith(".json"))
+        # file CONTENT is read on executors, chunked so a million
+        # marked days still fan out
+        names = _marker_names(self.marker_dir)
         chunks = [names[i:i + _FILES_PER_PARTITION]
                   for i in range(0, len(names), _FILES_PER_PARTITION)]
         return [_MarkerPartition(c) for c in chunks] or [_MarkerPartition([])]
 
     def read(self, partition: _MarkerPartition):
-        from ..pipeline.splitter import resolve_fs
-
-        # one resolve per task, from the ORIGINAL scheme-carrying
-        # marker_dir — the same filesystem the driver listed with
-        filesystem, dir_path = resolve_fs(self.marker_dir)
-        for name in partition.names:
-            fs_path = f"{dir_path.rstrip('/')}/{name}"
-            with filesystem.open_input_stream(fs_path) as f:
-                doc = json.loads(f.read().decode("utf-8"))
-            outputs = doc.get("outputs")
-            count = doc.get("output_count")
-            if count is None and outputs is not None:
-                count = len(outputs)
-            yield (
-                doc.get("kind"),
-                doc.get("date"),
-                doc.get("input_key"),
-                doc.get("input_fingerprint"),
-                count,
-                doc.get("outputs_manifest"),
-                doc.get("generated_at"),
-            )
+        return _marker_rows(self.marker_dir, partition.names)
 
 
 class _MarkerWriteCommit(WriterCommitMessage):
@@ -232,7 +243,7 @@ class MarkerWriter(DataSourceWriter):
         # overwrite semantics, deferred from __init__: drop markers that
         # predate this job and were not re-written — only now that every
         # staged temp has been published
-        for stale in getattr(self, "_stale_on_commit", []):
+        for stale in self._stale_on_commit:
             if stale not in written:
                 try:
                     filesystem.delete_file(f"{base}/{stale}")
@@ -286,27 +297,14 @@ class MarkerStreamWriter(DataSourceStreamWriter):
     batch's staged temps and leaves every committed marker intact."""
 
     def __init__(self, marker_dir: str):
-        import uuid
-
-        self.marker_dir = marker_dir
-        # same per-job temp scoping as the batch writer (ADVICE r8)
-        self.job_token = uuid.uuid4().hex[:8]
-        from ..pipeline.splitter import resolve_fs
-
-        filesystem, dir_path = resolve_fs(marker_dir)
-        filesystem.create_dir(dir_path, recursive=True)
+        # no stale markers to drop: a stream only adds or rewrites
+        MarkerWriter.__init__(self, marker_dir, overwrite=False)
 
     def write(self, iterator) -> "_MarkerWriteCommit":
         return MarkerWriter.write(self, iterator)  # same staging body
 
     def commit(self, messages, batchId: int) -> None:
-        from ..pipeline.splitter import resolve_fs
-
-        filesystem, dir_path = resolve_fs(self.marker_dir)
-        base = dir_path.rstrip("/")
-        for m in messages:
-            for tmp, final in m.pairs:
-                filesystem.move(f"{base}/{tmp}", f"{base}/{final}")
+        MarkerWriter.commit(self, messages)
 
     def abort(self, messages, batchId: int) -> None:
         MarkerWriter.abort(self, messages)
@@ -370,42 +368,6 @@ class MarkerSimpleStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, marker_dir: str):
         self.marker_dir = marker_dir
 
-    # -- listing / parsing helpers (same FS discipline as the batch
-    #    reader: resolve the scheme-carrying dir, join base names)
-
-    def _names(self) -> list[str]:
-        from pyarrow.fs import FileSelector
-
-        from ..pipeline.splitter import resolve_fs
-
-        filesystem, fs_path = resolve_fs(self.marker_dir)
-        infos = filesystem.get_file_info(
-            FileSelector(fs_path, recursive=False, allow_not_found=True))
-        return sorted(i.base_name for i in infos
-                      if i.base_name.endswith(".json"))
-
-    def _rows(self, names: list[str]):
-        from ..pipeline.splitter import resolve_fs
-
-        filesystem, dir_path = resolve_fs(self.marker_dir)
-        for name in names:
-            with filesystem.open_input_stream(
-                    f"{dir_path.rstrip('/')}/{name}") as f:
-                doc = json.loads(f.read().decode("utf-8"))
-            outputs = doc.get("outputs")
-            count = doc.get("output_count")
-            if count is None and outputs is not None:
-                count = len(outputs)
-            yield (
-                doc.get("kind"),
-                doc.get("date"),
-                doc.get("input_key"),
-                doc.get("input_fingerprint"),
-                count,
-                doc.get("outputs_manifest"),
-                doc.get("generated_at"),
-            )
-
     # -- SimpleDataSourceStreamReader contract
 
     def initialOffset(self) -> dict:
@@ -413,14 +375,15 @@ class MarkerSimpleStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict):
         wm = start.get("watermark", "")
-        fresh = [n for n in self._names() if n > wm]
+        fresh = [n for n in _marker_names(self.marker_dir) if n > wm]
         end = {"watermark": fresh[-1]} if fresh else dict(start)
-        return iter(list(self._rows(fresh))), end
+        return iter(list(_marker_rows(self.marker_dir, fresh))), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         lo, hi = start.get("watermark", ""), end.get("watermark", "")
-        replay = [n for n in self._names() if lo < n <= hi]
-        return iter(list(self._rows(replay)))
+        replay = [n for n in _marker_names(self.marker_dir)
+                  if lo < n <= hi]
+        return iter(list(_marker_rows(self.marker_dir, replay)))
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the stream's checkpoint, nothing to GC

@@ -30,7 +30,17 @@ def _vecs(spark, sf_dir):
 
 
 def test_stage_tables_materialize(spark, sf_dir, tmp_path):
-    paths = materialize_ivfpq_base(spark, sf_dir, str(tmp_path))
+    # the concurrent model writes run inside the caller's job group
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("ivfpq_materialize", "stage tables")
+    try:
+        paths = materialize_ivfpq_base(spark, sf_dir, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    assert sc.statusTracker().getJobIdsForGroup("ivfpq_materialize")
     assert set(paths) == set(STAGE_TABLES)
     cents = spark.read.parquet(paths["ivf_cents"])
     book = spark.read.parquet(paths["ivf_book"])

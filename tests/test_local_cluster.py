@@ -1,0 +1,140 @@
+"""staging.py and session.py on a multi-process master.
+
+``local-cluster[2,1,1024]`` runs two executors as separate JVMs, so
+lost executors, package shipping and thread-local job properties
+behave as on a real cluster.  The suite's session fixture holds this
+process's only SparkContext, so the cluster runs in a subprocess: this
+file doubles as that script (``python test_local_cluster.py
+<out.json>``, with ``spark.checkpoint.dir`` passed in
+``PYSPARK_SUBMIT_ARGS``), which writes what it saw as JSON for the
+test to check.
+"""
+
+import json
+import os
+import shutil
+import subprocess
+import sys
+import time
+from functools import partial
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MASTER = "local-cluster[2,1,1024]"
+EDGES = [(1, 2), (1, 3), (11, 10), (12, 12)]
+
+
+def _executors(sc) -> list[str]:
+    ids = sc._jsc.sc().getExecutorIds().mkString(",")
+    return [e for e in ids.split(",") if e]
+
+
+def _wait(cond, what: str, timeout: float = 120.0) -> None:
+    deadline = time.monotonic() + timeout
+    while not cond():
+        if time.monotonic() > deadline:
+            raise TimeoutError(what)
+        time.sleep(0.2)
+
+
+def _components(spark) -> list[list[int]]:
+    from glue_parquet_splitter_spark.operators.graph import \
+        connected_components
+
+    edges = spark.createDataFrame(EDGES, "src long, dst long")
+    return sorted([r.vertex, r.component]
+                  for r in connected_components(edges).collect())
+
+
+def _where(batches):
+    import pandas as pd
+
+    import glue_parquet_splitter_spark as pkg
+
+    for _ in batches:
+        # cwd: the executor's work dir, <SPARK_HOME>/work/<app>/<exec>
+        yield pd.DataFrame({"cwd": [os.getcwd()], "pkg": [pkg.__file__]})
+
+
+def _observe(spark) -> dict:
+    from glue_parquet_splitter_spark.staging import (_stage_mode,
+                                                     run_concurrently,
+                                                     stage_table)
+
+    sc = spark.sparkContext
+    out = {"mode": _stage_mode(sc.master, sc.getCheckpointDir())}
+
+    rows = (spark.range(0, 8, numPartitions=8)
+            .mapInPandas(_where, "cwd string, pkg string").collect())
+    out["worker_dirs"] = sorted({r.cwd for r in rows})
+    out["pkg_files"] = sorted({r.pkg for r in rows})
+
+    out["components"] = _components(spark)
+
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("arms", "concurrent arms")
+    results = run_concurrently(spark, {
+        f"arm {n}": partial(spark.range(n).count) for n in (10, 20, 30)})
+    out["arm_results"] = list(results.items())
+    out["grouped_jobs"] = len(sc.statusTracker().getJobIdsForGroup("arms"))
+    out["ungrouped_new"] = sorted(
+        set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped)
+
+    staged = stage_table(spark.range(0, 10000, numPartitions=8), eager=True)
+    victim = _executors(sc)[0]
+    sc._jsc.sc().killExecutor(victim)
+    _wait(lambda: victim not in _executors(sc), "executor removal")
+    out["sum_after_kill"] = staged.groupBy().sum("id").first()[0]
+    return out
+
+
+def _main(out_path: str) -> None:
+    sys.path.insert(0, REPO)
+    from glue_parquet_splitter_spark.session import get_spark
+
+    spark = get_spark("local_cluster", master=MASTER, shuffle_partitions=2)
+    sc = spark.sparkContext
+    app_work_dir = os.path.join(os.environ.get("SPARK_HOME", ""), "work",
+                                sc.applicationId)
+    _wait(lambda: len(_executors(sc)) == 2, "two executors")
+    try:
+        out = _observe(spark)
+        with open(out_path, "w") as f:
+            json.dump(out, f)
+    finally:
+        spark.stop()
+        # local-cluster workers ignore SPARK_WORKER_DIR and write under
+        # <SPARK_HOME>/work; drop this application's dir
+        shutil.rmtree(app_work_dir, ignore_errors=True)
+
+
+def test_local_cluster_master(spark, tmp_path):
+    out_path = tmp_path / "out.json"
+    env = {**os.environ,
+           "SPARK_GRAFT_DRIVER_MEM": "1g",
+           "PYSPARK_SUBMIT_ARGS": "--conf spark.checkpoint.dir="
+                                  f"{tmp_path / 'ck'} pyspark-shell"}
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), str(out_path)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(out_path.read_text())
+
+    assert out["mode"] == "reliable"
+    # 1. the reliable checkpoint outlived the killed executor
+    assert out["sum_after_kill"] == sum(range(10000))
+    # 2. the must_cut loop gives the local[N] answer
+    assert out["components"] == _components(spark)
+    # 3. both executor JVMs imported the package from the shipped zip
+    assert len(out["worker_dirs"]) == 2, out["worker_dirs"]
+    assert all("glue_parquet_splitter_spark.zip" in f
+               for f in out["pkg_files"]), out["pkg_files"]
+    # 4. every arm's job ran inside the caller's job group; results
+    # come back in key order
+    assert out["arm_results"] == [["arm 10", 10], ["arm 20", 20],
+                                  ["arm 30", 30]]
+    assert out["grouped_jobs"] >= 3
+    assert out["ungrouped_new"] == []
+
+
+if __name__ == "__main__":
+    _main(sys.argv[1])

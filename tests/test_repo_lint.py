@@ -327,3 +327,33 @@ def test_whole_partition_rows_frame_aggregate_not_flagged(tmp_path):
             return orders.withColumn("tot", F.sum("price").over(w))
     """))
     assert scan_pick_window_sites(str(tmp_path)) == []
+
+
+# ---- one helper for concurrent arms (staging.run_concurrently) ----
+# Threads started by hand escape the caller's job group; every
+# concurrent arm goes through staging.run_concurrently instead.
+
+def test_only_staging_imports_thread_modules():
+    import ast
+
+    pkg = os.path.join(REPO, "glue_parquet_splitter_spark")
+    hits = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == os.path.join(pkg, "staging.py"):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    names = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom) and not node.level:
+                    names = [node.module or ""]
+                else:
+                    continue
+                if any(n.split(".")[0] in ("threading", "concurrent")
+                       for n in names):
+                    hits.append(f"{os.path.relpath(path, REPO)}:{node.lineno}")
+    assert hits == [], "thread modules imported outside staging.py:\n" + \
+        "\n".join(hits)

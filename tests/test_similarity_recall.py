@@ -145,6 +145,35 @@ def test_quantized_top1_matches_exact(spark, corpus):
     assert agree / len(exact) >= 0.95, f"top-1 agreement {agree}/{len(exact)}"
 
 
+def _pq_adc_reference(vecs, qid, k, m=4, dsub=16, nc=8, stride=5):
+    """``pq_adc_topk`` in plain Python: codes by (d2 NULLS FIRST, j),
+    NULL distance entries skipped by the sum."""
+    def d2(a, b):
+        if None in a or None in b:
+            return None
+        return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+    def sub(v, s):
+        return v[s * dsub:(s + 1) * dsub]
+
+    cents = {j: vecs[j * stride] for j in range(nc)}
+    qd2 = {(s, j): d2(sub(vecs[qid], s), sub(c, s))
+           for s in range(m) for j, c in cents.items()}
+    est = {}
+    for v, e in vecs.items():
+        if v == qid:
+            continue
+        total = 0.0
+        for s in range(m):
+            dist = {j: d2(sub(e, s), sub(c, s)) for j, c in cents.items()}
+            code = min(cents, key=lambda j: (dist[j] is not None,
+                                             dist[j] or 0.0, j))
+            if qd2[s, code] is not None:
+                total += round(qd2[s, code], 6)
+        est[v] = round(total, 4)
+    return sorted(est.items(), key=lambda t: (t[1], t[0]))[:k]
+
+
 def test_pq_adc_ranks_planted_neighbors_first(spark):
     """PQ's job in a dedup/retrieval pipeline: a near-duplicate of the
     query must surface in the ADC top-k even through 8-level-per-
@@ -167,6 +196,21 @@ def test_pq_adc_ranks_planted_neighbors_first(spark):
     # and they dominate the ranking: quantization error of a near-copy
     # equals the query's own code error, the smallest possible estimate
     assert set(got[:3]) == set(planted_ids), got
+
+    # NULL d2: a NULL element in codebook vector 35 (centroid j=7 of
+    # subspace 3) makes every d2 against that centroid NULL.  min_by's
+    # struct ordering must rank it first, as the rank-1 window's ASC
+    # NULLS FIRST did: every other vector then takes code 7 there, whose
+    # NULL ADC entry drops out of the sum.  NULLS LAST would pick a real
+    # centroid and add its distance to every estimate.
+    rows = [(i, v[:48] + [None] + v[49:] if i == 35 else v)
+            for i, v in rows]
+    emb = spark.createDataFrame(rows, "vec_id: long, e: array<double>")
+    top = S.pq_adc_topk(emb, query_id=qid, k=10).collect()
+    want = _pq_adc_reference(dict(rows), qid, k=10)
+    assert [r.vec_id for r in top] == [v for v, _ in want]
+    assert [r.est_dist2 for r in top] == \
+        pytest.approx([d for _, d in want], abs=2e-4)
 
 
 def test_jl_projection_preserves_planted_top1(spark, corpus):

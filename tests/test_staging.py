@@ -1,11 +1,10 @@
 """stage_table (staging.py): the cluster-safe lineage cut (VERDICT r15
 #1).  Local masters must keep the r15 ``localCheckpoint`` behavior
-bit-for-bit; cluster masters must prefer a durable stage (parquet dir,
-then reliable checkpoint), and fall back to uncut lineage — or
-``localCheckpoint`` for ``must_cut`` iterative callers — when neither
-is configured."""
-
-import os
+bit-for-bit; cluster masters must take a reliable checkpoint when Spark
+has a checkpoint dir, and fall back to uncut lineage — or
+``localCheckpoint`` for ``must_cut`` iterative callers — when it has
+none.  tests/test_local_cluster.py runs the same modes on a
+multi-process master."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,17 +15,18 @@ from glue_parquet_splitter_spark.staging import _stage_mode, stage_table
 
 # ---- decision kernel (pure, no cluster needed) -------------------------
 
-@pytest.mark.parametrize("master,stage_dir,ckdir,expected", [
-    ("local[32]", None, None, "local"),
-    ("local[*]", "/stage", "/ck", "local"),       # local wins outright
-    (None, "/stage", None, "local"),              # unknown master: local
-    ("spark://host:7077", "/stage", "/ck", "parquet"),  # stage dir first
-    ("yarn", None, "/ck", "reliable"),
-    ("k8s://https://host", None, None, "uncut"),
-    ("spark://host:7077", "", None, "uncut"),     # empty env var = unset
+@pytest.mark.parametrize("master,ckdir,expected", [
+    ("local[32]", None, "local"),
+    ("local[*]", "/ck", "local"),                # local wins outright
+    (None, None, "uncut"),                       # unknown master: cluster
+    ("spark://host:7077", "/ck", "reliable"),
+    ("yarn", "/ck", "reliable"),
+    ("k8s://https://host", None, "uncut"),
+    ("spark://host:7077", "", "uncut"),          # empty dir = unset
+    ("local-cluster[2,1,1024]", "/ck", "reliable"),  # separate executor JVMs
 ])
-def test_stage_mode_decision(master, stage_dir, ckdir, expected):
-    assert _stage_mode(master, stage_dir, ckdir) == expected
+def test_stage_mode_decision(master, ckdir, expected):
+    assert _stage_mode(master, ckdir) == expected
 
 
 # ---- local behavior: same rows, lineage actually cut -------------------
@@ -42,23 +42,7 @@ def test_local_stage_is_localcheckpoint(spark):
     assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
 
 
-# ---- durable modes, forced through the kernel (no cluster available) ----
-
-def test_parquet_stage_roundtrip(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv(staging.STAGE_DIR_ENV, str(tmp_path))
-    monkeypatch.setattr(staging, "_stage_mode",
-                        lambda *a: "parquet")
-    df = spark.range(50).withColumn("v", (F.col("id") * 3).cast("long"))
-    staged = stage_table(df, label="roundtrip")
-    assert sorted((r["id"], r["v"]) for r in staged.collect()) == \
-        [(i, 3 * i) for i in range(50)]
-    # the stage landed as a labeled parquet dir
-    dirs = [d for d in os.listdir(tmp_path) if d.startswith("roundtrip_")]
-    assert len(dirs) == 1
-    # and the returned plan is a scan of that dir (no range source)
-    plan = staged._jdf.queryExecution().executedPlan().toString()
-    assert "Range" not in plan
-
+# ---- cluster modes, forced through the kernel -----------------------
 
 def test_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
@@ -101,6 +85,7 @@ def test_planner_shj_conf_scoped_to_local(monkeypatch):
     assert _join_confs("yarn") == {}
     assert _join_confs("spark://h:7077") == {}
     assert _join_confs(None) == {}
+    assert _join_confs("local-cluster[2,1,1024]") == {}
     # explicit cluster opt-in / local opt-out
     monkeypatch.setenv("SPARK_GRAFT_PLANNER_SHJ", "1")
     assert _join_confs("yarn") == {
