@@ -1,11 +1,36 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS], plus a split-pipeline throughput
-replay of the reference workload shape (BASELINE.md: ≥ ~15k rows/s).
+replay of the reference workload shape (BASELINE.md: ≥ ~15k rows/s)
+and a compaction replay.
 
-Prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+Each entry runs one warm rep, then timed reps.  Every timed rep reads
+Spark's status store for the job-ID window around it
+(``perfbench.spark_account.SparkAccount``), so jobs started by eager
+``stage_table`` arms, ``run_concurrently`` pools and streaming
+micro-batches count toward the entry that caused them.  Per entry the
+run records the wall and executor-CPU minimum over the reps, and the
+tasks, shuffle write bytes, jobs, stages, GC, spill and Python-worker
+time of the lowest-CPU rep.
+
+The regression gate (``work_regressions``) compares those counters
+with the committed ``BENCH_METRICS.json`` of the same scale and core
+count: tasks and shuffle bytes are fixed by the plan, so a move of
+either outside (0.8, 1.25) is a plan change; executor CPU flags above
+2.5x (against a baseline of at least 0.3 s).  Wall time is reported,
+never gated: on a shared host it moves 2x with no code change, while
+the counters stay put.  Known blind spot: a slowdown inside pandas or
+Arrow UDF bodies moves neither JVM CPU nor the plan counters
+(``python_run_s`` is recorded for it).  The run rewrites
+``BENCH_METRICS.json`` only when that file was measured at the same
+scale and core count (or is absent): to re-baseline at another, delete
+it first.  The committed baseline is sf0.1 at ``SPARK_GRAFT_CPUS=4``.
+
+Prints ONE JSON line (under the 2000-char tail capture):
+  {"metric": "headline_suite_sec", "value": <total sec>, "unit": "sec",
+   "queries": {name: sec, ...}, "sf": ..., "split_replay_*_rows_per_sec",
+   "work_over": <flagged entries, null when no baseline matched>,
+   "work_regs": {name: {counter: ratio}}}
 
 Queries are materialized with the noop sink (full execution, no
 driver collect). Brute-force O(N²) similarity queries are deliberately
@@ -15,15 +40,16 @@ excluded — their scale path (ann_lsh_bucketed) is included instead.
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from glue_parquet_splitter_spark.observability import run_with_metrics  # noqa: E402
 from glue_parquet_splitter_spark.queries import load_all_modules  # noqa: E402
 from glue_parquet_splitter_spark.session import get_spark  # noqa: E402
+from perfbench.spark_account import SparkAccount, totals  # noqa: E402
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -126,7 +152,7 @@ BENCH_QUERIES = [
     "curation_funnel_v3",
     # round-10 wave 2: content-defined chunking — a new cost shape
     # (O(16·n_chars) expression work per doc on a ZERO-exchange scan),
-    # wall-gated only; its 0 shuffle bytes sit below the shuffle
+    # gated on tasks and CPU; its 0 shuffle bytes sit below the shuffle
     # gate's floor by design.
     "cdc_gear_chunking",
     # round-11 (VERDICT r10 #7): the r10 audit family becomes gated —
@@ -184,31 +210,68 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def calibration_probe(spark) -> float:
-    """Fixed reference workload timed alongside the suite (VERDICT r7
-    #1): a 50M-row codegen sum plus a 2M-row/1k-key shuffle — the two
-    cost shapes the suite is made of, with a plan that never changes.
-
-    Its wall time measures the HOST, not the code: r6→r7 moved every
-    query a uniform 1.4-1.9x with zero shuffle-byte change (host
-    contention), and raw wall-clock could not prove it.  The probe
-    runs at suite start/middle/end; per-query times divided by the
-    round's median probe time are comparable across rounds, which is
-    what ``wall_regressions`` gates on."""
-    from pyspark.sql import functions as F
-
-    t0 = time.perf_counter()
-    materialize(spark.range(50_000_000).selectExpr("sum(id * 2 + 1) AS s"))
-    materialize(spark.range(2_000_000)
-                .groupBy((F.col("id") % 1000).alias("k")).count())
-    return time.perf_counter() - t0
-
-
 N_REPLAY_DAYS = 10
-PROBE_EVERY = 10  # calibration probe every N batch entries (r9)
+REPS = 3  # timed reps per registry entry, after one warm rep
+METRICS_FILE = "BENCH_METRICS.json"
+
+# tasks and shuffle bytes are fixed by the plan: a move outside this
+# band, either way, is a plan change.  Sub-4 kB shuffles on both sides
+# are skipped (single-batch compression jitter).
+COUNT_GATE_RATIO = (0.8, 1.25)
+SHUFFLE_GATE_MIN_BYTES = 4096
+# min-of-3 executor CPU moved up to 1.9x between full-suite runs with
+# no code change, quiet or busy, on a 4-core host; a same-plan CPU
+# plant read 3.9x.  Only slowdowns are gated, because a JVM-cold
+# baseline reads high.  A baseline under 0.3 s is codegen noise, so
+# the ratio is taken against at least 0.3 s.
+CPU_GATE_RATIO = 2.5
+CPU_GATE_MIN_SEC = 0.3
+# the stdout line carries the slowest N entries (plus an _omitted_n
+# count); the full map lives in BENCH_METRICS.json
+_LINE_TOP_QUERIES = 45
+
+COUNTERS = ("tasks", "shuffle_write_bytes", "executor_cpu_s")
 
 
-def bench_split_replay(spark, tmp_root: str, skew: bool = False) -> tuple[float, float]:
+class _Account(SparkAccount):
+    """Skips SQL executions that list no plan metrics (commands such as
+    a noop-sink save's outer execution), which the metric-line parser
+    of ``SparkAccount`` does not expect."""
+
+    def _new_executions(self) -> list:
+        return [ex for ex in super()._new_executions()
+                if ex.metrics().nonEmpty()]
+
+
+def measure(spark, reps: int, prepare) -> tuple[dict, object]:
+    """Run ``prepare(i)()`` for ``reps`` reps, each inside its own
+    status-store window (setup done by ``prepare`` stays outside it).
+    Returns (entry record, the last call's result)."""
+    acct, runs, result = _Account(spark), [], None
+    for i in range(reps):
+        call = prepare(i)
+        acct.mark()
+        t0 = time.perf_counter()
+        result = call()
+        wall = time.perf_counter() - t0
+        jobs, py = acct.read()
+        runs.append({**totals(jobs), **py, "wall_s": wall})
+    rep = min(runs, key=lambda r: r["executor_cpu_s"])
+    rec = {**rep, "wall_s": min(r["wall_s"] for r in runs)}
+    return {k: round(v, 3) if isinstance(v, float) else v
+            for k, v in rec.items()}, result
+
+
+def measure_query(spark, fn, sf_dir: str, reps: int = REPS) -> dict:
+    """One warm rep of a registry query into the noop sink (codegen
+    compile, first-touch caches), then ``reps`` measured reps."""
+    def run():
+        materialize(fn(spark, sf_dir))
+    run()
+    return measure(spark, reps, lambda i: run)[0]
+
+
+def split_replay_input(spark, tmp_root: str, skew: bool = False):
     """Reference workload shape: 10k rows/day, 30-way fan-out, marker
     protocol, over a 10-day backlog (steady-state catch-up throughput —
     the batched driver amortizes per-job overhead across the backlog).
@@ -217,8 +280,8 @@ def bench_split_replay(spark, tmp_root: str, skew: bool = False) -> tuple[float,
     (SURVEY §4.3): one hot key holds ~50 % of every day's rows, the
     other 29 share the rest — the shape AQE skew-split must absorb
     (plan-level verification lives in ``tests/test_skew_aqe.py``; this
-    makes the throughput cost a tracked number).  Returns
-    (sec, rows_per_sec)."""
+    makes the throughput cost a tracked number).  Writes the input and
+    returns the catch-up call to time."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -248,17 +311,16 @@ def bench_split_replay(spark, tmp_root: str, skew: bool = False) -> tuple[float,
         # single file named <date>.parquet, as the reference expects
         part = [f for f in os.listdir(f"{tmp_root}/stage{i}") if f.endswith(".parquet")][0]
         os.rename(f"{tmp_root}/stage{i}/{part}", f"{in_dir}/{date}.parquet")
-    t0 = time.perf_counter()
-    run_incremental(spark, "bench", in_dir, f"{tmp_root}/out", f"{tmp_root}/markers")
-    dt = time.perf_counter() - t0
-    return dt, N_REPLAY_DAYS * 10_000 / dt
+    return lambda: run_incremental(spark, "bench", in_dir, f"{tmp_root}/out",
+                                   f"{tmp_root}/markers")
 
 
-def bench_compact_replay(spark, tmp_root: str) -> tuple[float, dict]:
+def compact_replay_input(spark, tmp_root: str):
     """Maintenance-path benchmark: compact a fragmented hive-layout
     dataset (10 daily appends × 10k rows × 30 keys — the small-file
     state a month of ``write_partitioned`` dailies leaves behind).
-    Returns (sec, summary with files_before/files_after)."""
+    Writes the dataset and returns the compaction call to time (its
+    result is the summary with files_before/files_after)."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -275,569 +337,111 @@ def bench_compact_replay(spark, tmp_root: str) -> tuple[float, dict]:
         )
         (df.repartition(4).write.mode("append")
          .partitionBy("item_id").parquet(data))
-    t0 = time.perf_counter()
-    summary = compact_dataset(spark, data, partition_by=["item_id"])
-    return time.perf_counter() - t0, summary
+    return lambda: compact_dataset(spark, data, partition_by=["item_id"])
 
 
-def _shuffle_bytes_from_doc(doc: dict) -> dict[str, int]:
-    """Extract per-query shuffle bytes from one BENCH doc, any vintage.
-
-    Three shapes exist: (a) r1-r6 flat/parsed form with a
-    ``shuffle_bytes_written`` name->bytes dict; (b) the r7+ compact form
-    with ``shuffle_kb`` as a list aligned with the ``queries`` dict's
-    key order (kB, or null for streaming/replay entries); (c) a
-    driver-written wrapper whose ``parsed`` is null because the JSON
-    line outgrew the 2000-char ``tail`` capture — recover the block
-    from the tail by regex (the dict sits near the line's end, so it
-    survives front-truncation).
-    """
-    import re
-
-    parsed = doc.get("parsed") or doc  # "parsed": null must not win
-    if isinstance(parsed, dict):
-        prev = parsed.get("shuffle_bytes_written")
-        if isinstance(prev, dict) and prev:
-            return {k: int(v) for k, v in prev.items()
-                    if isinstance(v, (int, float))}
-        kb = parsed.get("shuffle_kb")
-        names = list(parsed.get("queries") or {})
-        if isinstance(kb, list) and len(kb) == len(names):
-            return {n: int(v * 1024) for n, v in zip(names, kb)
-                    if isinstance(v, (int, float))}
-    tail = doc.get("tail") or ""
-    m = re.search(r'shuffle_bytes_written":\s*\{([^{}]*)\}', tail)
-    if m:
-        return {k: int(v) for k, v in
-                re.findall(r'"([^"]+)":\s*(-?\d+)', m.group(1))}
-    m = re.search(r'shuffle_kb":\s*\[([^\[\]]*)\]', tail)
-    mq = re.search(r'"queries":\s*\{([^{}]*)\}', tail)
-    if m and mq:
-        names = re.findall(r'"([^"]+)":', mq.group(1))
-        vals = [v.strip() for v in m.group(1).split(",")]
-        if len(names) == len(vals):
-            return {n: int(float(v) * 1024) for n, v in zip(names, vals)
-                    if v not in ("null", "")}
-    return {}
-
-
-METRICS_FILE = "BENCH_METRICS.json"
+def work_regressions(prev: dict[str, dict],
+                     cur: dict[str, dict]) -> dict[str, dict]:
+    """``{entry: {counter: cur/prev}}`` for every gated counter that
+    moved past its bound.  A counter missing on either side is
+    unarmed for that entry."""
+    out: dict[str, dict] = {}
+    for name, c in cur.items():
+        p, flags = prev.get(name) or {}, {}
+        for key, floor in (("tasks", 1),
+                           ("shuffle_write_bytes", SHUFFLE_GATE_MIN_BYTES)):
+            if key in p and key in c and max(p[key], c[key]) >= floor:
+                r = c[key] / max(p[key], 1)
+                if not COUNT_GATE_RATIO[0] < r < COUNT_GATE_RATIO[1]:
+                    flags[key] = round(r, 3)
+        pc, cc = p.get("executor_cpu_s"), c.get("executor_cpu_s")
+        if pc is not None and cc is not None:
+            r = cc / max(pc, CPU_GATE_MIN_SEC)
+            if r > CPU_GATE_RATIO:
+                flags["executor_cpu_s"] = round(r, 3)
+        if flags:
+            out[name] = flags
+    return out
 
 
 def cap_map(d: dict, k: int = 3) -> dict:
-    """Compact in-line form of a regression map: {name: ratio} for the
-    k most extreme entries (|log ratio|), plus a count marker when
-    truncated.  The stdout line must stay inside the driver's
-    2000-char tail capture even on a round where the gate fires wide —
-    the r8 line ran 1836 chars with EMPTY gate maps, so a handful of
-    verbose entries would null the parse.  Ratios < 1 are speedups
-    (the direction field and prev/cur live in BENCH_METRICS.json's
-    full map, which load_prev_wall prefers anyway, so truncation here
-    never disarms the next round's gate)."""
-    import math
-
-    def ratio(v):
-        return v.get("norm_ratio") or v.get("ratio") or 1.0
-
+    """In-line form of a regression map: the k entries whose most
+    extreme ratio (|log ratio|) is largest, plus a count marker when
+    truncated, so the stdout line stays inside the tail capture even
+    when the gate fires wide (the full map is in BENCH_METRICS.json)."""
     def extremity(item):
-        r = ratio(item[1])
-        return abs(math.log(r)) if r > 0 else float("inf")
+        return max(abs(math.log(r)) if r > 0 else math.inf
+                   for r in item[1].values())
 
-    top = sorted(d.items(), key=extremity, reverse=True)
-    out = {name: ratio(v) for name, v in top[:k]}
+    out = dict(sorted(d.items(), key=extremity, reverse=True)[:k])
     if len(d) > k:
         out["_truncated_n"] = len(d)
     return out
 
 
-def write_metrics_file(repo_dir: str, sf: float, timings: dict[str, float],
-                       shuffle_bytes: dict[str, int],
-                       calibration: list[float],
-                       compact: dict | None = None,
-                       wall_regs: dict | None = None,
-                       shuffle_regs: dict | None = None,
-                       cal_by_query: dict[str, float] | None = None,
-                       wall_anchor: dict[str, dict] | None = None,
-                       anchor_regs: dict | None = None,
-                       baselines: dict | None = None,
-                       loadavg_start: float | None = None,
-                       subtotals: dict | None = None) -> None:
-    """Full-precision per-query metrics, committed alongside the BENCH
-    line.  The stdout line must fit the driver's 2000-char tail
-    capture (BENCH_r06 outgrew it and nearly disarmed the r7 gate), so
-    the byte-exact shuffle map and timings live here and the line
-    stays compact; ``load_prev_shuffle_bytes`` prefers this file and
-    falls back to recovering BENCH_r*.json lines for older rounds."""
+def load_prev_work(repo_dir: str, sf: float, cpus: int) -> dict[str, dict]:
+    """Per-entry counters from the committed BENCH_METRICS.json, or {}
+    when it was measured at another scale or core count (task counts
+    follow the core count; a sanity run must not poison the gate)."""
     try:
         with open(os.path.join(repo_dir, METRICS_FILE)) as f:
-            old_doc = json.load(f)
-        old_sf = old_doc.get("sf")
-        old_load = old_doc.get("loadavg_start")
-    except (OSError, json.JSONDecodeError, ValueError):
-        old_sf = old_load = None
-    if old_sf is not None and old_sf != sf and sf != 0.1:
-        # a local sanity run at a non-canonical scale must not clobber
-        # the committed canonical baseline (next round's gate source)
-        print(f"bench: keeping {METRICS_FILE} (sf={old_sf}); "
-              f"this run is sf={sf}", file=sys.stderr)
+            doc = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    if doc.get("sf") != sf or doc.get("cpus") != cpus:
+        return {}
+    work = doc.get("work")
+    return work if isinstance(work, dict) else {}
+
+
+def unmeasured_entries(doc: dict) -> list[str]:
+    """Entries of a metrics doc missing a gated counter or with no
+    task in their window: a silent accounting failure, which must turn
+    red in tests rather than stay invisible to the gate."""
+    return [n for n, rec in (doc.get("work") or {}).items()
+            if not all(isinstance(rec.get(k), (int, float)) for k in COUNTERS)
+            or rec["tasks"] <= 0]
+
+
+def headline(work: dict[str, dict], sf: float, rates: dict[str, int],
+             regs: dict[str, dict] | None) -> str:
+    """The one stdout line: the slowest entries' wall seconds (the
+    rest counted in ``_omitted_n``), the replay rates and the gate
+    (``regs`` is None when no baseline matched: ``work_over`` null)."""
+    timings = {n: rec["wall_s"] for n, rec in work.items()}
+    top = sorted(timings, key=lambda n: -timings[n])[:_LINE_TOP_QUERIES]
+    line_q = {n: round(timings[n], 2) for n in timings if n in top}
+    if len(timings) > len(line_q):
+        line_q["_omitted_n"] = len(timings) - len(line_q)
+    return json.dumps({
+        "metric": "headline_suite_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": line_q,
+        "sf": sf,
+        **rates,
+        "work_over": None if regs is None else len(regs),
+        "work_regs": cap_map(regs or {}),
+    }, separators=(",", ":"))
+
+
+def write_metrics_file(repo_dir: str, doc: dict) -> None:
+    """Commit-ready per-entry record, the next run's gate baseline.  A
+    run does not replace a baseline measured at another scale or core
+    count (delete the file to re-baseline there)."""
+    path = os.path.join(repo_dir, METRICS_FILE)
+    try:
+        with open(path) as f:
+            old = json.load(f)
+        old = (old.get("sf"), old.get("cpus"))
+    except (OSError, ValueError, AttributeError):
+        old = None
+    if old is not None and old != (doc["sf"], doc["cpus"]):
+        print(f"bench: keeping {METRICS_FILE} (sf, cpus = {old}); this "
+              f"run is {(doc['sf'], doc['cpus'])}", file=sys.stderr)
         return
-    if (old_load is not None and old_load < ANCHOR_FREEZE_MAX_LOAD
-            and loadavg_start is not None
-            and loadavg_start >= ANCHOR_FREEZE_MAX_LOAD
-            and not os.environ.get("SPARK_GRAFT_FORCE_METRICS")):
-        # quiet-baseline guard (VERDICT r15 #2, automated form of
-        # scripts/check_bench_baseline.py): a CONTENDED run must not
-        # overwrite a quiet baseline in place — its inflated walls
-        # would fill wall_regressions with cross-regime phantoms and
-        # poison the next round's gate.  The run's stdout line still
-        # prints (the driver's record of the run); only the committed
-        # baseline file is protected.  SPARK_GRAFT_FORCE_METRICS=1
-        # overrides for a deliberate re-baseline.
-        print(f"bench: keeping quiet {METRICS_FILE} (loadavg_start="
-              f"{old_load}); this run started contended "
-              f"(loadavg_start={loadavg_start:.2f} >= "
-              f"{ANCHOR_FREEZE_MAX_LOAD})", file=sys.stderr)
-        return
-    doc = {"sf": sf,
-           "calibration_sec": [round(c, 3) for c in calibration],
-           "queries": timings,
-           "shuffle_bytes_written": shuffle_bytes,
-           # FULL gate maps (the stdout line carries capped versions)
-           "wall_regressions": wall_regs or {},
-           "shuffle_regressions": shuffle_regs or {},
-           # per-query probe divisor (min of the query's bracketing
-           # segment probes) — next round's per-segment wall baseline
-           "cal_by_query": {k: round(v, 3)
-                            for k, v in (cal_by_query or {}).items()},
-           # frozen first-calibrated-round norms + this run's cumulative
-           # ratio (VERDICT r9 #3); the stdout line carries only the
-           # over-gate COUNT ("anchor_over") for tail-capture headroom
-           "wall_anchor": wall_anchor or {},
-           "anchor_regressions": anchor_regs or {},
-           # which files served as this run's gate baselines (moved off
-           # the stdout line in r10 for headroom)
-           "baselines": baselines or {},
-           # batch/streaming sub-totals (moved off the stdout line in
-           # r12 for headroom — the suite hit 70 entries and the line
-           # outgrew the 2000-char tail capture)
-           "subtotals": subtotals or {},
-           # host contention at run end — context for wall-time
-           # outliers (r5 recorded a 4.83 s min-of-3 for a 0.8 s
-           # query); moved off the stdout line in r9 for headroom
-           "loadavg": [round(x, 2) for x in os.getloadavg()],
-           # names the stdout line's _omitted_n counter cut (the line
-           # keeps only the slowest _LINE_TOP_QUERIES entries) — their
-           # values are in "queries" above; listing the names here
-           # makes the omission greppable (VERDICT r14 #7)
-           "line_omitted": sorted(timings,
-                                  key=lambda k: (-timings[k], k)
-                                  )[_LINE_TOP_QUERIES:]}
-    if loadavg_start is not None:
-        # host state BEFORE the suite warmed up: the anchor-freeze
-        # quiet-host check (< ANCHOR_FREEZE_MAX_LOAD) uses this value,
-        # so record what it saw (bench itself drives loadavg to ~32,
-        # making the end-of-run triple useless for that judgment)
-        doc["loadavg_start"] = round(loadavg_start, 2)
-    if compact:
-        # compaction replay detail (files_before/after) lives here,
-        # not the stdout line — every field on the line costs tail-
-        # capture headroom
-        doc["compact"] = {k: compact.get(k)
-                          for k in ("files_before", "files_after")}
-    with open(os.path.join(repo_dir, METRICS_FILE), "w") as f:
+    with open(path, "w") as f:
         json.dump(doc, f, indent=1, sort_keys=True)
-
-
-def load_prev_shuffle_bytes(repo_dir: str, sf: float | None = None,
-                            ) -> tuple[str | None, dict[str, int]]:
-    """Per-query shuffle bytes from BENCH_METRICS.json (r8+; exact,
-    truncation-proof) or the newest *recoverable* BENCH_r*.json
-    (falling back round by round).
-
-    Shuffle volume is plan-determined and stable across runs, so it is
-    the round-over-round regression signal wall-time is not on a noisy
-    shared host (VERDICT r5 #3 made this executable; VERDICT r6 #2
-    hardened it against driver-written files with ``"parsed": null``
-    and a truncated tail).  ``sf`` guards the metrics file: bytes from
-    a different scale are not a baseline (a local sf0.01 sanity run
-    must not poison the sf0.1 gate) — on mismatch the BENCH_r* path
-    takes over.
-    """
-    import glob
-    import re
-
-    mpath = os.path.join(repo_dir, METRICS_FILE)
-    try:
-        with open(mpath) as f:
-            mdoc = json.load(f)
-        prev = {k: int(v) for k, v in
-                (mdoc.get("shuffle_bytes_written") or {}).items()
-                if isinstance(v, (int, float))}
-        if prev and (sf is None or mdoc.get("sf") == sf):
-            return METRICS_FILE, prev
-    except (OSError, json.JSONDecodeError, ValueError):
-        pass
-
-    rounds: list[tuple[int, str]] = []
-    for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            rounds.append((int(m.group(1)), p))
-    newest_name = None
-    for _, path in sorted(rounds, reverse=True):
-        if newest_name is None:
-            newest_name = os.path.basename(path)
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-            prev = _shuffle_bytes_from_doc(doc)
-        except Exception:
-            continue
-        if prev:
-            return os.path.basename(path), prev
-    return newest_name, {}
-
-
-def _timings_from_doc(doc: dict) -> dict[str, float]:
-    """Per-query wall seconds from one BENCH doc (parsed dict, or the
-    tail-regex fallback for a driver-truncated line)."""
-    import re
-
-    parsed = doc.get("parsed") or doc
-    if isinstance(parsed, dict):
-        q = parsed.get("queries")
-        if isinstance(q, dict) and q:
-            # "_omitted_n" (r12 line cap) is a marker, not a timing
-            return {k: float(v) for k, v in q.items()
-                    if isinstance(v, (int, float))
-                    and not k.startswith("_")}
-    tail = doc.get("tail") or ""
-    m = re.search(r'"queries":\s*\{([^{}]*)\}', tail)
-    if m:
-        return {k: float(v) for k, v in
-                re.findall(r'"([^"]+)":\s*([\d.]+)', m.group(1))
-                if not k.startswith("_")}
-    return {}
-
-
-def _calibration_from_doc(doc: dict) -> float | None:
-    """Min calibration-probe seconds from one BENCH doc (contention
-    only adds time, so min is the host-speed estimate), or None for
-    rounds that predate the probe (r7 and earlier)."""
-    import re
-
-    parsed = doc.get("parsed") or doc
-    if isinstance(parsed, dict):
-        cal = parsed.get("calibration_sec")
-        if isinstance(cal, list) and cal:
-            return float(min(cal))
-    m = re.search(r'"calibration_sec":\s*\[([^\]]*)\]', doc.get("tail") or "")
-    if m:
-        vals = [float(v) for v in m.group(1).split(",") if v.strip()]
-        if vals:
-            return float(min(vals))
-    return None
-
-
-def load_prev_wall(repo_dir: str, sf: float | None = None,
-                   ) -> tuple[str | None, dict[str, float], float | None]:
-    """(file, per-query seconds, calibration min) — preferring the
-    committed BENCH_METRICS.json (full precision, truncation-proof),
-    falling back to the newest recoverable BENCH_r*.json.
-
-    ``sf`` guards BOTH sources the same way as
-    ``load_prev_shuffle_bytes``: timings from a different scale are
-    not a wall baseline (a local sf0.01 sanity run must not normalize
-    against the sf0.1 driver numbers and emit spurious regressions).
-    BENCH_r*.json lines always record their sf, so the guard applies
-    there too — a non-canonical local run simply disarms the gate
-    rather than poisoning it."""
-    import glob
-    import re
-
-    mpath = os.path.join(repo_dir, METRICS_FILE)
-    try:
-        with open(mpath) as f:
-            mdoc = json.load(f)
-        timings = {k: float(v) for k, v in (mdoc.get("queries") or {}).items()
-                   if isinstance(v, (int, float))}
-        cal = mdoc.get("calibration_sec")
-        cal = float(min(cal)) if isinstance(cal, list) and cal else None
-        if timings and (sf is None or mdoc.get("sf") == sf):
-            return METRICS_FILE, timings, cal
-    except (OSError, json.JSONDecodeError, ValueError):
-        pass
-
-    rounds: list[tuple[int, str]] = []
-    for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            rounds.append((int(m.group(1)), p))
-    for _, path in sorted(rounds, reverse=True):
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-            timings = _timings_from_doc(doc)
-            doc_sf = _sf_from_doc(doc)
-        except Exception:
-            continue
-        if timings and (sf is None or doc_sf is None or doc_sf == sf):
-            return os.path.basename(path), timings, _calibration_from_doc(doc)
-    return None, {}, None
-
-
-def _sf_from_doc(doc: dict) -> float | None:
-    """Scale factor recorded in one BENCH doc, or None if unparseable
-    (old rounds are all sf0.1 driver runs, so None is treated as a
-    match by load_prev_wall rather than discarding the baseline)."""
-    import re
-
-    parsed = doc.get("parsed") or doc
-    if isinstance(parsed, dict) and isinstance(parsed.get("sf"),
-                                               (int, float)):
-        return float(parsed["sf"])
-    m = re.search(r'"sf":\s*([\d.]+)', doc.get("tail") or "")
-    return float(m.group(1)) if m else None
-
-
-# a ±20 % move on a plan-determined byte count is a plan change, not
-# noise; sub-4 kB shuffles are skipped (single-batch compression jitter)
-SHUFFLE_GATE_RATIO = (0.8, 1.25)
-SHUFFLE_GATE_MIN_BYTES = 4096
-
-# a 1.5x move in CALIBRATION-NORMALIZED time is a real slowdown even on
-# a noisy host; sub-0.3 s entries are codegen-compile noise.  The gate
-# arms only when BOTH rounds carry the probe (raw wall-clock is not a
-# signal: r6->r7 moved uniformly 1.6x with zero plan change).
-WALL_GATE_RATIO = 1.5
-WALL_GATE_MIN_SEC = 0.3
-
-# cumulative cross-round anchor (VERDICT r9 #3): the per-round gate's
-# three forgiveness layers (segment normalization, both-or-neither,
-# retest-min-of-2) are each justified, but their COMPOSITION is
-# memoryless — a genuine ~1.3x/round creep can ride inside the noise
-# band for several rounds.  Each query's calibrated normalized time
-# (t / bracketing-probe-min) is FROZEN the first round it is measured;
-# every later round compares against that anchor.  The per-round
-# ratios telescope into exactly this product, so 1.3 x 1.3 x 1.3 = 2.2
-# trips at round 3 even though every individual round stayed under the
-# 1.5x per-round gate, while round-local noise (1.3x then 0.8x)
-# cancels out.  Re-anchor deliberately (a justified plan change) by
-# deleting the query's wall_anchor entry from BENCH_METRICS.json.
-#
-# Regime robustness (VERDICT r11 #1): an anchor frozen against
-# CONTENDED probes (r9-era bursts ran 0.85-0.9 s where a quiet host
-# runs 0.44-0.50 s) doubles every compute-bound query's norm the
-# moment the host quiets, because a lambda-fold query's wall does not
-# track probe wall across contention regimes.  So each anchor now
-# freezes the RAW wall and the PROBE floor alongside the norm, and the
-# gate fires only when the norm ratio AND the raw-wall ratio agree
-# (both > ANCHOR_GATE_RATIO): a probe-regime shift moves the norm but
-# not the raw wall; uniform host contention moves the raw wall but not
-# the norm; only a real code regression moves both.  New anchors
-# freeze only on a quiet host (loadavg < ANCHOR_FREEZE_MAX_LOAD at
-# suite start) — a contended first sighting would bake the regime
-# defect right back in.
-ANCHOR_GATE_RATIO = 2.0
-# re-exported from the dependency-free module so the commit gate
-# (scripts/check_bench_baseline.py) can read it without importing
-# pyspark (ADVICE r14); bench-side users keep this name
-from bench_constants import ANCHOR_FREEZE_MAX_LOAD  # noqa: E402,F401
-
-# stdout-line cap: the slowest N queries appear on the ONE JSON line
-# (plus an _omitted_n count); the full map lives in BENCH_METRICS.json.
-# 45 x ~26 chars + fixed fields ≈ 1500 chars — safely inside the
-# driver's 2000-char tail capture with several rounds of growth room.
-_LINE_TOP_QUERIES = 45
-
-
-def wall_regressions(prev_t: dict[str, float], prev_cal: float | None,
-                     cur_t: dict[str, float], cur_cal: float | None,
-                     prev_cal_map: dict[str, float] | None = None,
-                     cur_cal_map: dict[str, float] | None = None,
-                     ) -> dict[str, dict]:
-    """Per-SEGMENT normalization when both rounds carry the per-query
-    probe map (r9+): the suite-min probe misses contention bursts
-    hitting one stretch of the run (the r9 armed-gate shakedown:
-    segment probes 0.56/0.85/0.36 within one run flagged 13 queries
-    the suite-min said were slow on a 'fast' host).  Each query
-    divides by the min of its bracketing probes; rounds without the
-    map fall back to the suite min."""
-    if not prev_cal or not cur_cal:
-        return {}
-    out: dict[str, dict] = {}
-    for name, cur in cur_t.items():
-        prev = prev_t.get(name)
-        if prev is None or prev < WALL_GATE_MIN_SEC or cur < WALL_GATE_MIN_SEC:
-            continue
-        pc = (prev_cal_map or {}).get(name)
-        cc = (cur_cal_map or {}).get(name)
-        if not pc or not cc:
-            # segment-normalize only when BOTH rounds carry the
-            # query's probe: mixing a local divisor on one side with
-            # a suite-min on the other is systematically biased
-            # whenever host speed varies within a run (the exact
-            # condition segments exist for)
-            pc, cc = prev_cal, cur_cal
-        ratio = (cur / cc) / (prev / pc)
-        if ratio > WALL_GATE_RATIO or ratio < 1 / WALL_GATE_RATIO:
-            # >1.5x speedups are flagged too (a plan change worth
-            # noticing), but labeled so they don't read as regressions
-            out[name] = {"prev": prev, "cur": cur,
-                         "norm_ratio": round(ratio, 3),
-                         "direction": "slower" if ratio > 1 else "faster"}
-    return out
-
-
-def load_prev_anchor(repo_dir: str, sf: float | None = None,
-                     ) -> dict[str, dict]:
-    """Frozen per-query anchors from the committed BENCH_METRICS.json:
-    ``{name: {"norm": t/probe, "raw": t, "probe": probe}}``, all frozen
-    at first quiet-host sighting.  Legacy entries (pre-r12) carry only
-    ``norm``; ``raw``/``probe`` are then absent and the gate falls back
-    to norm-only for them until a deliberate re-freeze.  Same sf guard
-    as the other baseline loaders."""
-    try:
-        with open(os.path.join(repo_dir, METRICS_FILE)) as f:
-            mdoc = json.load(f)
-        if sf is not None and mdoc.get("sf") != sf:
-            return {}
-        m = mdoc.get("wall_anchor")
-        if not isinstance(m, dict):
-            return {}
-        out = {}
-        for k, v in m.items():
-            norm = v.get("norm") if isinstance(v, dict) else v
-            if not (isinstance(norm, (int, float)) and norm > 0):
-                continue
-            entry = {"norm": float(norm)}
-            if isinstance(v, dict):
-                for fld in ("raw", "probe"):
-                    fv = v.get(fld)
-                    if isinstance(fv, (int, float)) and fv > 0:
-                        entry[fld] = float(fv)
-            out[k] = entry
-        return out
-    except (OSError, json.JSONDecodeError, ValueError):
-        return {}
-
-
-def update_wall_anchor(prev_anchor: dict[str, dict],
-                       cur_t: dict[str, float],
-                       cur_cal_map: dict[str, float],
-                       freeze_ok: bool = True,
-                       ) -> tuple[dict[str, dict], dict[str, dict]]:
-    """(new anchor map, cumulative regressions).
-
-    The anchor map stores, per query, the FROZEN first-sighting triple
-    — ``norm`` (t/probe), ``raw`` (wall seconds), ``probe`` (the
-    bracketing-probe floor) — passed through unchanged on every later
-    run (so local bench re-runs cannot random-walk it), plus this
-    run's cumulative ratios against it (``cum`` = norm ratio,
-    ``raw_ratio`` = wall ratio — informational).
-
-    Gate (VERDICT r11 #1 — the regime-robust form): an entry flags
-    only when ``cum`` AND ``raw_ratio`` BOTH exceed
-    ``ANCHOR_GATE_RATIO`` on a gate-worthy wall time.  A probe-regime
-    shift (quiet host after a contended freeze) moves cum but not
-    raw_ratio; uniform host contention moves raw_ratio but not cum;
-    only a genuine code slowdown moves both.  Legacy norm-only anchors
-    (no frozen raw) gate on cum alone until re-frozen.
-
-    ``freeze_ok=False`` (contended host at suite start) skips CREATING
-    anchors for queries that have none — a burst-inflated first
-    sighting is exactly the calibration-regime defect — while existing
-    anchors still grade normally."""
-    anchor: dict[str, dict] = {}
-    regs: dict[str, dict] = {}
-    for name, t in cur_t.items():
-        cal = cur_cal_map.get(name)
-        if not cal or cal <= 0:
-            continue
-        cur_norm = t / cal
-        prev = prev_anchor.get(name)
-        if prev is None:
-            if not freeze_ok:
-                continue  # wait for a quiet host to freeze this one
-            anchor[name] = {"norm": round(cur_norm, 4), "raw": round(t, 3),
-                            "probe": round(cal, 3), "cum": 1.0,
-                            "raw_ratio": 1.0}
-            continue
-        base = prev["norm"]
-        cum = cur_norm / base if base else 1.0
-        raw0 = prev.get("raw")
-        raw_ratio = t / raw0 if raw0 else None
-        entry = {"norm": round(base, 4), "cum": round(cum, 3)}
-        if raw0:
-            entry["raw"] = round(raw0, 3)
-            entry["raw_ratio"] = round(raw_ratio, 3)
-        if prev.get("probe"):
-            entry["probe"] = round(prev["probe"], 3)
-        anchor[name] = entry
-        both_over = cum > ANCHOR_GATE_RATIO and (
-            raw_ratio is None or raw_ratio > ANCHOR_GATE_RATIO)
-        if both_over and t >= WALL_GATE_MIN_SEC \
-                and base * cal >= WALL_GATE_MIN_SEC:
-            regs[name] = {"cum": round(cum, 3), "anchor_norm": round(base, 4),
-                          "cur_norm": round(cur_norm, 4)}
-            if raw_ratio is not None:
-                regs[name]["raw_ratio"] = round(raw_ratio, 3)
-    return anchor, regs
-
-
-def load_prev_cal_map(repo_dir: str, sf: float | None = None,
-                      ) -> dict[str, float]:
-    """Per-query calibration divisors from the committed
-    BENCH_METRICS.json (r9+; empty for earlier rounds — the gate then
-    falls back to the suite-min probe).  Same sf guard as the other
-    baseline loaders."""
-    try:
-        with open(os.path.join(repo_dir, METRICS_FILE)) as f:
-            mdoc = json.load(f)
-        if sf is not None and mdoc.get("sf") != sf:
-            return {}
-        m = mdoc.get("cal_by_query")
-        return ({k: float(v) for k, v in m.items()
-                 if isinstance(v, (int, float)) and v > 0}
-                if isinstance(m, dict) else {})
-    except (OSError, json.JSONDecodeError, ValueError):
-        return {}
-
-
-def unmeasured_batch_entries(doc: dict, tags_by_name: dict[str, tuple],
-                             ) -> list[str]:
-    """Batch registry entries in a BENCH doc with NO shuffle
-    measurement (VERDICT r7 #6): streaming entries and the synthetic
-    replay/compact rows are unmeasured by design, but a None/-1 on any
-    other entry is a silent metrics failure and must turn red in
-    tests, not stay invisible to the gate."""
-    parsed = doc.get("parsed") or doc
-    names = list(parsed.get("queries") or {}) if isinstance(parsed, dict) \
-        else []
-    got = _shuffle_bytes_from_doc(doc)
-    out = []
-    for n in names:
-        if n not in tags_by_name:        # split/compact replay rows
-            continue
-        if "streaming" in tags_by_name[n]:
-            continue
-        if got.get(n, -1) < 0:
-            out.append(n)
-    return out
-
-
-def shuffle_regressions(prev: dict[str, int],
-                        cur: dict[str, int]) -> dict[str, dict]:
-    out: dict[str, dict] = {}
-    for name, cur_b in cur.items():
-        prev_b = prev.get(name)
-        if prev_b is None or prev_b < SHUFFLE_GATE_MIN_BYTES or cur_b < 0:
-            continue
-        ratio = cur_b / prev_b if prev_b else float("inf")
-        if not (SHUFFLE_GATE_RATIO[0] <= ratio <= SHUFFLE_GATE_RATIO[1]):
-            out[name] = {"prev": prev_b, "cur": cur_b,
-                         "ratio": round(ratio, 3)}
-    return out
 
 
 def main() -> None:
@@ -846,234 +450,51 @@ def main() -> None:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         sf = 0.0  # non-standard dir name; don't lose the run's output
-    # host state before any Spark work: the anchor-freeze guard
-    # (VERDICT r11 #1 / quiet-host protocol) — new anchors may only be
-    # frozen when the suite STARTS on a quiet host
-    loadavg_start = os.getloadavg()[0]
-    freeze_ok = loadavg_start < ANCHOR_FREEZE_MAX_LOAD
 
     reg = load_all_modules()
     spark = get_spark("bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     # warm the JVM/codegen path once with a trivial action
     spark.range(1000).count()
 
-    # host-speed probe #1 (suite start) — see calibration_probe.  One
-    # untimed warm run first: the probe's own codegen compile (~3 s
-    # cold) would otherwise masquerade as a slow host.  r9: a probe
-    # every PROBE_EVERY entries (not just start/middle/end) — the
-    # armed-gate shakedown showed intra-run contention bursts
-    # (probes 0.56/0.85/0.36 within ONE run) that a suite-min divisor
-    # cannot localize; each query normalizes by its own segment.
-    calibration_probe(spark)
-    calibration = [calibration_probe(spark)]
-    seg_of: dict[str, int] = {}
+    work: dict[str, dict] = {}
+    for name in BENCH_QUERIES:
+        work[name] = measure_query(spark, reg[name].fn, sf_dir)
 
-    timings: dict[str, float] = {}
-    shuffle_bytes: dict[str, int] = {}
-    for qi, name in enumerate(BENCH_QUERIES):
-        if qi and qi % PROBE_EVERY == 0:
-            calibration.append(calibration_probe(spark))
-        seg_of[name] = len(calibration) - 1
-        best = float("inf")
-        # min-of-3 (streaming: 2 — each run drains a real stream): the
-        # first run pays codegen compile, and one spare absorbs host
-        # CPU-steal bursts that produced false 3-5x "regressions" on
-        # min-of-2 (r5: bm25 0.9 s real, 2.4 s recorded)
-        runs = 2 if "streaming" in reg[name].tags else 3
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            materialize(reg[name].fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-        # one extra metrics pass (not timed): shuffle volume is stable
-        # across runs, so it is the regression signal wall-time is not
-        # on a noisy shared host.  Streaming entries are excluded: their
-        # fn() runs the stream eagerly and returns the drained memory
-        # sink, whose plan has no exchange — the metrics would measure
-        # the sink read (~0 bytes), not the streaming job, while paying
-        # a full extra stream run.
-        if "streaming" in reg[name].tags:
-            continue
-        try:
-            _, summary = run_with_metrics(reg[name].fn(spark, sf_dir))
-            shuffle_bytes[name] = summary["shuffle_bytes_written"]
-        except Exception:
-            shuffle_bytes[name] = -1  # metrics are best-effort
-
-    # probe after the query loop, before the replays (closes the last
-    # query segment; opens the replay segment)
-    calibration.append(calibration_probe(spark))
-    replay_seg = len(calibration) - 1
-
-    # min-of-3: the replay is one number the judge tracks round-over-round;
-    # a single run was too exposed to host CPU-steal bursts (BENCH_r02).
-    best_sec, best_rate = float("inf"), 0.0
-    for i in range(3):
-        sec, rate = bench_split_replay(spark, f"/tmp/bench_split{i}")
-        if sec < best_sec:
-            best_sec, best_rate = sec, rate
-    timings[f"split_replay_{N_REPLAY_DAYS}x10k"] = round(best_sec, 3)
-
-    # skewed variant: min-of-2 (it shares the uniform replay's warmed
-    # code paths, so the first run is already representative)
-    skew_sec, skew_rate = float("inf"), 0.0
-    for i in range(2):
-        sec, rate = bench_split_replay(spark, f"/tmp/bench_skew{i}", skew=True)
-        if sec < skew_sec:
-            skew_sec, skew_rate = sec, rate
-    timings[f"split_replay_skew_{N_REPLAY_DAYS}x10k"] = round(skew_sec, 3)
-
-    compact_sec, compact_summary = float("inf"), {}
-    for i in range(2):
-        sec, summary = bench_compact_replay(spark, f"/tmp/bench_compact{i}")
-        if sec < compact_sec:
-            compact_sec, compact_summary = sec, summary
-    timings[f"compact_replay_{N_REPLAY_DAYS}x10k"] = round(compact_sec, 3)
-
-    # suite-end probe (closes the replay segment)
-    calibration.append(calibration_probe(spark))
-    for rname in (f"split_replay_{N_REPLAY_DAYS}x10k",
-                  f"split_replay_skew_{N_REPLAY_DAYS}x10k",
-                  f"compact_replay_{N_REPLAY_DAYS}x10k"):
-        seg_of[rname] = replay_seg
+    # replays: fresh input per rep, written outside the window.  The
+    # uniform replay is min-of-3 (one number tracked run over run); the
+    # skew and compact replays share its warmed paths, so min-of-2.
+    rates = {}
+    for skew, reps in ((False, 3), (True, 2)):
+        tag = "skew_" if skew else ""
+        name = f"split_replay_{tag}{N_REPLAY_DAYS}x10k"
+        work[name], _ = measure(spark, reps, lambda i: split_replay_input(
+            spark, f"/tmp/bench_split_{tag}{i}", skew))
+        rates[f"split_replay_{tag}rows_per_sec"] = round(
+            N_REPLAY_DAYS * 10_000 / work[name]["wall_s"])
+    name = f"compact_replay_{N_REPLAY_DAYS}x10k"
+    work[name], compact = measure(
+        spark, 2, lambda i: compact_replay_input(spark, f"/tmp/bench_compact{i}"))
 
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prev_file, prev_bytes = load_prev_shuffle_bytes(repo_dir, sf)
-    regressions = shuffle_regressions(prev_bytes, shuffle_bytes)
-
-    # per-query divisor: min of the query's bracketing probes
-    # (contention only ever ADDS time, so min is the cleanest local
-    # host-speed estimate); suite min stays the no-map fallback
-    cal_by_query = {n: float(min(calibration[s], calibration[s + 1]))
-                    for n, s in seg_of.items()}
-    cur_cal = float(min(calibration))
-    wall_file, prev_t, prev_cal = load_prev_wall(repo_dir, sf)
-    prev_cal_map = load_prev_cal_map(repo_dir, sf)
-    wregs = wall_regressions(prev_t, prev_cal, timings, cur_cal,
-                             prev_cal_map, cal_by_query)
-
-    # retest-on-regression: a flagged slowdown must SURVIVE a fresh
-    # re-measurement (min-of-2 query runs against its own min-of-2
-    # probe) to be reported — segment probes bracket at 10-entry
-    # granularity, so a sub-segment contention burst can still pin a
-    # marginal 1.6x on one query (observed flapping 1.67 -> 0.63
-    # across back-to-back runs).  A real plan regression reproduces;
-    # a burst does not.  Capped at 5 retests; 'faster' entries are
-    # baseline-side observations and cannot be retested here.
-    retest = [n for n, e in wregs.items()
-              if isinstance(e, dict) and e.get("direction") == "slower"
-              and n in reg][:5]
-    for name in retest:
-        cal_r = min(calibration_probe(spark), calibration_probe(spark))
-        t_r = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            materialize(reg[name].fn(spark, sf_dir))
-            t_r = min(t_r, time.perf_counter() - t0)
-        # a (time, probe) PAIR is one observation of the query on one
-        # host state — t and cal must move TOGETHER, in the basis the
-        # gate will actually use for this entry.  Map basis (both
-        # rounds carry the probe): accept the pair with the lower
-        # normalized value.  Mapless fallback (r8-style baseline):
-        # the gate divides by the SUITE-min probe, so only a raw-time
-        # improvement is an improvement — accepting a
-        # normalized-better/raw-worse retest there would divide a
-        # contention-inflated t_r by the suite's fastest probe, the
-        # exact mixing the both-maps rule exists to prevent.
-        if prev_cal_map.get(name):
-            if t_r / cal_r < timings[name] / cal_by_query.get(name, cur_cal):
-                timings[name] = round(t_r, 3)
-                cal_by_query[name] = cal_r
-        elif t_r < timings[name]:
-            timings[name] = round(t_r, 3)
-            cal_by_query[name] = cal_r
-    if retest:
-        wregs = wall_regressions(prev_t, prev_cal, timings, cur_cal,
-                                 prev_cal_map, cal_by_query)
-
-    # cumulative cross-round anchor (computed AFTER retests so a
-    # contention burst doesn't enter the telescoped product)
-    prev_anchor = load_prev_anchor(repo_dir, sf)
-    wall_anchor, anchor_regs = update_wall_anchor(prev_anchor, timings,
-                                                  cal_by_query, freeze_ok)
-    unfrozen = [n for n in timings
-                if n in cal_by_query and n not in wall_anchor]
-    if unfrozen:
-        print(f"bench: {len(unfrozen)} entries left UNANCHORED "
-              f"(loadavg_start {loadavg_start:.2f} >= "
-              f"{ANCHOR_FREEZE_MAX_LOAD} — freeze needs a quiet host): "
-              f"{' '.join(sorted(unfrozen)[:8])}", file=sys.stderr)
-
-    total = round(sum(timings.values()), 3)
-    # streaming queries carry fixed micro-batch overhead that is noise
-    # relative to batch plan changes — report them in a separate
-    # sub-total so batch regressions aren't masked (VERDICT r3 #8);
-    # both sub-totals live in BENCH_METRICS.json since r12 (headroom)
-    streaming_names = {n for n in timings
-                       if n in reg and "streaming" in reg[n].tags}
-    streaming_sec = round(sum(timings[n] for n in streaming_names), 3)
-
-    write_metrics_file(repo_dir, sf, timings, shuffle_bytes, calibration,
-                       compact_summary, wregs, regressions, cal_by_query,
-                       wall_anchor, anchor_regs,
-                       {"shuffle": prev_file, "wall": wall_file},
-                       loadavg_start,
-                       {"batch_suite_sec": round(total - streaming_sec, 3),
-                        "streaming_suite_sec": streaming_sec})
-    # the per-query shuffle-byte map lives in BENCH_METRICS.json, not
-    # the stdout line: the old in-line forms (name->bytes dict, then a
-    # kB list) kept outgrowing the driver's 2000-char tail capture as
-    # the suite widened (BENCH_r06 "parsed": null nearly disarmed the
-    # r7 gate; the r8 additions pushed the kB-list form past 2000 too).
-    # load_prev_shuffle_bytes prefers the file and still recovers the
-    # older in-line forms round-by-round.
-    # the LINE carries the slowest entries only (r12: the 70-entry
-    # suite pushed the full map to 2226 chars, past the driver's
-    # 2000-char tail capture — the exact "parsed": null failure r7
-    # documented); BENCH_METRICS.json keeps the full-precision full
-    # map the next round's gate and the judge prefer.  _omitted_n
-    # records how many (all faster) entries were cut.
-    line_top = dict(sorted(timings.items(),
-                           key=lambda kv: -kv[1])[:_LINE_TOP_QUERIES])
-    line_q = {k: round(v, 2) for k, v in timings.items() if k in line_top}
-    if len(timings) > len(line_q):
-        line_q["_omitted_n"] = len(timings) - len(line_q)
-    print(json.dumps({
-        "metric": "headline_suite_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": line_q,
+    prev = load_prev_work(repo_dir, sf, cpus)
+    regs = work_regressions(prev, work) if prev else None
+    streaming = sum(rec["wall_s"] for n, rec in work.items()
+                    if n in reg and "streaming" in reg[n].tags)
+    total = sum(rec["wall_s"] for rec in work.values())
+    write_metrics_file(repo_dir, {
         "sf": sf,
-        "split_replay_rows_per_sec": round(best_rate),
-        "split_replay_skew_rows_per_sec": round(skew_rate),
-        "shuffle_regressions": cap_map(regressions),
-        # probe summary [min] — tail-recovery takes min() of this list;
-        # the full per-segment list, the per-query divisor map, the
-        # median/max spread, AND the gate-baseline filenames all live
-        # in BENCH_METRICS.json (r10 moved more off the line: every
-        # field costs tail-capture headroom and r10's new entries
-        # needed the chars)
-        "calibration_sec": [round(min(calibration), 3)],
-        # per-round wall flags are INFORMATIONAL (count only): three
-        # rounds of adjudicating phantom per-round flags (r8-r10, all
-        # host noise) vs zero false positives from the cumulative
-        # anchor made anchor_over the decision signal (VERDICT r10
-        # #8); the full wall_regressions map stays in
-        # BENCH_METRICS.json for diagnosis
-        "wall_over": len(wregs),
-        # cumulative-anchor gate: count of queries whose calibrated
-        # time AND raw wall both exceed 2x their frozen anchor (full
-        # map in BENCH_METRICS.json "anchor_regressions")
-        "anchor_over": len(anchor_regs),
-        # context for flagged entries so a flagged round is
-        # self-adjudicating under the driver's tail cap (VERDICT r11
-        # #9): top-3 by cum, each as [cum, raw_ratio]
-        "anchor_regs": {
-            n: [v["cum"], v.get("raw_ratio")]
-            for n, v in sorted(anchor_regs.items(),
-                               key=lambda kv: -kv[1]["cum"])[:3]},
-    }, separators=(",", ":")))
+        "cpus": cpus,
+        "work": work,
+        "work_regressions": regs,
+        # streaming entries carry fixed micro-batch overhead: their
+        # sub-total is kept apart so batch moves are not masked
+        "subtotals": {"batch_suite_sec": round(total - streaming, 3),
+                      "streaming_suite_sec": round(streaming, 3)},
+        "compact": {k: compact.get(k) for k in ("files_before", "files_after")},
+    })
+    print(headline(work, sf, rates, regs))
 
 
 if __name__ == "__main__":

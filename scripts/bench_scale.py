@@ -4,9 +4,10 @@ heavy bench entries at the CURRENT core count on a LARGER-than-sf0.1
 dataset, so 8-vs-32-core ratios carry a parallelism signal (at sf0.1
 every entry is scheduling-overhead-bound and all ratios sit at ~1).
 
-Same methodology as bench.py (noop sink, min-of-2 after one warm rep,
-bracketing calibration probes), same env contract
-($SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS), one JSON line on stdout.
+Same methodology as bench.py (noop sink, one warm rep, then min-of-2
+timed reps, each read from its own status-store window), same env
+contract ($SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS), one JSON line on
+stdout with each query's wall, executor-CPU seconds and task count.
 Run once per core count:
 
     python scripts/gen_scale_data.py /tmp/scale/sf1 10
@@ -22,11 +23,10 @@ baseline): it is a separate probe, not the canonical bench.
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import calibration_probe, materialize  # noqa: E402
+from bench import measure_query  # noqa: E402
 from glue_parquet_splitter_spark.queries import load_all_modules  # noqa: E402
 from glue_parquet_splitter_spark.session import get_spark  # noqa: E402
 
@@ -53,26 +53,19 @@ def main() -> None:
     reg = load_all_modules()
     spark = get_spark("bench_scale")
     spark.range(1000).count()
-    calibration_probe(spark)
-    cal = [calibration_probe(spark)]
-    timings = {}
+    work = {}
     for name in SCALE_QUERIES:
         spark.sparkContext.setJobDescription(f"scale probe: {name}")
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            materialize(reg[name].fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-    cal.append(calibration_probe(spark))
+        work[name] = measure_query(spark, reg[name].fn, sf_dir, reps=2)
     print(json.dumps({
         "metric": "scale_probe_sec",
-        "value": round(sum(timings.values()), 3),
+        "value": round(sum(r["wall_s"] for r in work.values()), 3),
         "unit": "sec",
         "cpus": cpus,
         "sf_dir": sf_dir,
-        "calibration_sec": [round(c, 3) for c in cal],
-        "queries": timings,
+        "queries": {n: r["wall_s"] for n, r in work.items()},
+        "executor_cpu_s": {n: r["executor_cpu_s"] for n, r in work.items()},
+        "tasks": {n: r["tasks"] for n, r in work.items()},
     }, separators=(",", ":")))
 
 

@@ -1,7 +1,10 @@
 #!/usr/bin/env python
-"""Profile one or more registry queries: executed wall time (min of N),
-SQLMetrics summary (scan rows/bytes/files, shuffle records/bytes,
-spills), and optionally the AQE-final physical plan.
+"""Profile one or more registry queries into the noop sink: one warm
+run, then N measured runs, printing the wall-time minimum and the work
+Spark's status store recorded for the lowest-CPU run (jobs, stages,
+tasks, executor run/CPU/GC seconds, shuffle and spill bytes, task
+skew, Python-worker time; the same window bench.py gates on), and
+optionally the AQE-final physical plan.
 
 Usage:
   python scripts/profile_query.py name [name ...] [--sf-dir DIR] [--plan] [--n 3]
@@ -13,12 +16,12 @@ shape moved the way the docstring says they should.
 """
 
 import argparse
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from glue_parquet_splitter_spark.observability import run_with_metrics  # noqa: E402
+from bench import measure_query  # noqa: E402
 from glue_parquet_splitter_spark.plans import physical_plan  # noqa: E402
 from glue_parquet_splitter_spark.queries import load_all_modules  # noqa: E402
 from glue_parquet_splitter_spark.session import get_spark  # noqa: E402
@@ -46,16 +49,9 @@ def main():
     spark = get_spark("profile_query")
     for name in names:
         spec = reg[name]
-        best_t, best_m = None, None
-        for _ in range(n_runs):
-            df = spec.fn(spark, sf_dir)
-            t0 = time.time()
-            _rows, m = run_with_metrics(df)
-            dt = time.time() - t0
-            if best_t is None or dt < best_t:
-                best_t, best_m = dt, m
-        print(f"== {name}  {best_t:.3f}s (min of {n_runs}) @ {sf_dir}")
-        for k, v in best_m.items():
+        work = measure_query(spark, spec.fn, sf_dir, reps=n_runs)
+        print(f"== {name}  {work['wall_s']:.3f}s (min of {n_runs}) @ {sf_dir}")
+        for k, v in work.items():
             print(f"   {k:>24}: {v:,}")
         if show_plan:
             print(physical_plan(spec.fn(spark, sf_dir)))
