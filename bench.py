@@ -278,10 +278,8 @@ def split_replay_input(spark, tmp_root: str, skew: bool = False):
 
     ``skew=True`` plants the real-world ``item_id`` distribution
     (SURVEY §4.3): one hot key holds ~50 % of every day's rows, the
-    other 29 share the rest — the shape AQE skew-split must absorb
-    (plan-level verification lives in ``tests/test_skew_aqe.py``; this
-    makes the throughput cost a tracked number).  Writes the input and
-    returns the catch-up call to time."""
+    other 29 share the rest, so one output file per day holds half its
+    rows.  Writes the input and returns the catch-up call to time."""
     import shutil
 
     from pyspark.sql import functions as F

@@ -9,22 +9,23 @@ Reproduces the reference's lifecycle
 4. read the missing days → split by key → write            (O7-O16)
 5. commit one JSON marker per day                          (O18)
 
-Steps 4-5 are one function, :func:`_split_days`: it reads the given
-days in one scan, writes them with one Spark job and builds each day's
-marker in one place for every manifest mode and layout.  The whole
-backlog goes through it at once; when that read or job fails, it runs
-again on each day alone, so a bad file skips only its own day.  A day
-run alone reads its footer first: an unreadable file is skipped before
-any job, so a failure of the job itself is a write error and raises.
+Steps 4-5 are one function, :func:`_split_days`: it splits the given
+days and builds each day's marker in one place for every manifest mode
+and layout.  For the exact layout the whole backlog is one job of at
+most ``defaultParallelism`` Python tasks (:func:`~.splitter.split_files`):
+each task reads its own day files with pyarrow and writes one file per
+key, so every output keeps its own day file's schema.  The Hive layout
+goes day by day, one Spark read and ``partitionBy`` write each.
 
 Listing uses the Hadoop FileSystem API so the same code handles
 ``file://``, ``hdfs://`` and ``s3a://``.  The scheduling set-difference
 runs driver-side on listings (metadata, thousands of entries — the same
 place Spark's own file index does this work); the *data* path is fully
-distributed.  Error taxonomy preserved: missing or corrupt file →
-warn+skip that day, empty file → skip with no marker, all-null-key day
-→ empty marker, day with rows but no key column → hard fail, write
-failure → raised, with no marker for the day (so a re-run redoes it).
+distributed.  Error taxonomy preserved: missing file or unreadable
+footer → warn+skip that day, empty file → skip with no marker,
+all-null-key day → empty marker, day with rows but no key column →
+hard fail, a bad data page or a write failure → raised, with no marker
+for the day (so a re-run redoes it).
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .splitter import (parquet_footer, resolve_fs, split_groups,
+from .splitter import (parquet_footer, resolve_fs, split_files,
                        write_partitioned)
 
 log = logging.getLogger(__name__)
@@ -203,14 +204,13 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     """Process every not-yet-marked day; returns the summary dict the
     reference's ``process_kind`` returns (parquet-splitter.py:190-196).
 
-    The missing days are split in one scan and one job, and each gets
-    its marker once that job succeeds.  If the read or the job fails
-    (a missing or corrupt file anywhere in the backlog), the same split
-    runs on each day alone: a bad day is warned about and left unmarked,
-    the others commit.  A day that is readable but cannot be written
-    raises.  ``exact_layout=False`` writes the Hive layout
-    ``<out>/date=<d>/<key>=<k>/part-*.parquet`` and always goes day by
-    day.
+    The missing days are split in one job, and each gets its marker
+    once that job succeeds.  A day whose file is missing or whose footer
+    is unreadable is warned about and left unmarked; the others commit.
+    A day whose footer reads but whose data pages or outputs fail
+    raises, and the run writes no marker.  ``exact_layout=False``
+    writes the Hive layout ``<out>/date=<d>/<key>=<k>/part-*.parquet``
+    and goes day by day.
 
     ``manifest`` selects how the per-day marker records its outputs:
 
@@ -256,16 +256,15 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     log.info("[%s] input=%d done=%d missing=%d", kind,
              len(input_dates), len(done_dates), len(missing_dates))
 
-    def split(dates: list[str]) -> int | None:
+    def split(dates: list[str]) -> int:
         return _split_days(spark, kind, in_dir, out_dir, marker_dir, dates,
                            key, exact_layout, manifest, fp_by_date)
 
-    # the whole backlog in one scan; if that fails, the same path runs on
-    # each day alone, so a bad file skips only its own day.  The Hive
-    # layout writes one directory per day, so it always goes day by day.
-    processed = (split(missing_dates)
-                 if exact_layout and len(missing_dates) > 1 else None)
-    if processed is None:
+    # the whole backlog in one job; the Hive layout writes one directory
+    # per day, so it goes day by day
+    if exact_layout:
+        processed = split(missing_dates) if missing_dates else 0
+    else:
         processed = sum(split([d]) for d in missing_dates)
 
     if manifest == "counts":
@@ -281,18 +280,11 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     }
 
 
-def _spark_file_name(spark: SparkSession, path: str) -> str:
-    """The basename Spark reports for ``path`` in ``_metadata.file_name``:
-    the URI-encoded form (``2025 01%01.parquet`` → ``2025%2001%2501.parquet``)."""
-    uri = spark._jvm.org.apache.hadoop.fs.Path(path).toUri()
-    return uri.getRawPath().rsplit("/", 1)[-1]
-
-
 def _has_rows(kind: str, path: str, key: str) -> bool:
     """Footer check of one day's file: True when it has rows, False
     when it is empty (O9 skip) or unreadable (warn+skip; retried next
     run).  Raises ``ValueError`` when the day has rows but no ``key``
-    column (a scan of several files would read it with null keys)."""
+    column."""
     try:
         num_rows, columns = parquet_footer(path)
     except (OSError, ValueError) as e:  # missing, or not parquet
@@ -315,84 +307,69 @@ def _has_partitions(spark: SparkSession, directory: str, key: str) -> bool:
 def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
                 marker_dir: str, dates: list[str], key: str,
                 exact_layout: bool, manifest: str,
-                fingerprints: dict[str, str]) -> int | None:
-    """Split ``dates`` in one scan and commit one marker per day; returns
-    the number of markers written.
+                fingerprints: dict[str, str]) -> int:
+    """Split ``dates`` and commit one marker per day; returns the number
+    of markers written.
 
-    The exact layout fans every day out in one ``split_groups`` job, the
-    day of a row looked up per input file from ``_metadata.file_name``;
-    the Hive layout (one day only) writes ``<out>/date=<d>/<key>=<k>/``.
-    Markers commit after the job succeeds, so a crash leaves the days
-    unmarked and the re-run redoes them.
+    The exact layout fans every day out in one ``split_files`` job, the
+    files binned by the byte count their fingerprint holds; the Hive
+    layout (one day only) writes ``<out>/date=<d>/<key>=<k>/``.  Markers
+    commit after the job succeeds, so a failed job (a bad data page, a
+    write error) raises and leaves every day unmarked for the re-run.
 
-    Several days: a failed read or job returns None (no marker written;
-    partial outputs are overwrite-safe) and the caller retries day by
-    day.  The scan cannot tell an empty day (O9 skip, no marker) from one
-    whose rows were all null-keyed (empty marker), so each day without
-    outputs gets one footer read afterwards.  One day: the footer is
-    read first, so an unreadable or empty file is skipped before any
-    job runs, and a failure of the job itself (a write error) raises.
+    A day without outputs gets one footer read: an unreadable file is
+    warned about and an empty one skipped (no marker), a file with rows
+    but no key column raises, and a day whose keys are all null gets an
+    empty marker.  The Hive layout reads the footer before its job.
     """
     in_paths = {d: f"{in_dir.rstrip('/')}/{d}.parquet" for d in dates}
-    single = len(dates) == 1
-    if single and not _has_rows(kind, in_paths[dates[0]], key):
-        return 0  # unreadable (warned) or empty; raises if keyless
     counts: dict[str, int] = {}
     outputs: dict[str, list[str]] = {}
     run_dir = None
-    try:
-        df = spark.read.parquet(*in_paths.values())
-        if key not in df.columns:
-            # the scan took its schema from one file: judge each day alone
-            return None
+    if not exact_layout:
+        (date,) = dates
+        if not _has_rows(kind, in_paths[date], key):
+            return 0  # unreadable (warned) or empty; raises if keyless
         # null-key rows dropped (reference parity — pandas groupby dropna)
-        df = df.filter(F.col(key).isNotNull())
-        if not exact_layout:
-            (date,) = dates
-            day_dir = f"{out_dir}/date={date}"
-            write_partitioned(df, day_dir, key)
-            # an all-null-key day writes no <key>=<k> dir: no output
-            outputs[date] = [day_dir] if _has_partitions(
-                spark, day_dir, key) else []
+        df = spark.read.parquet(in_paths[date]).filter(F.col(key).isNotNull())
+        day_dir = f"{out_dir}/date={date}"
+        write_partitioned(df, day_dir, key)
+        # an all-null-key day writes no <key>=<k> dir: no output
+        outputs[date] = [day_dir] if _has_partitions(
+            spark, day_dir, key) else []
+    else:
+        # the listing's date key names outputs and markers; the bytes of
+        # the fingerprint (<length>:<mtime>) balance the tasks
+        groups = split_files(spark, {
+            d: (p, int(fingerprints[d].split(":", 1)[0]))
+            for d, p in in_paths.items()}, out_dir, key)
+        if manifest == "counts":
+            # the manifest is data: executors write it in the split
+            # job itself and the driver collects one count per day.
+            # Each call gets its own run dir, as the overwrite would
+            # delete the manifests of days already committed.
+            run_dir = (f"{marker_dir.rstrip('/')}/_manifests/"
+                       f"run-{uuid.uuid4().hex[:12]}")
+            (groups.repartition("date")
+             .write.mode("overwrite").partitionBy("date").json(run_dir))
+            # the pinned schema keeps partition values verbatim and
+            # reads a run with no data files (all keys null) as empty
+            counts = {r["date"]: r["count"] for r in
+                      spark.read.schema("date string, out_path string")
+                      .json(run_dir).groupBy("date").count().collect()}
+            escape = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+                      .ExternalCatalogUtils.escapePathName)
         else:
-            # keyed by Spark's URI-encoded file name, valued by the
-            # listing's date key: outputs and markers must carry the
-            # listing's key, or an escaped name would reprocess forever
-            groups = split_groups(df, out_dir, key, {
-                _spark_file_name(spark, p): d for d, p in in_paths.items()})
-            if manifest == "counts":
-                # the manifest is data: executors write it in the split
-                # job itself and the driver collects one count per day.
-                # Each call gets its own run dir, as the overwrite would
-                # delete the manifests of days already committed.
-                run_dir = (f"{marker_dir.rstrip('/')}/_manifests/"
-                           f"run-{uuid.uuid4().hex[:12]}")
-                (groups.repartition("date")
-                 .write.mode("overwrite").partitionBy("date").json(run_dir))
-                # the pinned schema keeps partition values verbatim and
-                # reads a run with no data files (all keys null) as empty
-                counts = {r["date"]: r["count"] for r in
-                          spark.read.schema("date string, out_path string")
-                          .json(run_dir).groupBy("date").count().collect()}
-                escape = (spark._jvm.org.apache.spark.sql.catalyst.catalog
-                          .ExternalCatalogUtils.escapePathName)
-            else:
-                for r in groups.collect():  # one row per output object
-                    outputs.setdefault(r.date, []).append(r.out_path)
-    except Exception as e:
-        if single:
-            raise  # the file is readable, so this is a write failure
-        # a corrupt file fails at execution, not at the lazy read above
-        log.warning("[%s] split failed for %s (%s)", kind, dates,
-                    str(e)[:200])
-        return None
+            for r in groups.collect():  # one row per output object
+                outputs.setdefault(r.date, []).append(r.out_path)
     counts = counts or {d: len(v) for d, v in outputs.items()}
 
     stamp = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     processed = 0
     for date in dates:
         n = counts.get(date, 0)
-        if not (n or single or _has_rows(kind, in_paths[date], key)):
+        if not n and exact_layout and not _has_rows(kind, in_paths[date],
+                                                    key):
             continue  # no marker: retried next run
         marker = {"kind": kind, "date": date, "input_key": in_paths[date],
                   "input_fingerprint": fingerprints.get(date)}

@@ -6,7 +6,7 @@ output object ``<out>/<k>/<d>.parquet`` holding exactly
 ``input[input.item_id == k]`` with input row order preserved; an empty
 input is skipped; a missing ``item_id`` column is a hard error.
 
-Two writers:
+Three writers:
 
 - :func:`write_partitioned` — the idiomatic scale path:
   ``df.write.partitionBy(key)``. One shuffle-free distributed write;
@@ -14,46 +14,43 @@ Two writers:
   right shape (parallel tasks, S3A committer, ``maxRecordsPerFile`` to
   bound small files).
 
-- :func:`split_groups` — parity mode reproducing the reference's
-  ``<k>/<d>.parquet`` layout and row order via
-  ``groupBy(key).applyInArrow``.  Each group arrives as one
-  ``pyarrow.Table``; its order is restored from a pre-shuffle row id
-  with ``take(sort_indices(...))`` and it is written with
-  ``pq.write_table`` — no pandas hop.  :func:`split_day` (one day) and
-  the incremental driver (its missing days in one scan, the day looked
-  up per input *file* from ``_metadata.file_name``) both use it.
-  Group files are written through pyarrow.fs
-  (:func:`write_parquet_object`), so output paths may be plain local
-  paths or ``file://``/``s3://``/``s3a://``/``gs://``/``hdfs://`` URIs —
-  no extra executor dependencies.
+- :func:`split_files` — the reference's ``<k>/<d>.parquet`` layout for
+  day *files* (the incremental driver's catch-up).  The files are packed
+  into at most ``defaultParallelism`` Python tasks of one
+  ``mapInArrow`` job; each task reads its files with pyarrow, sorts
+  each by key (stable, so input order holds within a key) and writes
+  one slice per key.  No Spark scan, shuffle or row id: a day file
+  already holds its rows together.  Outputs keep the input file's own
+  Arrow schema (timestamps keep their unit, ints stay ints, each day
+  its own columns), minus schema-level metadata such as the pandas
+  block.
 
-  Outputs keep the Arrow schema Spark read.  Compared with the earlier
-  pandas group writer this changes three things:
+- :func:`split_groups` — the same layout for a DataFrame, which has no
+  files (:func:`split_day`): ``groupBy(key).applyInArrow``.  Each group
+  arrives as one ``pyarrow.Table``; its order is restored from a
+  pre-shuffle row id with ``take(sort_indices(...))``.  Outputs keep
+  the Arrow schema Spark read: integers with nulls stay integers,
+  timestamps carry Spark's microsecond unit and the session's UTC tz,
+  decimals keep their declared precision.
 
-  - integer columns with nulls stay integers (int64 and int32 used to
-    become double, and so did the ints of a list with a null element;
-    ``pd.read_parquet`` reads a nullable int column as float64 either
-    way);
-  - timestamps keep Spark's microsecond unit and the session's UTC tz
-    (they used to be naive nanoseconds);
-  - decimals keep their declared precision (pandas re-inferred it from
-    each group's values, e.g. decimal(10,2) became decimal(3,2)).
-
-  The files also no longer carry pandas schema metadata.
+Both parity writers write through pyarrow.fs (:func:`write_parquet_object`),
+so paths may be plain local paths or ``file://``/``s3://``/``s3a://``/
+``gs://``/``hdfs://`` URIs — no extra executor dependencies — and
+neither writes pandas schema metadata.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Iterable, Mapping
+from typing import TYPE_CHECKING, Iterable, Iterator, Mapping
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
     import pyarrow as pa
 
 ORDER_COL = "__row_order"
-FILE_COL = "__file_name"
+MANIFEST_SCHEMA = "date string, out_path string, rows long"
 
 
 def resolve_fs(path: str):
@@ -156,39 +153,95 @@ def split_day(df: DataFrame, out_dir: str, date: str, key: str = "item_id",
 
 
 def split_groups(df: DataFrame, out_dir: str, key: str,
-                 date: str | Mapping[str, str]) -> DataFrame:
+                 date: str) -> DataFrame:
     """Exact-layout fan-out of ``df`` into ``<out>/<k>/<date>.parquet``,
     as a LAZY manifest DataFrame (``date``, ``out_path``, ``rows`` — one
     row per output object).
 
-    ``date`` is either the one date of every row, or a map from an input
-    file's name — as Spark reports it in ``_metadata.file_name``, i.e.
-    URI-encoded — to that file's date key.  With a map, ``df`` must be
-    a file scan (filters allowed) and rows are grouped per (key, file):
-    the date is a per-file constant, so no per-row expression derives
-    it.  Each group crosses into Python as one Arrow table; rows keep
-    their input order, restored from a row id captured before the
-    shuffle.  Null keys are the caller's to drop.
+    Each group crosses into Python as one Arrow table; rows keep their
+    input order, restored from a row id captured before the shuffle.
+    Null keys are the caller's to drop.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    by_file = not isinstance(date, str)
-    helpers = [ORDER_COL]
-    if by_file:
-        df = df.withColumn(
-            FILE_COL, df.metadataColumn("_metadata").getField("file_name"))
-        helpers.append(FILE_COL)
     ordered = df.withColumn(ORDER_COL, F.monotonically_increasing_id())
 
     def _write_group(tbl: pa.Table) -> pa.Table:
         tbl = tbl.take(pc.sort_indices(tbl[ORDER_COL]))
-        d = date[tbl[FILE_COL][0].as_py()] if by_file else date
-        path = f"{out_dir}/{tbl[key][0].as_py()}/{d}.parquet"
-        write_parquet_object(tbl.drop_columns(helpers), path)
-        return pa.table({"date": [d], "out_path": [path],
+        path = f"{out_dir}/{tbl[key][0].as_py()}/{date}.parquet"
+        write_parquet_object(tbl.drop_columns([ORDER_COL]), path)
+        return pa.table({"date": [date], "out_path": [path],
                          "rows": [tbl.num_rows]})
 
-    return ordered.groupBy(key, *helpers[1:]).applyInArrow(
-        _write_group, schema="date string, out_path string, rows long")
+    return ordered.groupBy(key).applyInArrow(_write_group,
+                                             schema=MANIFEST_SCHEMA)
 
+
+def split_files(spark: SparkSession, files: Mapping[str, tuple[str, int]],
+                out_dir: str, key: str = "item_id") -> DataFrame:
+    """Exact-layout fan-out of day files into ``<out>/<k>/<date>.parquet``,
+    as a LAZY manifest DataFrame (``date``, ``out_path``, ``rows`` — one
+    row per output object), like :func:`split_groups`.
+
+    ``files`` maps a date to its file's (path, listed bytes).  The files
+    go into ``min(len(files), defaultParallelism)`` bins, largest first,
+    each into the lightest bin, and each bin is one Python task of one
+    ``mapInArrow`` job.  A task reads each of its files whole — a day is
+    held in one worker's memory, as in the reference — drops null keys
+    and writes one file per key, rows in input order.
+
+    A task yields nothing for a file whose footer is unreadable, that
+    has no rows or that has no ``key`` column; the caller tells these
+    apart from a day of null keys by the footer.  An error after the
+    footer (a bad data page, a failed write) fails the job.
+    """
+    n_bins = min(len(files), spark.sparkContext.defaultParallelism)
+    bins: list[list[tuple[str, str]]] = [[] for _ in range(n_bins)]
+    loads = [0] * n_bins
+    for date, (path, size) in sorted(files.items(), key=lambda f: -f[1][1]):
+        lightest = loads.index(min(loads))
+        bins[lightest].append((date, path))
+        loads[lightest] += size
+
+    def _split(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                for date, path in bins[i]:
+                    yield from _split_file(path, date, out_dir, key)
+
+    return (spark.range(n_bins, numPartitions=n_bins)
+            .mapInArrow(_split, MANIFEST_SCHEMA))
+
+
+def _split_file(path: str, date: str, out_dir: str,
+                key: str) -> Iterator[pa.RecordBatch]:
+    """Write the day file at ``path`` as one object per non-null key;
+    yields its manifest rows (none for a file the footer check skips)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    filesystem, fs_path = resolve_fs(path)
+    try:
+        pf = pq.ParquetFile(fs_path, filesystem=filesystem)
+    except (OSError, ValueError):  # missing, or not parquet
+        return
+    with pf:
+        if not pf.metadata.num_rows or key not in pf.schema_arrow.names:
+            return
+        tbl = pf.read().replace_schema_metadata(None)
+    tbl = tbl.filter(pc.is_valid(tbl[key]))
+    # a stable sort: rows keep their input order within a key
+    tbl = tbl.take(pc.sort_indices(tbl[key]))
+    counts = pc.value_counts(tbl[key])  # keys in order of first appearance
+    paths, start = [], 0
+    for k, n in zip(counts.field("values").to_pylist(),
+                    counts.field("counts").to_pylist()):
+        paths.append(f"{out_dir}/{k}/{date}.parquet")
+        write_parquet_object(tbl.slice(start, n), paths[-1])
+        start += n
+    if paths:  # an all-null-key day writes nothing
+        yield pa.RecordBatch.from_pydict(
+            {"date": [date] * len(paths), "out_path": paths,
+             "rows": counts.field("counts")})

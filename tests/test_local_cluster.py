@@ -1,13 +1,14 @@
-"""staging.py and session.py on a multi-process master.
+"""staging.py, session.py and the split pipeline on a multi-process
+master.
 
 ``local-cluster[2,1,1024]`` runs two executors as separate JVMs, so
-lost executors, package shipping and thread-local job properties
-behave as on a real cluster.  The suite's session fixture holds this
-process's only SparkContext, so the cluster runs in a subprocess: this
-file doubles as that script (``python test_local_cluster.py
-<out.json>``, with ``spark.checkpoint.dir`` passed in
-``PYSPARK_SUBMIT_ARGS``), which writes what it saw as JSON for the
-test to check.
+lost executors, package shipping, thread-local job properties and
+executor-side reads of the day files behave as on a real cluster.  The
+suite's session fixture holds this process's only SparkContext, so the
+cluster runs in a subprocess: this file doubles as that script
+(``python test_local_cluster.py <out.json>``, with
+``spark.checkpoint.dir`` passed in ``PYSPARK_SUBMIT_ARGS``), which
+writes what it saw as JSON for the test to check.
 """
 
 import json
@@ -55,7 +56,40 @@ def _where(batches):
         yield pd.DataFrame({"cwd": [os.getcwd()], "pkg": [pkg.__file__]})
 
 
-def _observe(spark) -> dict:
+def _split_backlog(spark, work: str) -> dict:
+    """A 3-day catch-up of multi-row-group day files; counts the output
+    files whose rows are not exactly that key's input rows, in order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from glue_parquet_splitter_spark.pipeline import run_incremental
+
+    in_dir, out = os.path.join(work, "in"), os.path.join(work, "out")
+    os.makedirs(in_dir)
+    days, n = {}, 3000
+    for d in range(3):
+        # a hot key and strided keys interleave within every row group
+        keys = [f"{0 if i % 2 else (i * (d + 7)) % 29 + 1:04d}"
+                for i in range(n)]
+        days[f"2025010{d + 1}"] = tbl = pa.table(
+            {"item_id": keys, "seq": list(range(n))})
+        pq.write_table(tbl, os.path.join(in_dir, f"2025010{d + 1}.parquet"),
+                       row_group_size=250)
+    res = run_incremental(spark, "t", in_dir, out,
+                          os.path.join(work, "mk"))
+    files = bad = 0
+    for date, tbl in days.items():
+        for k in pc.unique(tbl["item_id"]).to_pylist():
+            want = tbl.filter(pc.equal(tbl["item_id"], k))["seq"]
+            got = pq.read_table(os.path.join(out, k, f"{date}.parquet"))
+            files += 1
+            bad += got["seq"].to_pylist() != want.to_pylist()
+    return {"days": res["processed_days"], "files": files,
+            "out_of_order": bad}
+
+
+def _observe(spark, work: str) -> dict:
     from glue_parquet_splitter_spark.staging import (_stage_mode,
                                                      run_concurrently,
                                                      stage_table)
@@ -69,6 +103,7 @@ def _observe(spark) -> dict:
     out["pkg_files"] = sorted({r.pkg for r in rows})
 
     out["components"] = _components(spark)
+    out["split"] = _split_backlog(spark, work)
 
     ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
     sc.setJobGroup("arms", "concurrent arms")
@@ -97,7 +132,7 @@ def _main(out_path: str) -> None:
                                 sc.applicationId)
     _wait(lambda: len(_executors(sc)) == 2, "two executors")
     try:
-        out = _observe(spark)
+        out = _observe(spark, os.path.dirname(os.path.abspath(out_path)))
         with open(out_path, "w") as f:
             json.dump(out, f)
     finally:
@@ -128,7 +163,10 @@ def test_local_cluster_master(spark, tmp_path):
     assert len(out["worker_dirs"]) == 2, out["worker_dirs"]
     assert all("glue_parquet_splitter_spark.zip" in f
                for f in out["pkg_files"]), out["pkg_files"]
-    # 4. every arm's job ran inside the caller's job group; results
+    # 4. executors read the day files and write every key's rows in
+    # input order
+    assert out["split"] == {"days": 3, "files": 90, "out_of_order": 0}
+    # 5. every arm's job ran inside the caller's job group; results
     # come back in key order
     assert out["arm_results"] == [["arm 10", 10], ["arm 20", 20],
                                   ["arm 30", 30]]

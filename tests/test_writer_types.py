@@ -1,11 +1,15 @@
 """Type matrix for the exact-layout writer, on both of its paths:
-``split_day`` (one day) and the batched catch-up of ``run_incremental``.
+``split_day`` (one day, through Spark's read) and the catch-up of
+``run_incremental`` (``split_files``, through pyarrow's read of the day
+file).
 
-Each output keeps the Arrow schema Spark read — the schema is pinned
-here column by column — and ``pd.read_parquet`` of an output equals the
-input rows of that key, values and order, read the same way.  Every
-column of key ``a`` carries a null, so nullable integers, lists and
-decimals are exercised where a pandas hop would re-type them.
+The input is written with the schema Spark reads for it, so both paths
+must give that schema — pinned here column by column: ``split_day``
+keeps the schema Spark read, the catch-up the day file's own.  And
+``pd.read_parquet`` of an output equals the input rows of that key,
+values and order, read the same way.  Every column of key ``a`` carries
+a null, so nullable integers, lists and decimals are exercised where a
+pandas hop would re-type them.
 """
 
 import datetime as dt
