@@ -311,25 +311,25 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     """Split ``dates`` and commit one marker per day; returns the number
     of markers written.
 
-    The exact layout fans every day out in one ``split_files`` job, the
-    files binned by the byte count their fingerprint holds; the Hive
-    layout (one day only) writes ``<out>/date=<d>/<key>=<k>/``.  Markers
-    commit after the job succeeds, so a failed job (a bad data page, a
-    write error) raises and leaves every day unmarked for the re-run.
-
-    A day without outputs gets one footer read: an unreadable file is
-    warned about and an empty one skipped (no marker), a file with rows
-    but no key column raises, and a day whose keys are all null gets an
-    empty marker.  The Hive layout reads the footer before its job.
+    Every day's footer is read first: an unreadable file is warned
+    about and an empty one skipped (no marker, retried next run), and a
+    file with rows but no key column raises.  The exact layout then fans
+    the remaining days out in one ``split_files`` job; the Hive layout
+    (one day only) writes ``<out>/date=<d>/<key>=<k>/``.  Markers commit
+    after the job succeeds, so a failed job (a read error on an
+    executor, a bad data page, a write error) raises and leaves every
+    day unmarked for the re-run.  A day left without outputs has only
+    null keys and gets an empty marker.
     """
     in_paths = {d: f"{in_dir.rstrip('/')}/{d}.parquet" for d in dates}
+    dates = [d for d in dates if _has_rows(kind, in_paths[d], key)]
+    if not dates:
+        return 0
     counts: dict[str, int] = {}
     outputs: dict[str, list[str]] = {}
     run_dir = None
     if not exact_layout:
         (date,) = dates
-        if not _has_rows(kind, in_paths[date], key):
-            return 0  # unreadable (warned) or empty; raises if keyless
         # null-key rows dropped (reference parity — pandas groupby dropna)
         df = spark.read.parquet(in_paths[date]).filter(F.col(key).isNotNull())
         day_dir = f"{out_dir}/date={date}"
@@ -338,11 +338,8 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
         outputs[date] = [day_dir] if _has_partitions(
             spark, day_dir, key) else []
     else:
-        # the listing's date key names outputs and markers; the bytes of
-        # the fingerprint (<length>:<mtime>) balance the tasks
-        groups = split_files(spark, {
-            d: (p, int(fingerprints[d].split(":", 1)[0]))
-            for d, p in in_paths.items()}, out_dir, key)
+        groups = split_files(spark, {d: in_paths[d] for d in dates},
+                             out_dir, key)
         if manifest == "counts":
             # the manifest is data: executors write it in the split
             # job itself and the driver collects one count per day.
@@ -368,9 +365,6 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     processed = 0
     for date in dates:
         n = counts.get(date, 0)
-        if not n and exact_layout and not _has_rows(kind, in_paths[date],
-                                                    key):
-            continue  # no marker: retried next run
         marker = {"kind": kind, "date": date, "input_key": in_paths[date],
                   "input_fingerprint": fingerprints.get(date)}
         if manifest == "counts":

@@ -178,31 +178,25 @@ def split_groups(df: DataFrame, out_dir: str, key: str,
                                              schema=MANIFEST_SCHEMA)
 
 
-def split_files(spark: SparkSession, files: Mapping[str, tuple[str, int]],
-                out_dir: str, key: str = "item_id") -> DataFrame:
+def split_files(spark: SparkSession, files: Mapping[str, str], out_dir: str,
+                key: str = "item_id") -> DataFrame:
     """Exact-layout fan-out of day files into ``<out>/<k>/<date>.parquet``,
     as a LAZY manifest DataFrame (``date``, ``out_path``, ``rows`` — one
     row per output object), like :func:`split_groups`.
 
-    ``files`` maps a date to its file's (path, listed bytes).  The files
-    go into ``min(len(files), defaultParallelism)`` bins, largest first,
-    each into the lightest bin, and each bin is one Python task of one
+    ``files`` maps a date to its file's path; every file must have rows
+    and a ``key`` column (the caller reads the footers first).  The
+    files go round-robin, in date order, into ``min(len(files),
+    defaultParallelism)`` bins, and each bin is one Python task of one
     ``mapInArrow`` job.  A task reads each of its files whole — a day is
     held in one worker's memory, as in the reference — drops null keys
-    and writes one file per key, rows in input order.
-
-    A task yields nothing for a file whose footer is unreadable, that
-    has no rows or that has no ``key`` column; the caller tells these
-    apart from a day of null keys by the footer.  An error after the
-    footer (a bad data page, a failed write) fails the job.
+    and writes one file per key, rows in input order.  Any read or
+    write error fails the job.
     """
     n_bins = min(len(files), spark.sparkContext.defaultParallelism)
     bins: list[list[tuple[str, str]]] = [[] for _ in range(n_bins)]
-    loads = [0] * n_bins
-    for date, (path, size) in sorted(files.items(), key=lambda f: -f[1][1]):
-        lightest = loads.index(min(loads))
-        bins[lightest].append((date, path))
-        loads[lightest] += size
+    for i, date in enumerate(sorted(files)):
+        bins[i % n_bins].append((date, files[date]))
 
     def _split(batches):
         for batch in batches:
@@ -217,19 +211,13 @@ def split_files(spark: SparkSession, files: Mapping[str, tuple[str, int]],
 def _split_file(path: str, date: str, out_dir: str,
                 key: str) -> Iterator[pa.RecordBatch]:
     """Write the day file at ``path`` as one object per non-null key;
-    yields its manifest rows (none for a file the footer check skips)."""
+    yields its manifest rows (none for a day whose keys are all null)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     filesystem, fs_path = resolve_fs(path)
-    try:
-        pf = pq.ParquetFile(fs_path, filesystem=filesystem)
-    except (OSError, ValueError):  # missing, or not parquet
-        return
-    with pf:
-        if not pf.metadata.num_rows or key not in pf.schema_arrow.names:
-            return
+    with pq.ParquetFile(fs_path, filesystem=filesystem) as pf:
         tbl = pf.read().replace_schema_metadata(None)
     tbl = tbl.filter(pc.is_valid(tbl[key]))
     # a stable sort: rows keep their input order within a key

@@ -1,6 +1,6 @@
 """The catch-up's exact-layout writer, ``splitter.split_files``, driven
 through ``run_incremental``: each output keeps its own day file's
-schema, an error past the footer fails the run without a marker, and a
+schema, a read error in a task fails the run without a marker, and a
 backlog is one job of one stage with at most ``defaultParallelism``
 tasks."""
 
@@ -13,7 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from glue_parquet_splitter_spark.pipeline import run_incremental
+from glue_parquet_splitter_spark.pipeline import incremental, run_incremental
 
 
 def _markers(marker_dir) -> set[str]:
@@ -74,6 +74,39 @@ def test_bad_page_with_intact_footer_raises(spark, tmp_path, mode):
         run_incremental(spark, "t", str(in_dir), str(out), str(mk),
                         manifest=mode)
     assert "20250102" not in _markers(mk)
+
+
+@pytest.mark.parametrize("mode", ["outputs", "counts"])
+def test_task_read_error_with_readable_footer_raises(spark, tmp_path,
+                                                     monkeypatch, mode):
+    """A day file the tasks cannot read while every footer read of the
+    driver succeeds (executors without the driver's credentials, a
+    transient error, a file still being written) fails the run with no
+    marker; it never becomes an empty marker."""
+    in_dir, out, mk = (tmp_path / d for d in ("in", "out", "mk"))
+    in_dir.mkdir()
+    for date in ("20250101", "20250102", "20250103"):
+        pq.write_table(pa.table({"item_id": ["a", "b"] * 5,
+                                 "x": list(range(10))}),
+                       in_dir / f"{date}.parquet")
+    day, hidden = in_dir / "20250102.parquet", tmp_path / "hidden"
+    split_files, has_rows = incremental.split_files, incremental._has_rows
+
+    def tasks_cannot_read(*args, **kwargs):
+        day.rename(hidden)  # the job runs after this returns
+        return split_files(*args, **kwargs)
+
+    def driver_can_read(*args, **kwargs):
+        if hidden.exists():
+            hidden.rename(day)
+        return has_rows(*args, **kwargs)
+
+    monkeypatch.setattr(incremental, "split_files", tasks_cannot_read)
+    monkeypatch.setattr(incremental, "_has_rows", driver_can_read)
+    with pytest.raises(Exception):
+        run_incremental(spark, "t", str(in_dir), str(out), str(mk),
+                        manifest=mode)
+    assert _markers(mk) == set()
 
 
 def test_catch_up_is_one_job_one_stage(spark, tmp_path):
