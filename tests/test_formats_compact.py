@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from glue_parquet_splitter_spark.catalog import load_table
 from glue_parquet_splitter_spark.pipeline.compact import compact_dataset
 
-SAMPLE = "/root/reference/sample-data/data"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -42,11 +41,11 @@ def test_schema_evolution_merge(spark, tmp_path):
     assert merged.filter(F.col("v2").isNull()).count() == 5
 
 
-def test_compaction_preserves_partition_values(spark, tmp_path):
+def test_compaction_preserves_partition_values(spark, tmp_path, sample_data):
     """Fan-out layout → bounded files per partition, same rows, and the
     zero-padded partition dir names/values survive verbatim (type
     inference would rewrite ``item_id=0000000005`` as ``item_id=5``)."""
-    df = spark.read.parquet(f"{SAMPLE}/input/20251107.parquet")
+    df = spark.read.parquet(f"{sample_data}/input/20251107.parquet")
     src = str(tmp_path / "fanout")
     # simulate a small-file layout: many files per partition
     df.repartition(16).write.partitionBy("item_id").parquet(src)
@@ -78,12 +77,12 @@ def test_compaction_preserves_partition_values(spark, tmp_path):
     assert keys == {d.split("=", 1)[1] for d in dirs_before}
 
 
-def test_cli_entry(tmp_path):
+def test_cli_entry(tmp_path, sample_data):
     """O1/O20 parity: the module CLI runs an incremental pass."""
     out = subprocess.run(
         [sys.executable, "-m", "glue_parquet_splitter_spark",
          "--KIND", "cli-test",
-         "--IN_DIR", f"{SAMPLE}/input",
+         "--IN_DIR", f"{sample_data}/input",
          "--OUT_DIR", str(tmp_path / "out"),
          "--MARKER_DIR", str(tmp_path / "markers")],
         cwd=REPO, capture_output=True, text=True, timeout=300,

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from glue_parquet_splitter_spark.catalog import load_table
 
-SAMPLE = "/root/reference/sample-data/data/input"
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
@@ -31,14 +30,14 @@ def test_parquet_codecs(spark, sf_dir, tmp_path):
         assert files and all(f.endswith(ext) for f in files)
 
 
-def test_binary_file_ingestion(spark):
+def test_binary_file_ingestion(spark, sample_data):
     """binaryFile source: land media objects as (path, length, content)
     rows — the ingestion path for the multimodal operators, which then
     decode via mapInPandas (operators/multimodal.py)."""
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.parquet")
-        .load(SAMPLE)
+        .load(f"{sample_data}/input")
         .select("path", "length", "content")
     )
     rows = df.collect()

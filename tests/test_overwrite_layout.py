@@ -6,18 +6,17 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-SAMPLE = "/root/reference/sample-data/data/input"
 
 
-def test_dynamic_partition_overwrite(spark, tmp_path):
+def test_dynamic_partition_overwrite(spark, tmp_path, sample_data):
     """Re-processing one day must replace ONLY that day's partitions —
     the write-side half of exactly-once replay (marker redo is safe
     because the overwrite is partition-scoped, not table-scoped)."""
     out = str(tmp_path / "t")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        d1 = spark.read.parquet(f"{SAMPLE}/20251107.parquet").withColumn("day", F.lit("20251107"))
-        d2 = spark.read.parquet(f"{SAMPLE}/20251114.parquet").withColumn("day", F.lit("20251114"))
+        d1 = spark.read.parquet(f"{sample_data}/input/20251107.parquet").withColumn("day", F.lit("20251107"))
+        d2 = spark.read.parquet(f"{sample_data}/input/20251114.parquet").withColumn("day", F.lit("20251114"))
         d1.unionByName(d2).write.partitionBy("day").mode("overwrite").parquet(out)
         assert spark.read.parquet(out).count() == 20_000
 

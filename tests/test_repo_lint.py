@@ -329,13 +329,28 @@ def test_whole_partition_rows_frame_aggregate_not_flagged(tmp_path):
     assert scan_pick_window_sites(str(tmp_path)) == []
 
 
+def _absolute_imports(path):
+    """(line, top-level module) for each absolute import in ``path``."""
+    import ast
+
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and not node.level:
+            names = [node.module or ""]
+        else:
+            continue
+        for n in names:
+            yield node.lineno, n.split(".")[0]
+
+
 # ---- one helper for concurrent arms (staging.run_concurrently) ----
 # Threads started by hand escape the caller's job group; every
 # concurrent arm goes through staging.run_concurrently instead.
 
 def test_only_staging_imports_thread_modules():
-    import ast
-
     pkg = os.path.join(REPO, "glue_parquet_splitter_spark")
     hits = []
     for root, _dirs, files in os.walk(pkg):
@@ -343,17 +358,23 @@ def test_only_staging_imports_thread_modules():
             path = os.path.join(root, f)
             if not f.endswith(".py") or path == os.path.join(pkg, "staging.py"):
                 continue
-            with open(path) as fh:
-                tree = ast.parse(fh.read())
-            for node in ast.walk(tree):
-                if isinstance(node, ast.Import):
-                    names = [a.name for a in node.names]
-                elif isinstance(node, ast.ImportFrom) and not node.level:
-                    names = [node.module or ""]
-                else:
-                    continue
-                if any(n.split(".")[0] in ("threading", "concurrent")
-                       for n in names):
-                    hits.append(f"{os.path.relpath(path, REPO)}:{node.lineno}")
+            for line, mod in _absolute_imports(path):
+                if mod in ("threading", "concurrent"):
+                    hits.append(f"{os.path.relpath(path, REPO)}:{line}")
     assert hits == [], "thread modules imported outside staging.py:\n" + \
+        "\n".join(hits)
+
+
+# ---- the sample-data oracle stays independent of the package ----
+# The golden replay (test_splitter.py) compares the package's split with
+# goldens that tests/sample_replica.py computes when the reference's own
+# artifacts are absent.  An oracle that called the code under test would
+# make that replay circular.
+
+def test_sample_replica_imports_nothing_from_the_package():
+    path = os.path.join(REPO, "tests", "sample_replica.py")
+    hits = [f"tests/sample_replica.py:{line}"
+            for line, mod in _absolute_imports(path)
+            if mod == "glue_parquet_splitter_spark"]
+    assert hits == [], "the replica's oracle imports the package:\n" + \
         "\n".join(hits)

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from glue_parquet_splitter_spark.catalog import load_table
 from glue_parquet_splitter_spark.pipeline.splitter import split_day, write_partitioned
 
-SAMPLE = "/root/reference/sample-data/data"
 
 
 def test_bucketed_join_no_exchange(spark, sf_dir, tmp_path):
@@ -45,10 +44,10 @@ def test_bucketed_join_no_exchange(spark, sf_dir, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
-def test_partition_pruning_on_split_output(spark, tmp_path):
+def test_partition_pruning_on_split_output(spark, tmp_path, sample_data):
     """Reading one key from the partitionBy layout scans only that
     partition (PartitionFilters, not a full-scan + filter)."""
-    df = spark.read.parquet(f"{SAMPLE}/input/20251107.parquet")
+    df = spark.read.parquet(f"{sample_data}/input/20251107.parquet")
     out = str(tmp_path / "hive")
     write_partitioned(df, out, key="item_id")
     q = spark.read.parquet(out).filter(F.col("item_id") == "0000000007")
@@ -57,11 +56,11 @@ def test_partition_pruning_on_split_output(spark, tmp_path):
     assert q.count() == df.filter(F.col("item_id") == "0000000007").count()
 
 
-def test_order_preserved_across_many_partitions(spark, tmp_path):
+def test_order_preserved_across_many_partitions(spark, tmp_path, sample_data):
     """Exact-layout split keeps input row order even when the input file
     is read as many partitions (order restored from the pre-shuffle
     monotonic id, whose partition-index high bits follow file order)."""
-    src = f"{SAMPLE}/input/20251114.parquet"
+    src = f"{sample_data}/input/20251114.parquet"
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 * 1024))
     try:
         df = spark.read.parquet(src)

@@ -1,9 +1,12 @@
 """Golden-replay + property tests for the split pipeline (SURVEY.md §5).
 
-Oracle: the reference's committed sample artifacts
-(/root/reference/sample-data) — inputs, 9 golden outputs, 3 marker
-JSONs. We assert value-equality (schema, values, row order), not byte
-equality (codec/version metadata differs across pyarrow builds).
+Oracle: the ``sample_data`` fixture (conftest.py) — inputs, 9 golden
+outputs, 3 marker JSONs.  These are the reference's committed sample
+artifacts (FIXTURES.md §A) where present, else a deterministic replica of
+their shape whose goldens and markers come from an independent pandas
+restatement of the reference's split (``sample_replica.py``, SURVEY.md
+§2 semantics 1).  We assert value-equality (schema, values, row order),
+not byte equality (codec/version metadata differs across pyarrow builds).
 """
 
 import json
@@ -15,17 +18,16 @@ import pytest
 from glue_parquet_splitter_spark.pipeline import run_incremental, extract_dates
 from glue_parquet_splitter_spark.pipeline.splitter import split_day, write_partitioned
 
-SAMPLE = "/root/reference/sample-data/data"
 DATES = ["20251107", "20251114", "20251121"]
 
 
 @pytest.fixture(scope="module")
-def run_dir(tmp_path_factory, spark):
-    """Run the incremental pipeline once over the reference sample input."""
+def run_dir(tmp_path_factory, spark, sample_data):
+    """Run the incremental pipeline once over the sample input."""
     root = tmp_path_factory.mktemp("split_run")
     out_dir, marker_dir = str(root / "output"), str(root / "markers")
     summary = run_incremental(
-        spark, "pyshell", f"{SAMPLE}/input", out_dir, marker_dir, key="item_id",
+        spark, "pyshell", f"{sample_data}/input", out_dir, marker_dir, key="item_id",
     )
     return root, summary
 
@@ -37,24 +39,24 @@ def test_summary_shape(run_dir):
     assert summary["input_files"] == 3
 
 
-def test_golden_outputs_match(run_dir):
+def test_golden_outputs_match(run_dir, sample_data):
     """Every committed golden file equals our output: schema, values, order."""
     root, _ = run_dir
     n_checked = 0
-    for item_id in os.listdir(f"{SAMPLE}/output"):
-        for fname in os.listdir(f"{SAMPLE}/output/{item_id}"):
-            golden = pd.read_parquet(f"{SAMPLE}/output/{item_id}/{fname}")
+    for item_id in os.listdir(f"{sample_data}/output"):
+        for fname in os.listdir(f"{sample_data}/output/{item_id}"):
+            golden = pd.read_parquet(f"{sample_data}/output/{item_id}/{fname}")
             ours = pd.read_parquet(str(root / "output" / item_id / fname))
             pd.testing.assert_frame_equal(ours.reset_index(drop=True), golden.reset_index(drop=True))
             n_checked += 1
     assert n_checked == 9
 
 
-def test_partition_properties(run_dir, spark):
+def test_partition_properties(run_dir, spark, sample_data):
     """∀ split: union == input, partitions disjoint + key-homogeneous."""
     root, _ = run_dir
     for date in DATES:
-        inp = pd.read_parquet(f"{SAMPLE}/input/{date}.parquet")
+        inp = pd.read_parquet(f"{sample_data}/input/{date}.parquet")
         parts = []
         out = root / "output"
         for item_id in os.listdir(out):
@@ -72,7 +74,7 @@ def test_partition_properties(run_dir, spark):
         pd.testing.assert_frame_equal(a, b)
 
 
-def test_markers(run_dir):
+def test_markers(run_dir, sample_data):
     root, _ = run_dir
     for date in DATES:
         with open(root / "markers" / f"{date}.json") as f:
@@ -82,7 +84,7 @@ def test_markers(run_dir):
         assert len(doc["outputs"]) == 30
         assert doc["kind"] == "pyshell"
         # compare output basenames with the reference's marker golden
-        with open(f"{SAMPLE}/markers/{date}.json") as f:
+        with open(f"{sample_data}/markers/{date}.json") as f:
             ref = json.load(f)
         ours = {"/".join(p.rsplit("/", 2)[-2:]) for p in doc["outputs"]}
         theirs = {"/".join(p.rsplit("/", 2)[-2:]) for p in ref["outputs"]}
@@ -90,11 +92,11 @@ def test_markers(run_dir):
         assert doc["output_count"] == ref["output_count"]
 
 
-def test_idempotence(run_dir, spark):
+def test_idempotence(run_dir, spark, sample_data):
     """Second run is a no-op given markers (reference :135-138)."""
     root, _ = run_dir
     summary2 = run_incremental(
-        spark, "pyshell", f"{SAMPLE}/input", str(root / "output"), str(root / "markers"),
+        spark, "pyshell", f"{sample_data}/input", str(root / "output"), str(root / "markers"),
     )
     assert summary2["processed_days"] == 0
     assert summary2["missing_dates"] == []
@@ -124,9 +126,9 @@ def test_empty_and_missing_column(tmp_path, spark):
         split_day(bad, str(tmp_path / "out2"), "20250101")
 
 
-def test_write_partitioned_scale_path(tmp_path, spark):
+def test_write_partitioned_scale_path(tmp_path, spark, sample_data):
     """The idiomatic partitionBy writer produces a readable Hive layout."""
-    df = spark.read.parquet(f"{SAMPLE}/input/20251107.parquet")
+    df = spark.read.parquet(f"{sample_data}/input/20251107.parquet")
     out = str(tmp_path / "hive")
     write_partitioned(df, out, key="item_id")
     back = spark.read.parquet(out)

@@ -9,17 +9,16 @@ import pytest
 
 from glue_parquet_splitter_spark.streaming.split_stream import run_split_stream
 
-SAMPLE = "/root/reference/sample-data/data/input"
 
 
-def test_split_stream_incremental(tmp_path, spark):
+def test_split_stream_incremental(tmp_path, spark, sample_data):
     """First drain processes the backlog; adding one file and re-running
     with the same checkpoint processes ONLY the new file — checkpoint
     replaces the reference's marker-set anti-join."""
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
     for d in ["20251107", "20251114"]:
-        shutil.copy(f"{SAMPLE}/{d}.parquet", f"{in_dir}/{d}.parquet")
+        shutil.copy(f"{sample_data}/input/{d}.parquet", f"{in_dir}/{d}.parquet")
 
     out, markers, ckpt = (str(tmp_path / p) for p in ["out", "markers", "ckpt"])
     m1 = run_split_stream(spark, in_dir, out, markers, checkpoint_dir=ckpt)
@@ -31,7 +30,7 @@ def test_split_stream_incremental(tmp_path, spark):
     assert sum(m["rows"] for m in m2) == 0
 
     # one new file → exactly its rows processed
-    shutil.copy(f"{SAMPLE}/20251121.parquet", f"{in_dir}/20251121.parquet")
+    shutil.copy(f"{sample_data}/input/20251121.parquet", f"{in_dir}/20251121.parquet")
     m3 = run_split_stream(spark, in_dir, out, markers, checkpoint_dir=ckpt)
     assert sum(m["rows"] for m in m3) == 10_000
     assert {os.path.basename(p) for m in m3 for p in m["inputs"]} == {"20251121.parquet"}
@@ -42,10 +41,10 @@ def test_split_stream_incremental(tmp_path, spark):
     assert back.select("item_id").distinct().count() == 30
 
 
-def test_split_stream_markers(tmp_path, spark):
+def test_split_stream_markers(tmp_path, spark, sample_data):
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
-    shutil.copy(f"{SAMPLE}/20251107.parquet", f"{in_dir}/20251107.parquet")
+    shutil.copy(f"{sample_data}/input/20251107.parquet", f"{in_dir}/20251107.parquet")
     out, markers, ckpt = (str(tmp_path / p) for p in ["out", "markers", "ckpt"])
     m = run_split_stream(spark, in_dir, out, markers, checkpoint_dir=ckpt)
     assert len(m) >= 1

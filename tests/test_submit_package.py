@@ -17,7 +17,6 @@ import sys
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SAMPLE = "/root/reference/sample-data/data"
 
 
 @pytest.fixture(scope="module")
@@ -46,13 +45,13 @@ def test_package_contents(dist_dir):
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None,
                     reason="spark-submit not on PATH")
-def test_spark_submit_dry_run(dist_dir, tmp_path):
+def test_spark_submit_dry_run(dist_dir, tmp_path, sample_data):
     out_dir, marker_dir = str(tmp_path / "out"), str(tmp_path / "markers")
     env = dict(os.environ, PROFILE="local", MASTER="local[2]",
                SPARK_GRAFT_DRIVER_MEM="2g")
     res = subprocess.run(
         [os.path.join(dist_dir, "submit.sh"),
-         f"{SAMPLE}/input", out_dir, marker_dir],
+         f"{sample_data}/input", out_dir, marker_dir],
         capture_output=True, text=True, env=env, timeout=420)
     assert res.returncode == 0, res.stderr[-3000:]
 

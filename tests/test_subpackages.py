@@ -7,10 +7,10 @@ from glue_parquet_splitter_spark import plans as P
 from glue_parquet_splitter_spark import sources as S
 
 
-def test_sources(spark, sf_dir):
+def test_sources(spark, sf_dir, sample_data):
     li = S.load_table(spark, sf_dir, "lineitem")
     assert li.count() > 0
-    b = S.read_binary_dir(spark, "/root/reference/sample-data/data/input", "*.parquet")
+    b = S.read_binary_dir(spark, f"{sample_data}/input", "*.parquet")
     assert b.count() == 3
 
 
