@@ -17,6 +17,18 @@ partitioning pipeline — see SURVEY.md), re-expressed Spark-first:
 Everything rides the DataFrame API so Catalyst/Tungsten/AQE pick the
 physical strategy; Python UDFs only where built-ins can't express the
 semantics (and then Arrow-vectorized).
+
+Importing the package inside a Spark task (every engine UDF's closure
+does, when a Python worker unpickles it) installs
+:func:`session.guard_zip_rereads` in that worker, so its later tasks
+stop re-parsing unchanged zip archives on the import path.
 """
 
+from pyspark import TaskContext
+
 __version__ = "0.1.0"
+
+if TaskContext.get() is not None:
+    from .session import guard_zip_rereads
+
+    guard_zip_rereads()

@@ -23,7 +23,14 @@ Three writers:
   already holds its rows together.  Outputs keep the input file's own
   Arrow schema (timestamps keep their unit, ints stay ints, each day
   its own columns), minus schema-level metadata such as the pandas
-  block.
+  block.  With one wave of tasks, a task's fixed start-up cost counts
+  as much as its I/O.  On CPython < 3.13 a reused worker re-parses
+  every zip archive on its import path at the start of each task
+  (``pyspark.zip``, the spark-core jar, this package's zip) unless
+  ``session.guard_zip_rereads`` runs there; a task installs it when it
+  unpickles ``_split_file`` and so imports the package, and from then
+  on the worker skips the archives that have not changed.  Each
+  worker's first task still pays.
 
 - :func:`split_groups` — the same layout for a DataFrame, which has no
   files (:func:`split_day`): ``groupBy(key).applyInArrow``.  Each group

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import re
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -144,6 +145,60 @@ def _ship_package(spark: SparkSession) -> None:
     except Exception:
         pass  # e.g. connect-only sessions; closures must then be self-contained
     _PYFILE_SESSIONS.add(key)
+
+
+# A reused PySpark worker calls importlib.invalidate_caches() at the
+# start of every task (pyspark/worker_util.py, setup_spark_files).  On
+# CPython < 3.13 that makes every cached zipimporter re-parse its whole
+# archive's central directory, once per importer: pyspark.zip (1,328
+# entries) once for each of its ~12 subpackage importers, the
+# spark-core jar on the worker PYTHONPATH (5,359 entries) and the py4j
+# zip twice each, and this package's own zip from _ship_package.  On
+# CPython 3.11.7 (4-core host) that took 251 ms of every task before
+# its function started.  CPython 3.13 made the re-read lazy
+# (gh-103200), so the guard stops there.
+
+def guard_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip archives whose file
+    has not changed (same inode, ``st_mtime_ns`` and ``st_size``) since
+    an importer last read its directory at that same stamp: the
+    importer takes that read's directory instead of re-parsing the
+    archive.  A changed, replaced or vanished archive, or one whose
+    cached directory someone else replaced, still goes through the
+    original method.  Idempotent; a no-op on CPython >= 3.13.
+
+    Python workers only: the package ``__init__`` installs it when a
+    Spark task is running, never on the driver.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "skips_unchanged_archives", False):
+        return
+    reads: dict = {}  # archive path -> (stamp, directory read at it)
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        seen = reads.get(self.archive)
+        if (stamp is not None and seen is not None and seen[0] == stamp
+                and zipimport._zip_directory_cache.get(self.archive)
+                is seen[1]):
+            self._files = seen[1]
+            return
+        # stat before the read: an archive rewritten during it keeps
+        # the older stamp and is read again next time
+        original(self)
+        # a failed read empties the cache entry, so it never matches
+        reads[self.archive] = (stamp, self._files)
+
+    invalidate_caches.skips_unchanged_archives = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

@@ -46,6 +46,14 @@ def _components(spark) -> list[list[int]]:
                   for r in connected_components(edges).collect())
 
 
+def _guarded() -> bool:
+    """Whether this process runs session.guard_zip_rereads."""
+    import zipimport
+
+    return getattr(zipimport.zipimporter.invalidate_caches,
+                   "skips_unchanged_archives", False)
+
+
 def _where(batches):
     import pandas as pd
 
@@ -53,7 +61,8 @@ def _where(batches):
 
     for _ in batches:
         # cwd: the executor's work dir, <SPARK_HOME>/work/<app>/<exec>
-        yield pd.DataFrame({"cwd": [os.getcwd()], "pkg": [pkg.__file__]})
+        yield pd.DataFrame({"cwd": [os.getcwd()], "pkg": [pkg.__file__],
+                            "guarded": [_guarded()]})
 
 
 def _split_backlog(spark, work: str) -> dict:
@@ -89,6 +98,39 @@ def _split_backlog(spark, work: str) -> dict:
             "out_of_order": bad}
 
 
+def _split_day(spark, work: str) -> dict:
+    """``split_day`` of one multi-row-group day read as several scan
+    splits, so each key's rows reach its group from map tasks on both
+    executors; counts the output files whose rows are not exactly that
+    key's input rows, in order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from glue_parquet_splitter_spark.pipeline.splitter import split_day
+
+    n = 3000
+    keys = [f"{0 if i % 2 else (i * 7) % 29 + 1:04d}" for i in range(n)]
+    tbl = pa.table({"item_id": keys, "seq": list(range(n))})
+    path = os.path.join(work, "day.parquet")
+    pq.write_table(tbl, path, row_group_size=250)
+    conf = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, str(os.path.getsize(path) // 6))
+    try:
+        df = spark.read.parquet(path)
+        splits = df.rdd.getNumPartitions()
+        outputs = split_day(df, os.path.join(work, "day_out"), "20250101")
+    finally:
+        spark.conf.set(conf, prev)
+    bad = 0
+    for p in outputs:
+        k = os.path.basename(os.path.dirname(p))
+        want = tbl.filter(pc.equal(tbl["item_id"], k))["seq"]
+        bad += pq.read_table(p)["seq"].to_pylist() != want.to_pylist()
+    return {"splits": splits, "files": len(outputs), "out_of_order": bad}
+
+
 def _observe(spark, work: str) -> dict:
     from glue_parquet_splitter_spark.staging import (_stage_mode,
                                                      run_concurrently,
@@ -98,12 +140,16 @@ def _observe(spark, work: str) -> dict:
     out = {"mode": _stage_mode(sc.master, sc.getCheckpointDir())}
 
     rows = (spark.range(0, 8, numPartitions=8)
-            .mapInPandas(_where, "cwd string, pkg string").collect())
+            .mapInPandas(_where, "cwd string, pkg string, guarded boolean")
+            .collect())
     out["worker_dirs"] = sorted({r.cwd for r in rows})
     out["pkg_files"] = sorted({r.pkg for r in rows})
+    out["workers_guarded"] = sorted({r.guarded for r in rows})
+    out["driver_guarded"] = _guarded()
 
     out["components"] = _components(spark)
     out["split"] = _split_backlog(spark, work)
+    out["split_day"] = _split_day(spark, work)
 
     ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
     sc.setJobGroup("arms", "concurrent arms")
@@ -163,10 +209,17 @@ def test_local_cluster_master(spark, tmp_path):
     assert len(out["worker_dirs"]) == 2, out["worker_dirs"]
     assert all("glue_parquet_splitter_spark.zip" in f
                for f in out["pkg_files"]), out["pkg_files"]
+    # ... and their Python workers, not the driver, run the zip guard
+    assert out["workers_guarded"] == [True]
+    assert out["driver_guarded"] is False
     # 4. executors read the day files and write every key's rows in
     # input order
     assert out["split"] == {"days": 3, "files": 90, "out_of_order": 0}
-    # 5. every arm's job ran inside the caller's job group; results
+    # 5. split_day restores input order after the grouping shuffle
+    assert out["split_day"]["splits"] > 2, out["split_day"]
+    assert out["split_day"]["files"] == 30
+    assert out["split_day"]["out_of_order"] == 0
+    # 6. every arm's job ran inside the caller's job group; results
     # come back in key order
     assert out["arm_results"] == [["arm 10", 10], ["arm 20", 20],
                                   ["arm 30", 30]]

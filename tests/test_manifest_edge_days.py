@@ -75,12 +75,14 @@ def test_all_null_day_commits_zero_marker(spark, tmp_path, mode):
 
 @pytest.mark.parametrize("mode", ["outputs", "counts"])
 def test_day_by_day_null_day_matches_batched(spark, tmp_path, mode):
-    """The per-day fallback loop commits the same zero marker (the
-    counts-mode read used to abort on the empty manifest dir)."""
+    """With an unreadable day file in the same backlog, the null day
+    still commits its zero marker (the counts-mode read used to abort
+    on the empty manifest dir)."""
     tmp = str(tmp_path)
     in_dir = f"{tmp}/input"
     _make_input(spark, in_dir)
-    # a corrupt extra day forces the batched read to fall back
+    # a corrupt extra day: its footer read fails, so it is warned about
+    # and skipped before the split job, and gets no marker
     with open(f"{in_dir}/20250404.parquet", "wb") as f:
         f.write(b"not parquet at all")
     out, mk = f"{tmp}/out_{mode}", f"{tmp}/mk_{mode}"

