@@ -14,7 +14,8 @@ days and builds each day's marker in one place for every manifest mode
 and layout.  For the exact layout the whole backlog is one job of at
 most ``defaultParallelism`` Python tasks (:func:`~.splitter.split_files`):
 each task reads its own day files with pyarrow and writes one file per
-key, so every output keeps its own day file's schema.  The Hive layout
+key, so every output keeps its own day file's schema, and in counts mode
+it writes each of its days' manifests too.  The Hive layout
 goes day by day, one Spark read and ``partitionBy`` write each.
 
 Listing uses the Hadoop FileSystem API so the same code handles
@@ -33,13 +34,12 @@ from __future__ import annotations
 import json
 import logging
 import time
-import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .splitter import (parquet_footer, resolve_fs, split_files,
-                       write_partitioned)
+                       write_bytes, write_partitioned)
 
 log = logging.getLogger(__name__)
 
@@ -106,94 +106,10 @@ def _changed_days(fp_by_date: dict[str, str], marker_keys: list[str],
     return changed
 
 
-def gc_manifest_runs(spark: SparkSession, marker_dir: str) -> int:
-    """Delete counts-mode manifest run dirs no current marker references.
-
-    Every counts-mode backlog run writes ``_manifests/run-<id>/`` and a
-    reopened day re-points its marker at a NEW run dir — without
-    collection the old dirs accrue forever (unbounded metadata growth).
-    A run dir survives iff at least one marker's ``outputs_manifest``
-    points inside it; everything else under ``_manifests/`` is dropped.
-
-    Metadata-scale work: one listing of run dirs + one small JSON read
-    per marker (the same order as the scheduler's own listing).  Safe
-    to run after every backlog pass — a marker is committed before the
-    pass returns, so a referenced dir can never look orphaned.  Assumes
-    the single-writer driver model the marker protocol already requires
-    (a concurrent writer's un-marked run could be swept; don't run two
-    drivers against one marker_dir).
-    """
-    base = f"{marker_dir.rstrip('/')}/_manifests"
-    jvm = spark._jvm
-    base_path = jvm.org.apache.hadoop.fs.Path(base)
-    fs = base_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(base_path):
-        return 0
-    run_dirs = {
-        st.getPath().toString(): st.getModificationTime()
-        for st in fs.listStatus(base_path)
-        if st.isDirectory() and st.getPath().getName().startswith("run-")
-    }
-    if not run_dirs:
-        return 0
-    referenced: set[str] = set()
-    # a marker is written AFTER the run dir it references, so an
-    # unreadable (corrupt/in-flight) marker can only reference run dirs
-    # no newer than itself: keep those conservatively, keep collecting
-    # everything else.  (Previously ONE bad marker returned 0 here and
-    # silently disabled GC — the unbounded-growth problem it exists to
-    # fix — forever.)
-    bad_marker_mtime: int | None = None
-    n_unreadable = 0
-    for mk in list_files(spark, marker_dir, ".json"):
-        try:
-            filesystem, fs_path = resolve_fs(mk)
-            with filesystem.open_input_stream(fs_path) as f:
-                doc = json.loads(f.read().decode("utf-8"))
-        except Exception as e:  # unreadable marker → keep its era's runs
-            n_unreadable += 1
-            try:
-                mt = fs.getFileStatus(
-                    jvm.org.apache.hadoop.fs.Path(mk)).getModificationTime()
-            except Exception:
-                log.warning("gc: unreadable marker %s (%s) and its mtime "
-                            "is unreadable too; skipping gc this pass",
-                            mk, e)
-                return 0
-            bad_marker_mtime = max(bad_marker_mtime or 0, mt)
-            log.warning("gc: unreadable marker %s (%s); keeping run dirs "
-                        "not newer than it", mk, e)
-            continue
-        om = doc.get("outputs_manifest")
-        if om:
-            # outputs_manifest = <run_dir>/date=<d> — keep the run dir.
-            # Qualify through the same FS so a scheme-less marker path
-            # ("/tmp/…") matches the listing's qualified form
-            # ("file:/tmp/…") — an unqualified compare would sweep
-            # every live run dir.
-            run = om.rstrip("/").rsplit("/", 1)[0]
-            referenced.add(
-                fs.makeQualified(jvm.org.apache.hadoop.fs.Path(run))
-                .toString())
-    removed = 0
-    for d in sorted(set(run_dirs) - referenced):
-        if bad_marker_mtime is not None and run_dirs[d] <= bad_marker_mtime:
-            continue  # possibly referenced by an unreadable marker
-        fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-        removed += 1
-    if removed or n_unreadable:
-        log.info("gc: removed %d orphaned manifest run dir(s)"
-                 " (%d unreadable marker(s) protected older runs)",
-                 removed, n_unreadable)
-    return removed
-
-
 def write_marker(marker_path: str, doc: dict) -> None:
     """Commit a JSON marker (driver-side; any pyarrow-supported FS)."""
-    filesystem, fs_path = resolve_fs(marker_path)
-    filesystem.create_dir(fs_path.rsplit("/", 1)[0], recursive=True)
-    with filesystem.open_output_stream(fs_path) as f:
-        f.write(json.dumps(doc, ensure_ascii=False).encode("utf-8"))
+    write_bytes(marker_path, json.dumps(doc, ensure_ascii=False)
+                .encode("utf-8"))
 
 
 def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
@@ -218,13 +134,15 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
       full sorted output-path list.  The list is collected to the
       driver — fine at reference shape (tens of keys/day), the wrong
       thing at millions of keys/day.
-    - ``"counts"``: executors write per-day manifest files (JSON lines,
-      ``<marker_dir>/_manifests/run-<id>/date=<d>/``) as part of the
-      split job itself; the driver collects only one count row per day
-      and the marker stores ``outputs_manifest`` (the manifest
-      directory; null for the Hive layout, which has one output dir per
-      day) + ``output_count``.  No driver-side per-key list at any
-      scale.  All other marker fields are identical.
+    - ``"counts"``: the split task that writes a day's outputs also
+      writes its manifest, ``<marker_dir>/_manifests/<d>/part-0.json``
+      (JSON lines, one ``out_path``/``rows`` object per output; a
+      reopened day overwrites it).  The driver collects one count row
+      per day, and the marker stores ``outputs_manifest`` (the
+      ``_manifests/<d>`` directory; null for the Hive layout, which has
+      one output dir per day) + ``output_count``.  No driver-side
+      per-key list at any scale.  All other marker fields are
+      identical.
 
     ``reprocess_changed``: the reference reprocesses a late row only if
     its whole day-file reappears unmarked (SURVEY §2); with this flag a
@@ -266,10 +184,6 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
         processed = split(missing_dates) if missing_dates else 0
     else:
         processed = sum(split([d]) for d in missing_dates)
-
-    if manifest == "counts":
-        # reclaim run dirs orphaned by reopened days / historic runs
-        gc_manifest_runs(spark, marker_dir)
 
     return {
         "kind": kind,
@@ -314,12 +228,14 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     Every day's footer is read first: an unreadable file is warned
     about and an empty one skipped (no marker, retried next run), and a
     file with rows but no key column raises.  The exact layout then fans
-    the remaining days out in one ``split_files`` job; the Hive layout
-    (one day only) writes ``<out>/date=<d>/<key>=<k>/``.  Markers commit
-    after the job succeeds, so a failed job (a read error on an
-    executor, a bad data page, a write error) raises and leaves every
-    day unmarked for the re-run.  A day left without outputs has only
-    null keys and gets an empty marker.
+    the remaining days out in one ``split_files`` job; in counts mode
+    its tasks also write each day's manifest and the driver collects a
+    per-day count of the job's rows.  The Hive layout (one day only)
+    writes ``<out>/date=<d>/<key>=<k>/``.  Markers commit after the job
+    succeeds, so a failed job (a read error on an executor, a bad data
+    page, a write error) raises and leaves every day unmarked for the
+    re-run.  A day left without outputs has only null keys and gets an
+    empty marker (and, in counts mode, an empty manifest).
     """
     in_paths = {d: f"{in_dir.rstrip('/')}/{d}.parquet" for d in dates}
     dates = [d for d in dates if _has_rows(kind, in_paths[d], key)]
@@ -327,7 +243,7 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
         return 0
     counts: dict[str, int] = {}
     outputs: dict[str, list[str]] = {}
-    run_dir = None
+    manifest_dir = None
     if not exact_layout:
         (date,) = dates
         # null-key rows dropped (reference parity — pandas groupby dropna)
@@ -338,24 +254,15 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
         outputs[date] = [day_dir] if _has_partitions(
             spark, day_dir, key) else []
     else:
-        groups = split_files(spark, {d: in_paths[d] for d in dates},
-                             out_dir, key)
         if manifest == "counts":
-            # the manifest is data: executors write it in the split
-            # job itself and the driver collects one count per day.
-            # Each call gets its own run dir, as the overwrite would
-            # delete the manifests of days already committed.
-            run_dir = (f"{marker_dir.rstrip('/')}/_manifests/"
-                       f"run-{uuid.uuid4().hex[:12]}")
-            (groups.repartition("date")
-             .write.mode("overwrite").partitionBy("date").json(run_dir))
-            # the pinned schema keeps partition values verbatim and
-            # reads a run with no data files (all keys null) as empty
+            manifest_dir = f"{marker_dir.rstrip('/')}/_manifests"
+        groups = split_files(spark, {d: in_paths[d] for d in dates},
+                             out_dir, key, manifest_dir)
+        if manifest_dir:
+            # each task wrote its days' manifests; the driver collects
+            # one count per day, never the per-key list
             counts = {r["date"]: r["count"] for r in
-                      spark.read.schema("date string, out_path string")
-                      .json(run_dir).groupBy("date").count().collect()}
-            escape = (spark._jvm.org.apache.spark.sql.catalyst.catalog
-                      .ExternalCatalogUtils.escapePathName)
+                      groups.groupBy("date").count().collect()}
         else:
             for r in groups.collect():  # one row per output object
                 outputs.setdefault(r.date, []).append(r.out_path)
@@ -368,13 +275,9 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
         marker = {"kind": kind, "date": date, "input_key": in_paths[date],
                   "input_fingerprint": fingerprints.get(date)}
         if manifest == "counts":
-            # the Hive layout has one output dir per day and no manifest;
-            # the partition dir is named as Spark escapes it ('%', ':' ...)
-            manifest_dir = run_dir and f"{run_dir}/date={escape(date)}"
-            if manifest_dir and not n:  # all keys null: empty manifest
-                filesystem, fs_path = resolve_fs(manifest_dir)
-                filesystem.create_dir(fs_path, recursive=True)
-            marker["outputs_manifest"] = manifest_dir
+            # the Hive layout has one output dir per day and no manifest
+            marker["outputs_manifest"] = (manifest_dir
+                                          and f"{manifest_dir}/{date}")
         else:
             marker["outputs"] = sorted(outputs.get(date, []))
         marker["output_count"] = n

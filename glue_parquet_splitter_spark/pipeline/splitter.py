@@ -48,6 +48,7 @@ neither writes pandas schema metadata.
 
 from __future__ import annotations
 
+import json
 from typing import TYPE_CHECKING, Iterable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +59,7 @@ if TYPE_CHECKING:
 
 ORDER_COL = "__row_order"
 MANIFEST_SCHEMA = "date string, out_path string, rows long"
+MAX_RECORDS_PER_FILE = 5_000_000
 
 
 def resolve_fs(path: str):
@@ -94,6 +96,15 @@ def write_parquet_object(table: pa.Table, path: str) -> None:
                    compression="snappy")
 
 
+def write_bytes(path: str, data: bytes) -> None:
+    """Write ``data`` as the object at ``path``, replacing any object
+    there (any pyarrow-supported filesystem; parent dirs created)."""
+    filesystem, fs_path = resolve_fs(path)
+    filesystem.create_dir(fs_path.rsplit("/", 1)[0], recursive=True)
+    with filesystem.open_output_stream(fs_path) as f:
+        f.write(data)
+
+
 def parquet_footer(path: str) -> tuple[int, list[str]]:
     """(row count, top-level column names) from the footer of the
     parquet object at ``path`` — metadata only, no data pages read."""
@@ -112,8 +123,8 @@ def require_columns(df: DataFrame, cols: Iterable[str]) -> None:
         raise ValueError(f"required column(s) missing: {missing}")
 
 
-def write_partitioned(df: DataFrame, out_dir: str, key: str = "item_id",
-                      max_records_per_file: int = 5_000_000) -> None:
+def write_partitioned(df: DataFrame, out_dir: str,
+                      key: str = "item_id") -> None:
     """Idiomatic Spark partitioned write (Hive layout ``key=value/``).
 
     ``maxRecordsPerFile`` bounds file size at scale; snappy parquet is
@@ -122,13 +133,13 @@ def write_partitioned(df: DataFrame, out_dir: str, key: str = "item_id",
     """
     require_columns(df, [key])
     (df.write.mode("overwrite")
-       .option("maxRecordsPerFile", str(max_records_per_file))
+       .option("maxRecordsPerFile", str(MAX_RECORDS_PER_FILE))
        .partitionBy(key)
        .parquet(out_dir))
 
 
-def split_day(df: DataFrame, out_dir: str, date: str, key: str = "item_id",
-              exact_layout: bool = True) -> list[str]:
+def split_day(df: DataFrame, out_dir: str, date: str,
+              key: str = "item_id") -> list[str]:
     """Split one day's DataFrame by ``key`` into ``<out>/<k>/<date>.parquet``.
 
     Returns the list of output paths (the marker manifest's ``outputs``,
@@ -150,11 +161,6 @@ def split_day(df: DataFrame, out_dir: str, date: str, key: str = "item_id",
     df = df.filter(F.col(key).isNotNull())
     if df.isEmpty():
         return []
-    if not exact_layout:
-        day_dir = f"{out_dir}/date={date}"
-        write_partitioned(df, day_dir, key)
-        return [day_dir]
-
     manifest = split_groups(df, out_dir, key, date).collect()  # one row per key
     return sorted(r.out_path for r in manifest)
 
@@ -186,7 +192,8 @@ def split_groups(df: DataFrame, out_dir: str, key: str,
 
 
 def split_files(spark: SparkSession, files: Mapping[str, str], out_dir: str,
-                key: str = "item_id") -> DataFrame:
+                key: str = "item_id",
+                manifest_dir: str | None = None) -> DataFrame:
     """Exact-layout fan-out of day files into ``<out>/<k>/<date>.parquet``,
     as a LAZY manifest DataFrame (``date``, ``out_path``, ``rows`` — one
     row per output object), like :func:`split_groups`.
@@ -197,8 +204,12 @@ def split_files(spark: SparkSession, files: Mapping[str, str], out_dir: str,
     defaultParallelism)`` bins, and each bin is one Python task of one
     ``mapInArrow`` job.  A task reads each of its files whole — a day is
     held in one worker's memory, as in the reference — drops null keys
-    and writes one file per key, rows in input order.  Any read or
-    write error fails the job.
+    and writes one file per key, rows in input order.  Given a
+    ``manifest_dir``, the task also writes each day's manifest to
+    ``<manifest_dir>/<date>/part-0.json``: JSON lines, one ``out_path``
+    and ``rows`` object per output, empty for a day whose keys are all
+    null, replaced by a retry or a rerun of the day.  Any read or write
+    error fails the job.
     """
     n_bins = min(len(files), spark.sparkContext.defaultParallelism)
     bins: list[list[tuple[str, str]]] = [[] for _ in range(n_bins)]
@@ -209,16 +220,18 @@ def split_files(spark: SparkSession, files: Mapping[str, str], out_dir: str,
         for batch in batches:
             for i in batch.column(0).to_pylist():
                 for date, path in bins[i]:
-                    yield from _split_file(path, date, out_dir, key)
+                    yield from _split_file(path, date, out_dir, key,
+                                           manifest_dir)
 
     return (spark.range(n_bins, numPartitions=n_bins)
             .mapInArrow(_split, MANIFEST_SCHEMA))
 
 
-def _split_file(path: str, date: str, out_dir: str,
-                key: str) -> Iterator[pa.RecordBatch]:
-    """Write the day file at ``path`` as one object per non-null key;
-    yields its manifest rows (none for a day whose keys are all null)."""
+def _split_file(path: str, date: str, out_dir: str, key: str,
+                manifest_dir: str | None) -> Iterator[pa.RecordBatch]:
+    """Write the day file at ``path`` as one object per non-null key,
+    and its manifest under ``manifest_dir`` when given; yields its
+    manifest rows (none for a day whose keys are all null)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -230,12 +243,16 @@ def _split_file(path: str, date: str, out_dir: str,
     # a stable sort: rows keep their input order within a key
     tbl = tbl.take(pc.sort_indices(tbl[key]))
     counts = pc.value_counts(tbl[key])  # keys in order of first appearance
+    rows = counts.field("counts").to_pylist()
     paths, start = [], 0
-    for k, n in zip(counts.field("values").to_pylist(),
-                    counts.field("counts").to_pylist()):
+    for k, n in zip(counts.field("values").to_pylist(), rows):
         paths.append(f"{out_dir}/{k}/{date}.parquet")
         write_parquet_object(tbl.slice(start, n), paths[-1])
         start += n
+    if manifest_dir is not None:
+        write_bytes(f"{manifest_dir}/{date}/part-0.json", "".join(
+            json.dumps({"out_path": p, "rows": n}, ensure_ascii=False) + "\n"
+            for p, n in zip(paths, rows)).encode("utf-8"))
     if paths:  # an all-null-key day writes nothing
         yield pa.RecordBatch.from_pydict(
             {"date": [date] * len(paths), "out_path": paths,

@@ -1,7 +1,7 @@
 """Scheme-aware exact-layout writes + builder-time S3A profile.
 
-The parity writer (``split_day(exact_layout=True)`` and the batched
-incremental driver) writes group files from executors through
+The parity writers (``split_day`` and the batched incremental
+driver) write group files from executors through
 pyarrow.fs, so output/marker locations may be URIs, not just local
 paths.  ``file://`` is the URI scheme we can exercise end-to-end in
 this container; it drives the exact same ``FileSystem.from_uri`` code

@@ -123,7 +123,7 @@ def test_escaped_day_name_settles_after_one_run(spark, tmp_path, mode):
     if mode == "outputs":
         assert docs[date]["outputs"] == [f"{out}/a/{date}.parquet",
                                          f"{out}/b/{date}.parquet"]
-    else:  # the manifest pointer names the dir Spark wrote
+    else:  # the manifest pointer names the day's manifest dir, verbatim
         assert len(glob.glob(
             f"{glob.escape(docs[date]['outputs_manifest'])}/*.json")) >= 1
 

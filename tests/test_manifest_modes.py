@@ -11,7 +11,10 @@ per-key list that never lands on the driver.
 import glob
 import json
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -49,12 +52,20 @@ def both_runs(spark, tmp_path_factory):
     return tmp, summaries
 
 
-def _markers(tmp, mode):
+def _markers(marker_dir):
     docs = {}
-    for p in glob.glob(f"{tmp}/markers_{mode}/*.json"):
+    for p in glob.glob(f"{marker_dir}/*.json"):
         with open(p) as f:
             docs[os.path.basename(p)[:-5]] = json.load(f)
     return docs
+
+
+def _manifest_rows(doc):
+    rows = []
+    for mp in glob.glob(f"{glob.escape(doc['outputs_manifest'])}/*.json"):
+        with open(mp) as f:
+            rows += [json.loads(line) for line in f if line.strip()]
+    return rows
 
 
 def test_both_modes_process_all_days(both_runs):
@@ -67,7 +78,7 @@ def test_marker_docs_equivalent(both_runs):
     """counts-mode markers carry the same commit facts; the outputs
     list is reachable through the manifest pointer and identical."""
     tmp, _ = both_runs
-    a, b = _markers(tmp, "outputs"), _markers(tmp, "counts")
+    a, b = (_markers(f"{tmp}/markers_{m}") for m in ("outputs", "counts"))
     assert set(a) == set(b) and len(a) == N_DAYS
     for date in a:
         da, db = a[date], b[date]
@@ -83,8 +94,8 @@ def test_marker_docs_equivalent(both_runs):
             with open(mp) as f:
                 manifest_rows += [
                     r for r in (json.loads(line) for line in f if line.strip())
-                    # skip day-presence rows (null out_path): they mark
-                    # days whose rows were all null-keyed, not outputs
+                    # every line names one output object; a line without
+                    # an out_path would not be one
                     if r.get("out_path") is not None
                 ]
         # same output set, modulo the mode-specific output root
@@ -114,48 +125,80 @@ def test_counts_mode_idempotent(both_runs, spark):
     assert again["processed_days"] == 0
 
 
-def test_manifest_count_aggregation_stays_in_plan_at_1e6_keys(spark, tmp_path):
-    """The scale claim: a million (key, day) manifest rows round-trip
-    through the executor-written JSON manifest and the driver sees only
-    one count row per day — never the per-key list."""
-    run_dir = str(tmp_path / "run")
-    n = 1_000_000
-    manifest_df = spark.range(n).select(
-        F.concat(F.lit("2025030"), (F.col("id") % 3 + 1).cast("string")
-                 ).alias("date"),
-        F.concat(F.lit("out/k"), F.col("id").cast("string")).alias("out_path"),
-    )
-    (manifest_df.repartition("date")
-     .write.mode("overwrite").partitionBy("date").json(run_dir))
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(infer_key, "true")
-    spark.conf.set(infer_key, "false")
+def test_counts_mode_collects_one_row_per_day(spark, tmp_path, monkeypatch):
+    """The scale claim, end to end: a counts-mode run over a day with
+    20k keys writes a 20k-line manifest and a matching count, while no
+    collect of the run brings more rows to the driver than there are
+    days — never the per-key list."""
+    n_keys = 20_000
+    in_dir = tmp_path / "input"
+    in_dir.mkdir()
+    days = {"20250301": n_keys, "20250302": 3}
+    for date, n in days.items():
+        pq.write_table(pa.table({"item_id": [f"k{i:05d}" for i in range(n)],
+                                 "v": list(range(n))}),
+                       in_dir / f"{date}.parquet")
+
+    collected = []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def counting_collect(self):
+        rows = collect(self)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(frame, "collect", counting_collect)
+    mk = f"{tmp_path}/markers"
+    summary = run_incremental(spark, "t", str(in_dir), f"{tmp_path}/out", mk,
+                              manifest="counts")
+    monkeypatch.undo()
+
+    assert summary["processed_days"] == len(days)
+    assert collected and max(collected) <= len(days), collected
+    docs = _markers(mk)
+    for date, n in days.items():
+        assert docs[date]["output_count"] == n
+        assert len(_manifest_rows(docs[date])) == n
+
+
+@pytest.mark.parametrize("mode,max_jobs", [("outputs", 1), ("counts", 2)])
+def test_catch_up_job_count(spark, tmp_path, mode, max_jobs):
+    """Outputs mode is the one split job; counts mode adds no more than
+    the per-day count's own job: the manifests ride the split tasks."""
+    tmp = str(tmp_path)
+    _make_input(spark, tmp, f"{tmp}/input")
+    sc = spark.sparkContext
+    group = f"manifest-{mode}-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, f"{mode}-mode catch-up")
     try:
-        counts = spark.read.json(run_dir).groupBy("date").count().collect()
+        res = run_incremental(spark, "t", f"{tmp}/input", f"{tmp}/out",
+                              f"{tmp}/markers", manifest=mode)
     finally:
-        spark.conf.set(infer_key, prev)
-    assert len(counts) == 3  # driver materializes 3 rows, not 1e6
-    assert sorted((r["date"], r["count"]) for r in counts) == [
-        ("20250301", 333334), ("20250302", 333333), ("20250303", 333333)]
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res["processed_days"] == N_DAYS
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= max_jobs, jobs
 
 
-def test_day_by_day_fallback_honors_counts_mode(spark, tmp_path):
-    """A counts-mode run forced down the day-by-day path (corrupt file
-    in the backlog breaks the batch job) must still write counts-schema
-    markers for the good days — not silently degrade to driver-side
-    output lists (mixed marker schemas)."""
+def test_counts_mode_skips_corrupt_day(spark, tmp_path):
+    """A corrupt file in a counts-mode backlog fails its footer check
+    and is skipped before the split job; the good days still get
+    counts-schema markers, never driver-side output lists (mixed marker
+    schemas)."""
     tmp = str(tmp_path)
     in_dir = f"{tmp}/input"
     _make_input(spark, tmp, in_dir)
     with open(f"{in_dir}/20250204.parquet", "wb") as f:
-        f.write(b"not a parquet file")  # poisons the batch read
+        f.write(b"not a parquet file")  # fails the footer check
     summary = run_incremental(spark, "t", in_dir, f"{tmp}/out",
                               f"{tmp}/markers_fb", manifest="counts")
     assert summary["processed_days"] == N_DAYS  # bad day skipped, rest ok
-    docs = _markers(tmp, "fb")
+    docs = _markers(f"{tmp}/markers_fb")
     assert set(docs) == {f"202502{d:02d}" for d in range(1, N_DAYS + 1)}
     for date, doc in docs.items():
-        assert "outputs" not in doc, f"{date}: fallback wrote outputs list"
+        assert "outputs" not in doc, f"{date}: wrote an outputs list"
         assert doc["output_count"] == N_KEYS
         rows = []
         for mp in glob.glob(f"{doc['outputs_manifest']}/*.json"):
@@ -165,80 +208,34 @@ def test_day_by_day_fallback_honors_counts_mode(spark, tmp_path):
         assert all(os.path.exists(r["out_path"]) for r in rows)
 
 
-def test_gc_reclaims_orphaned_manifest_runs(spark, tmp_path):
-    """Reopening a day re-points its marker at a new run dir; the old
-    run dir is orphaned and the end-of-run GC removes it."""
-    from glue_parquet_splitter_spark.pipeline.incremental import (
-        gc_manifest_runs,
-    )
-
+def test_reopened_day_rewrites_its_manifest_in_place(spark, tmp_path):
+    """A reopened day (its input changed, so did its fingerprint)
+    rewrites its manifest at the same path: the marker keeps pointing
+    there, the manifest lists the new outputs only, and ``_manifests/``
+    holds one dir per marked day, so nothing is left to collect."""
     tmp = str(tmp_path)
     in_dir = f"{tmp}/input"
     _make_input(spark, tmp, in_dir)
     marker_dir = f"{tmp}/markers"
     run_incremental(spark, "t", in_dir, f"{tmp}/out", marker_dir,
                     manifest="counts")
-    runs = lambda: sorted(  # noqa: E731
-        os.listdir(f"{marker_dir}/_manifests"))
-    assert len(runs()) == 1
-    live = runs()[0]
+    day = "20250202"
+    before = _markers(marker_dir)[day]
+    assert before["output_count"] == N_KEYS
 
-    # orphan: a crashed/abandoned run no marker references
-    os.makedirs(f"{marker_dir}/_manifests/run-deadbeef0000/date=20250201")
-    assert len(runs()) == 2
-    removed = gc_manifest_runs(spark, marker_dir)
-    assert removed == 1 and runs() == [live]
-
-    # reopen one day (touch its input so the fingerprint changes):
-    # its marker re-points at a NEW run dir; the next counts-mode run's
-    # GC keeps both dirs that still back some marker, drops none extra
-    os.utime(f"{in_dir}/20250202.parquet", (1e9, 1e9))
+    # the day comes back with fewer keys
+    n_keys = N_KEYS // 4
+    pq.write_table(pa.table({"item_id": [f"{i % n_keys:010d}"
+                                         for i in range(100)]}),
+                   f"{in_dir}/{day}.parquet")
     again = run_incremental(spark, "t", in_dir, f"{tmp}/out", marker_dir,
                             manifest="counts", reprocess_changed=True)
     assert again["processed_days"] == 1
-    assert len(runs()) == 2  # old run still backs 2 markers, new backs 1
-    with open(f"{marker_dir}/20250202.json") as f:
-        assert live not in json.load(f)["outputs_manifest"]
 
-
-def test_gc_survives_corrupt_marker(spark, tmp_path):
-    """ADVICE r5: one unreadable marker must not disable GC forever.
-    Run dirs no newer than the bad marker are kept (it might reference
-    one of them); newer orphans are still collected."""
-    import time as _time
-
-    from glue_parquet_splitter_spark.pipeline.incremental import (
-        gc_manifest_runs,
-    )
-
-    tmp = str(tmp_path)
-    in_dir = f"{tmp}/input"
-    _make_input(spark, tmp, in_dir)
-    marker_dir = f"{tmp}/markers"
-    run_incremental(spark, "t", in_dir, f"{tmp}/out", marker_dir,
-                    manifest="counts")
-    runs = lambda: sorted(  # noqa: E731
-        os.listdir(f"{marker_dir}/_manifests"))
-    live = runs()[0]
-
-    # an old orphan, then a corrupt marker NEWER than it, then a newer
-    # orphan — only the newer orphan is safely collectable
-    old_orphan = f"{marker_dir}/_manifests/run-000000000bad"
-    os.makedirs(f"{old_orphan}/date=20250201")
-    t0 = _time.time()
-    os.utime(old_orphan, (t0 - 300, t0 - 300))
-    with open(f"{marker_dir}/99999999.json", "w") as f:
-        f.write("{corrupt")
-    os.utime(f"{marker_dir}/99999999.json", (t0 - 200, t0 - 200))
-    new_orphan = f"{marker_dir}/_manifests/run-00000000cafe"
-    os.makedirs(f"{new_orphan}/date=20250202")
-    os.utime(new_orphan, (t0 - 100, t0 - 100))
-
-    removed = gc_manifest_runs(spark, marker_dir)
-    assert removed == 1
-    assert sorted(runs()) == sorted([live, "run-000000000bad"])
-
-    # once the marker is repaired (here: removed), the old orphan goes
-    os.remove(f"{marker_dir}/99999999.json")
-    assert gc_manifest_runs(spark, marker_dir) == 1
-    assert runs() == [live]
+    docs = _markers(marker_dir)
+    after = docs[day]
+    assert after["outputs_manifest"] == before["outputs_manifest"]
+    assert after["output_count"] == n_keys
+    assert len(_manifest_rows(after)) == after["output_count"]
+    assert os.listdir(after["outputs_manifest"]) == ["part-0.json"]
+    assert sorted(os.listdir(f"{marker_dir}/_manifests")) == sorted(docs)

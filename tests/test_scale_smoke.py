@@ -87,7 +87,7 @@ def test_manifest_counts_1m_keys_stays_in_plan(spark, tmp_path):
     the list.
     (Uses a count-only consumption; the actual file fan-out at 1M keys
     is an object-store concern, so the write side is a noop sink here —
-    the 1e6-row manifest JSON round-trip is covered in
+    an engine-level counts-mode run over 20k keys is covered in
     test_manifest_modes.)"""
     n_keys = 1_000_000
     df = spark.range(n_keys).select(
