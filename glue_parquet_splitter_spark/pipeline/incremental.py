@@ -11,12 +11,12 @@ Reproduces the reference's lifecycle
 
 Steps 4-5 are one function, :func:`_split_days`: it splits the given
 days and builds each day's marker in one place for every manifest mode
-and layout.  For the exact layout the whole backlog is one job of at
-most ``defaultParallelism`` Python tasks (:func:`~.splitter.split_files`):
-each task reads its own day files with pyarrow and writes one file per
-key, so every output keeps its own day file's schema, and in counts mode
-it writes each of its days' manifests too.  The Hive layout
-goes day by day, one Spark read and ``partitionBy`` write each.
+and layout.  In either layout the whole backlog is one job of at most
+``defaultParallelism`` Python tasks (:func:`~.splitter.split_files`):
+each task reads its own units with pyarrow and writes one file per key,
+so every output keeps its own day file's schema.  The exact layout's
+unit is a day file, and in counts mode its task writes the day's
+manifest too; the Hive layout's unit is one row group of a day file.
 
 Listing uses the Hadoop FileSystem API so the same code handles
 ``file://``, ``hdfs://`` and ``s3a://``.  The scheduling set-difference
@@ -36,10 +36,8 @@ import logging
 import time
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from .splitter import (parquet_footer, resolve_fs, split_files,
-                       write_bytes, write_partitioned)
+from .splitter import parquet_footer, resolve_fs, split_files, write_bytes
 
 log = logging.getLogger(__name__)
 
@@ -125,8 +123,9 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     is unreadable is warned about and left unmarked; the others commit.
     A day whose footer reads but whose data pages or outputs fail
     raises, and the run writes no marker.  ``exact_layout=False``
-    writes the Hive layout ``<out>/date=<d>/<key>=<k>/part-*.parquet``
-    and goes day by day.
+    writes the Hive layout ``<out>/date=<d>/<key>=<k>/part-<i>.parquet``
+    (one part per row group ``i`` of the day file that holds the key),
+    in the same one job.
 
     ``manifest`` selects how the per-day marker records its outputs:
 
@@ -174,17 +173,9 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     log.info("[%s] input=%d done=%d missing=%d", kind,
              len(input_dates), len(done_dates), len(missing_dates))
 
-    def split(dates: list[str]) -> int:
-        return _split_days(spark, kind, in_dir, out_dir, marker_dir, dates,
-                           key, exact_layout, manifest, fp_by_date)
-
-    # the whole backlog in one job; the Hive layout writes one directory
-    # per day, so it goes day by day
-    if exact_layout:
-        processed = split(missing_dates) if missing_dates else 0
-    else:
-        processed = sum(split([d]) for d in missing_dates)
-
+    processed = _split_days(spark, kind, in_dir, out_dir, marker_dir,
+                            missing_dates, key, exact_layout, manifest,
+                            fp_by_date)
     return {
         "kind": kind,
         "input_files": len(input_dates),
@@ -194,28 +185,19 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     }
 
 
-def _has_rows(kind: str, path: str, key: str) -> bool:
-    """Footer check of one day's file: True when it has rows, False
-    when it is empty (O9 skip) or unreadable (warn+skip; retried next
-    run).  Raises ``ValueError`` when the day has rows but no ``key``
-    column."""
+def _has_rows(kind: str, path: str, key: str) -> int:
+    """Footer check of one day's file: its row-group count when it has
+    rows, 0 when it is empty (O9 skip) or unreadable (warn+skip;
+    retried next run).  Raises ``ValueError`` when the day has rows but
+    no ``key`` column."""
     try:
-        num_rows, columns = parquet_footer(path)
+        num_rows, row_groups, columns = parquet_footer(path)
     except (OSError, ValueError) as e:  # missing, or not parquet
         log.warning("[%s] unreadable: %s (%s)", kind, path, e)
-        return False
+        return 0
     if num_rows and key not in columns:
         raise ValueError(f"required column(s) missing: {[key]} in {path}")
-    return num_rows > 0
-
-
-def _has_partitions(spark: SparkSession, directory: str, key: str) -> bool:
-    """Whether a ``partitionBy(key)`` write left any ``<key>=<k>`` dir
-    under ``directory`` (one Hadoop FS listing, no data read)."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(directory)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return any(st.isDirectory() and st.getPath().getName().startswith(
-        f"{key}=") for st in fs.listStatus(hpath))
+    return row_groups if num_rows else 0
 
 
 def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
@@ -227,49 +209,46 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
 
     Every day's footer is read first: an unreadable file is warned
     about and an empty one skipped (no marker, retried next run), and a
-    file with rows but no key column raises.  The exact layout then fans
-    the remaining days out in one ``split_files`` job; in counts mode
-    its tasks also write each day's manifest and the driver collects a
-    per-day count of the job's rows.  The Hive layout (one day only)
-    writes ``<out>/date=<d>/<key>=<k>/``.  Markers commit after the job
+    file with rows but no key column raises.  The remaining days fan out
+    in one ``split_files`` job.  In the exact layout a manifest row
+    names one output object; in counts mode the tasks also write each
+    day's manifest, and the driver collects a per-day count of the
+    job's rows.  In the Hive layout the driver first empties each
+    day's ``<out>/date=<d>/``, so a reopened day loses the keys that
+    left it, and a manifest row stands for one row group's writes into
+    that dir, the day's one output.  Markers commit after the job
     succeeds, so a failed job (a read error on an executor, a bad data
     page, a write error) raises and leaves every day unmarked for the
     re-run.  A day left without outputs has only null keys and gets an
-    empty marker (and, in counts mode, an empty manifest).
+    empty marker (and, in the exact layout's counts mode, an empty
+    manifest).
     """
     in_paths = {d: f"{in_dir.rstrip('/')}/{d}.parquet" for d in dates}
-    dates = [d for d in dates if _has_rows(kind, in_paths[d], key)]
+    row_groups = {d: _has_rows(kind, in_paths[d], key) for d in dates}
+    dates = [d for d in dates if row_groups[d]]
     if not dates:
         return 0
-    counts: dict[str, int] = {}
-    outputs: dict[str, list[str]] = {}
-    manifest_dir = None
+    manifest_dir = (f"{marker_dir.rstrip('/')}/_manifests"
+                    if exact_layout and manifest == "counts" else None)
     if not exact_layout:
-        (date,) = dates
-        # null-key rows dropped (reference parity — pandas groupby dropna)
-        df = spark.read.parquet(in_paths[date]).filter(F.col(key).isNotNull())
-        day_dir = f"{out_dir}/date={date}"
-        write_partitioned(df, day_dir, key)
-        # an all-null-key day writes no <key>=<k> dir: no output
-        outputs[date] = [day_dir] if _has_partitions(
-            spark, day_dir, key) else []
+        for date in dates:
+            filesystem, day_dir = resolve_fs(f"{out_dir}/date={date}")
+            filesystem.delete_dir_contents(day_dir, missing_dir_ok=True)
+    groups = split_files(spark, {d: in_paths[d] for d in dates}, out_dir,
+                         key, manifest_dir,
+                         None if exact_layout else row_groups)
+    outputs: dict[str, set[str]] = {}
+    if manifest_dir:
+        # each task wrote its days' manifests; the driver collects one
+        # count per day, never the per-key list
+        counts = {r["date"]: r["count"] for r in
+                  groups.groupBy("date").count().collect()}
     else:
-        if manifest == "counts":
-            manifest_dir = f"{marker_dir.rstrip('/')}/_manifests"
-        groups = split_files(spark, {d: in_paths[d] for d in dates},
-                             out_dir, key, manifest_dir)
-        if manifest_dir:
-            # each task wrote its days' manifests; the driver collects
-            # one count per day, never the per-key list
-            counts = {r["date"]: r["count"] for r in
-                      groups.groupBy("date").count().collect()}
-        else:
-            for r in groups.collect():  # one row per output object
-                outputs.setdefault(r.date, []).append(r.out_path)
-    counts = counts or {d: len(v) for d, v in outputs.items()}
+        for r in groups.collect():  # one row per output object or unit
+            outputs.setdefault(r.date, set()).add(r.out_path)
+        counts = {d: len(v) for d, v in outputs.items()}
 
     stamp = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-    processed = 0
     for date in dates:
         n = counts.get(date, 0)
         marker = {"kind": kind, "date": date, "input_key": in_paths[date],
@@ -284,5 +263,4 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
         marker["generated_at"] = stamp
         write_marker(f"{marker_dir.rstrip('/')}/{date}.json", marker)
         log.info("[OK] %s %s: %d outputs", kind, date, n)
-        processed += 1
-    return processed
+    return len(dates)

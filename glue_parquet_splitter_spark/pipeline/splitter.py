@@ -8,31 +8,34 @@ input is skipped; a missing ``item_id`` column is a hard error.
 
 Three writers:
 
-- :func:`write_partitioned` — the idiomatic scale path:
-  ``df.write.partitionBy(key)``. One shuffle-free distributed write;
-  Hive layout ``item_id=<k>/part-*.parquet``. At 100 TB this is the
-  right shape (parallel tasks, S3A committer, ``maxRecordsPerFile`` to
-  bound small files).
+- :func:`write_partitioned` — Spark's own partitioned write of a
+  DataFrame: ``df.write.partitionBy(key)``, Hive layout
+  ``item_id=<k>/part-*.parquet``, ``maxRecordsPerFile`` to bound file
+  size.  The streaming split (``run_split_stream``) uses it.
 
-- :func:`split_files` — the reference's ``<k>/<d>.parquet`` layout for
-  day *files* (the incremental driver's catch-up).  The files are packed
-  into at most ``defaultParallelism`` Python tasks of one
-  ``mapInArrow`` job; each task reads its files with pyarrow, sorts
+- :func:`split_files` — the catch-up's writer for day *files*, in
+  either layout.  Its units of work (a whole day file for the
+  reference's ``<k>/<d>.parquet`` layout; one row group of a day file
+  for the Hive layout ``date=<d>/<key>=<k>/part-<i>.parquet``) are
+  packed into at most ``defaultParallelism`` Python tasks of one
+  ``mapInArrow`` job; each task reads its units with pyarrow, sorts
   each by key (stable, so input order holds within a key) and writes
   one slice per key.  No Spark scan, shuffle or row id: a day file
   already holds its rows together.  Outputs keep the input file's own
   Arrow schema (timestamps keep their unit, ints stay ints, each day
   its own columns), minus schema-level metadata such as the pandas
-  block.  With one wave of tasks, a task's fixed start-up cost counts
-  as much as its I/O.  On CPython < 3.13 a reused worker re-parses
-  every zip archive on its import path at the start of each task
-  (``pyspark.zip``, the spark-core jar, this package's zip) unless
-  ``session.guard_zip_rereads`` runs there; a task installs it when it
-  unpickles ``_split_file`` and so imports the package, and from then
-  on the worker skips the archives that have not changed.  Each
-  worker's first task still pays.
+  block.  A Hive unit holds one row group, so the row group bounds a
+  task's memory, and its ``<key>=<k>`` dir names are escaped as
+  ``partitionBy`` escapes them.  With one wave of tasks, a task's fixed
+  start-up cost counts as much as its I/O.  On CPython < 3.13 a reused
+  worker re-parses every zip archive on its import path at the start
+  of each task (``pyspark.zip``, the spark-core jar, this package's
+  zip) unless ``session.guard_zip_rereads`` runs there; a task
+  installs it when it unpickles ``_split_file`` and so imports the
+  package, and from then on the worker skips the archives that have
+  not changed.  Each worker's first task still pays.
 
-- :func:`split_groups` — the same layout for a DataFrame, which has no
+- :func:`split_groups` — the exact layout for a DataFrame, which has no
   files (:func:`split_day`): ``groupBy(key).applyInArrow``.  Each group
   arrives as one ``pyarrow.Table``; its order is restored from a
   pre-shuffle row id with ``take(sort_indices(...))``.  Outputs keep
@@ -40,7 +43,7 @@ Three writers:
   timestamps carry Spark's microsecond unit and the session's UTC tz,
   decimals keep their declared precision.
 
-Both parity writers write through pyarrow.fs (:func:`write_parquet_object`),
+Both pyarrow writers write through pyarrow.fs (:func:`write_parquet_object`),
 so paths may be plain local paths or ``file://``/``s3://``/``s3a://``/
 ``gs://``/``hdfs://`` URIs — no extra executor dependencies — and
 neither writes pandas schema metadata.
@@ -60,6 +63,9 @@ if TYPE_CHECKING:
 ORDER_COL = "__row_order"
 MANIFEST_SCHEMA = "date string, out_path string, rows long"
 MAX_RECORDS_PER_FILE = 5_000_000
+# the characters Spark's ExternalCatalogUtils.escapePathName writes as
+# %XX in a partition dir name (its fixed set off Windows)
+_ESCAPES = {c: f"%{c:02X}" for c in [*range(1, 32), *b"\"#%'*/:=?\\\x7f{[]^"]}
 
 
 def resolve_fs(path: str):
@@ -105,15 +111,24 @@ def write_bytes(path: str, data: bytes) -> None:
         f.write(data)
 
 
-def parquet_footer(path: str) -> tuple[int, list[str]]:
-    """(row count, top-level column names) from the footer of the
-    parquet object at ``path`` — metadata only, no data pages read."""
+def parquet_footer(path: str) -> tuple[int, int, list[str]]:
+    """(row count, row-group count, top-level column names) from the
+    footer of the parquet object at ``path`` — metadata only, no data
+    pages read."""
     import pyarrow.parquet as pq
 
     filesystem, fs_path = resolve_fs(path)
     with filesystem.open_input_file(fs_path) as f:
         pf = pq.ParquetFile(f)
-        return pf.metadata.num_rows, pf.schema_arrow.names
+        return pf.metadata.num_rows, pf.num_row_groups, pf.schema_arrow.names
+
+
+def _hive_dir_value(value) -> str:
+    """The ``<key>=`` dir name part ``partitionBy`` writes for a string,
+    integer, date or decimal key ``value``.  Python's ``str`` renders
+    the others, not Spark's cast: ``True``, ``1e+20`` and ``.500000``
+    where ``partitionBy`` writes ``true``, ``1.0E20`` and ``.5``."""
+    return str(value).translate(_ESCAPES) or "__HIVE_DEFAULT_PARTITION__"
 
 
 def require_columns(df: DataFrame, cols: Iterable[str]) -> None:
@@ -192,68 +207,87 @@ def split_groups(df: DataFrame, out_dir: str, key: str,
 
 
 def split_files(spark: SparkSession, files: Mapping[str, str], out_dir: str,
-                key: str = "item_id",
-                manifest_dir: str | None = None) -> DataFrame:
-    """Exact-layout fan-out of day files into ``<out>/<k>/<date>.parquet``,
-    as a LAZY manifest DataFrame (``date``, ``out_path``, ``rows`` — one
-    row per output object), like :func:`split_groups`.
+                key: str = "item_id", manifest_dir: str | None = None,
+                row_groups: Mapping[str, int] | None = None) -> DataFrame:
+    """Fan-out of day files by ``key``, as a LAZY manifest DataFrame
+    (``date``, ``out_path``, ``rows``), like :func:`split_groups`.
 
     ``files`` maps a date to its file's path; every file must have rows
     and a ``key`` column (the caller reads the footers first).  The
-    files go round-robin, in date order, into ``min(len(files),
+    units of work go round-robin, in date order, into ``min(units,
     defaultParallelism)`` bins, and each bin is one Python task of one
-    ``mapInArrow`` job.  A task reads each of its files whole — a day is
-    held in one worker's memory, as in the reference — drops null keys
-    and writes one file per key, rows in input order.  Given a
-    ``manifest_dir``, the task also writes each day's manifest to
-    ``<manifest_dir>/<date>/part-0.json``: JSON lines, one ``out_path``
-    and ``rows`` object per output, empty for a day whose keys are all
-    null, replaced by a retry or a rerun of the day.  Any read or write
+    ``mapInArrow`` job.  A unit drops null keys, sorts stably by key and
+    writes one file per key, rows in input order.  Any read or write
     error fails the job.
+
+    - Without ``row_groups``, the exact layout: a unit is a whole day
+      file — a day is held in one worker's memory, as in the reference
+      — and writes ``<out>/<k>/<date>.parquet``, one manifest row per
+      output.  Given a ``manifest_dir``, the task also writes each
+      day's manifest to ``<manifest_dir>/<date>/part-0.json``: JSON
+      lines, one ``out_path`` and ``rows`` object per output, empty for
+      a day whose keys are all null, replaced by a retry or a rerun of
+      the day.
+    - With ``row_groups`` (date → the file's row-group count), the Hive
+      layout: a unit is row group ``i`` of a day file, and writes
+      ``<out>/date=<date>/<key>=<k>/part-<i:05d>.parquet`` without the
+      key column, ``<k>`` escaped as ``partitionBy`` escapes it.  It
+      yields one row, ``(date, <out>/date=<date>, rows)``, and none
+      when its keys are all null.  The caller empties the day dirs.
     """
-    n_bins = min(len(files), spark.sparkContext.defaultParallelism)
-    bins: list[list[tuple[str, str]]] = [[] for _ in range(n_bins)]
-    for i, date in enumerate(sorted(files)):
-        bins[i % n_bins].append((date, files[date]))
+    units = [(date, files[date], i) for date in sorted(files)
+             for i in (range(row_groups[date]) if row_groups else [None])]
+    n_bins = min(len(units), spark.sparkContext.defaultParallelism)
+    bins = [units[b::n_bins] for b in range(n_bins)]
 
     def _split(batches):
         for batch in batches:
-            for i in batch.column(0).to_pylist():
-                for date, path in bins[i]:
+            for b in batch.column(0).to_pylist():
+                for date, path, row_group in bins[b]:
                     yield from _split_file(path, date, out_dir, key,
-                                           manifest_dir)
+                                           manifest_dir, row_group)
 
     return (spark.range(n_bins, numPartitions=n_bins)
             .mapInArrow(_split, MANIFEST_SCHEMA))
 
 
 def _split_file(path: str, date: str, out_dir: str, key: str,
-                manifest_dir: str | None) -> Iterator[pa.RecordBatch]:
-    """Write the day file at ``path`` as one object per non-null key,
-    and its manifest under ``manifest_dir`` when given; yields its
-    manifest rows (none for a day whose keys are all null)."""
+                manifest_dir: str | None,
+                row_group: int | None) -> Iterator[pa.RecordBatch]:
+    """Write the day file at ``path`` (or only its ``row_group``, in the
+    Hive layout) as one object per non-null key, and the day's manifest
+    under ``manifest_dir`` when given; yields its manifest rows (none
+    when every key is null)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     filesystem, fs_path = resolve_fs(path)
     with pq.ParquetFile(fs_path, filesystem=filesystem) as pf:
-        tbl = pf.read().replace_schema_metadata(None)
-    tbl = tbl.filter(pc.is_valid(tbl[key]))
+        tbl = pf.read() if row_group is None else pf.read_row_group(row_group)
+    tbl = tbl.filter(pc.is_valid(tbl[key])).replace_schema_metadata(None)
     # a stable sort: rows keep their input order within a key
     tbl = tbl.take(pc.sort_indices(tbl[key]))
     counts = pc.value_counts(tbl[key])  # keys in order of first appearance
-    rows = counts.field("counts").to_pylist()
-    paths, start = [], 0
-    for k, n in zip(counts.field("values").to_pylist(), rows):
-        paths.append(f"{out_dir}/{k}/{date}.parquet")
-        write_parquet_object(tbl.slice(start, n), paths[-1])
+    keys, rows = (counts.field(f).to_pylist() for f in ("values", "counts"))
+    if row_group is None:
+        paths = [f"{out_dir}/{k}/{date}.parquet" for k in keys]
+    else:
+        day_dir = f"{out_dir}/date={date}"
+        paths = [f"{day_dir}/{key}={_hive_dir_value(k)}/"
+                 f"part-{row_group:05d}.parquet" for k in keys]
+        tbl = tbl.drop_columns([key])
+    start = 0
+    for p, n in zip(paths, rows):
+        write_parquet_object(tbl.slice(start, n), p)
         start += n
-    if manifest_dir is not None:
+    if row_group is not None:
+        # one row for the unit: the day dir is the day's one output
+        paths, rows = ([day_dir], [start]) if paths else ([], [])
+    elif manifest_dir is not None:
         write_bytes(f"{manifest_dir}/{date}/part-0.json", "".join(
             json.dumps({"out_path": p, "rows": n}, ensure_ascii=False) + "\n"
             for p, n in zip(paths, rows)).encode("utf-8"))
     if paths:  # an all-null-key day writes nothing
         yield pa.RecordBatch.from_pydict(
-            {"date": [date] * len(paths), "out_path": paths,
-             "rows": counts.field("counts")})
+            {"date": [date] * len(paths), "out_path": paths, "rows": rows})

@@ -12,14 +12,14 @@ parquet-splitter.py:175-186).
 from __future__ import annotations
 
 import json
-import os
 import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline.splitter import require_columns, write_partitioned
+from ..pipeline.splitter import (require_columns, write_bytes,
+                                 write_partitioned)
 
 
 def run_split_stream(spark: SparkSession, in_dir: str, out_dir: str,
@@ -61,9 +61,8 @@ def run_split_stream(spark: SparkSession, in_dir: str, out_dir: str,
             "rows": n_rows,
             "generated_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(f"{marker_dir}/batch-{batch_id}.json", "w") as f:
-            json.dump(doc, f)
+        write_bytes(f"{marker_dir}/batch-{batch_id}.json",
+                    json.dumps(doc).encode("utf-8"))
         markers.append(doc)
 
     q = (

@@ -117,9 +117,9 @@ def main():
 | O8 missing-source guard | batch-read fallback + warning | unreadable-input path |
 | O9 empty-relation guard | `split_day` isEmpty skip; `run_incremental` footer row count | `test_empty_and_missing_column` |
 | O10 schema assertion | `splitter.require_columns` | same test |
-| O11 group-by partition | `split_day` (exact layout) / `write_partitioned` (Hive) | 9/9 golden replay, property tests |
+| O11 group-by partition | `split_files` (catch-up, exact or Hive layout) / `split_day` (DataFrame) | 9/9 golden replay, property tests, Hive `partitionBy` dir-name parity |
 | O12 filter-by-key | partition outputs ≡ key filter | golden + property tests |
-| O13/O14/O15 parquet sink | snappy parquet via pyarrow (parity) / Spark writer (scale) | golden replay |
+| O13/O14/O15 parquet sink | snappy parquet via pyarrow (catch-up, both layouts) / Spark writer (`write_partitioned`, streaming) | golden replay |
 | O16 parallel writes | Spark task parallelism (no thread pool) | bench: 37k rows/s replay |
 | O17 count-distinct | `agg_count_distinct` (+ `agg_approx_distinct` at scale) | oracle |
 | O18 JSON marker | `write_marker` field-for-field; `marker_manifest_json` | marker goldens |

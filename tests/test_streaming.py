@@ -52,6 +52,27 @@ def test_split_stream_markers(tmp_path, spark, sample_data):
     assert all(f.startswith("batch-") and f.endswith(".json") for f in files)
 
 
+def test_split_stream_marker_dir_uri(tmp_path, spark, monkeypatch):
+    """A ``file://`` marker dir is a URI, not a relative local path: the
+    marker lands under it and nothing is written to the working dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    pq.write_table(pa.table({"item_id": ["a", "b", "a"], "x": [1, 2, 3]}),
+                   in_dir / "20250101.parquet")
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    m = run_split_stream(spark, str(in_dir), str(tmp_path / "out"),
+                         f"file://{tmp_path}/mk",
+                         checkpoint_dir=str(tmp_path / "ckpt"))
+    assert [d["rows"] for d in m] == [3]
+    assert os.path.isfile(tmp_path / "mk" / "batch-0.json")
+    assert os.listdir(cwd) == []
+
+
 def test_transform_with_state_user_stats(spark, sf_dir):
     """Spark 4 transformWithStateInPandas parity with the
     applyInPandasWithState runner (skips where pyspark's protobuf
