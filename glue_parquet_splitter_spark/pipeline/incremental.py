@@ -16,7 +16,8 @@ and layout.  In either layout the whole backlog is one job of at most
 each task reads its own units with pyarrow and writes one file per key,
 so every output keeps its own day file's schema.  The exact layout's
 unit is a day file, and in counts mode its task writes the day's
-manifest too; the Hive layout's unit is one row group of a day file.
+manifest too; the Hive layout's unit is a run of a day file's row
+groups, about one Spark file split's worth.
 
 Listing uses the Hadoop FileSystem API so the same code handles
 ``file://``, ``hdfs://`` and ``s3a://``.  The scheduling set-difference
@@ -37,7 +38,8 @@ import time
 
 from pyspark.sql import SparkSession
 
-from .splitter import parquet_footer, resolve_fs, split_files, write_bytes
+from .splitter import (parquet_footer, require_hive_key, resolve_fs,
+                       split_files, write_bytes)
 
 log = logging.getLogger(__name__)
 
@@ -124,8 +126,10 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     A day whose footer reads but whose data pages or outputs fail
     raises, and the run writes no marker.  ``exact_layout=False``
     writes the Hive layout ``<out>/date=<d>/<key>=<k>/part-<i>.parquet``
-    (one part per row group ``i`` of the day file that holds the key),
-    in the same one job.
+    (one part per run of row groups, from row group ``i``, about one
+    Spark file split each, that holds the key), in the same one job.
+    It takes a string, integer, date or decimal key and raises for
+    another type, whose dir names would differ from ``partitionBy``'s.
 
     ``manifest`` selects how the per-day marker records its outputs:
 
@@ -185,19 +189,22 @@ def run_incremental(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
     }
 
 
-def _has_rows(kind: str, path: str, key: str) -> int:
-    """Footer check of one day's file: its row-group count when it has
-    rows, 0 when it is empty (O9 skip) or unreadable (warn+skip;
-    retried next run).  Raises ``ValueError`` when the day has rows but
-    no ``key`` column."""
+def _has_rows(kind: str, path: str, key: str, hive: bool) -> list[int]:
+    """Footer check of one day's file: the compressed bytes of each of
+    its row groups when it has rows, ``[]`` when it is empty (O9 skip)
+    or unreadable (warn+skip; retried next run).  Raises ``ValueError``
+    when the day has rows but no ``key`` column, or, for the ``hive``
+    layout, a key type whose dir names it cannot write as Spark does."""
     try:
-        num_rows, row_groups, columns = parquet_footer(path)
+        num_rows, row_groups, schema = parquet_footer(path)
     except (OSError, ValueError) as e:  # missing, or not parquet
         log.warning("[%s] unreadable: %s (%s)", kind, path, e)
-        return 0
-    if num_rows and key not in columns:
+        return []
+    if num_rows and key not in schema.names:
         raise ValueError(f"required column(s) missing: {[key]} in {path}")
-    return row_groups if num_rows else 0
+    if num_rows and hive:
+        require_hive_key(schema, key)
+    return row_groups if num_rows else []
 
 
 def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
@@ -209,22 +216,26 @@ def _split_days(spark: SparkSession, kind: str, in_dir: str, out_dir: str,
 
     Every day's footer is read first: an unreadable file is warned
     about and an empty one skipped (no marker, retried next run), and a
-    file with rows but no key column raises.  The remaining days fan out
+    file with rows but no key column (or, in the Hive layout, a key
+    type it cannot name dirs for) raises.  The remaining days fan out
     in one ``split_files`` job.  In the exact layout a manifest row
     names one output object; in counts mode the tasks also write each
     day's manifest, and the driver collects a per-day count of the
     job's rows.  In the Hive layout the driver first empties each
     day's ``<out>/date=<d>/``, so a reopened day loses the keys that
-    left it, and a manifest row stands for one row group's writes into
-    that dir, the day's one output.  Markers commit after the job
-    succeeds, so a failed job (a read error on an executor, a bad data
-    page, a write error) raises and leaves every day unmarked for the
-    re-run.  A day left without outputs has only null keys and gets an
-    empty marker (and, in the exact layout's counts mode, an empty
-    manifest).
+    left it, and a manifest row stands for one unit's writes into that
+    dir, the day's one output.  Markers commit after the job succeeds,
+    so a failed job (a read error on an executor, a bad data page, a
+    write error) raises and leaves every new day unmarked for the
+    re-run.  A reopened day keeps its old marker; in the Hive layout a
+    failed job leaves each reopened day's dir empty or partly written
+    under that marker until a later run redoes the day.  A day left
+    without outputs has only null keys and gets an empty marker (and,
+    in the exact layout's counts mode, an empty manifest).
     """
     in_paths = {d: f"{in_dir.rstrip('/')}/{d}.parquet" for d in dates}
-    row_groups = {d: _has_rows(kind, in_paths[d], key) for d in dates}
+    row_groups = {d: _has_rows(kind, in_paths[d], key, not exact_layout)
+                  for d in dates}
     dates = [d for d in dates if row_groups[d]]
     if not dates:
         return 0

@@ -15,17 +15,18 @@ Three writers:
 
 - :func:`split_files` — the catch-up's writer for day *files*, in
   either layout.  Its units of work (a whole day file for the
-  reference's ``<k>/<d>.parquet`` layout; one row group of a day file
-  for the Hive layout ``date=<d>/<key>=<k>/part-<i>.parquet``) are
-  packed into at most ``defaultParallelism`` Python tasks of one
-  ``mapInArrow`` job; each task reads its units with pyarrow, sorts
-  each by key (stable, so input order holds within a key) and writes
-  one slice per key.  No Spark scan, shuffle or row id: a day file
-  already holds its rows together.  Outputs keep the input file's own
-  Arrow schema (timestamps keep their unit, ints stay ints, each day
-  its own columns), minus schema-level metadata such as the pandas
-  block.  A Hive unit holds one row group, so the row group bounds a
-  task's memory, and its ``<key>=<k>`` dir names are escaped as
+  reference's ``<k>/<d>.parquet`` layout; a split-sized run of a day
+  file's row groups for the Hive layout
+  ``date=<d>/<key>=<k>/part-<i>.parquet``) are packed into at most
+  ``defaultParallelism`` Python tasks of one ``mapInArrow`` job; each
+  task reads its units with pyarrow, sorts each by key (stable, so
+  input order holds within a key) and writes one slice per key.  No
+  Spark scan, shuffle or row id: a day file already holds its rows
+  together.  Outputs keep the input file's own Arrow schema
+  (timestamps keep their unit, ints stay ints, each day its own
+  columns), minus schema-level metadata such as the pandas block.  A
+  Hive unit holds about one Spark file split, so the split size bounds
+  a task's memory, and its ``<key>=<k>`` dir names are escaped as
   ``partitionBy`` escapes them.  With one wave of tasks, a task's fixed
   start-up cost counts as much as its I/O.  On CPython < 3.13 a reused
   worker re-parses every zip archive on its import path at the start
@@ -52,6 +53,8 @@ neither writes pandas schema metadata.
 from __future__ import annotations
 
 import json
+from decimal import Decimal
+from itertools import accumulate
 from typing import TYPE_CHECKING, Iterable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +62,7 @@ from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
     import pyarrow as pa
+    from pyarrow import fs as pafs
 
 ORDER_COL = "__row_order"
 MANIFEST_SCHEMA = "date string, out_path string, rows long"
@@ -75,7 +79,11 @@ def resolve_fs(path: str):
     pyarrow wheel Spark already requires, so local, ``file://``,
     ``s3://``/``s3a://``, ``gs://`` and ``hdfs://`` all work without
     fsspec/s3fs on the workers.  Hadoop's ``s3a``/``s3n`` scheme names
-    map onto pyarrow's S3 implementation.
+    map onto pyarrow's S3 implementation.  Only a URI's scheme and
+    authority go through pyarrow's URI parser; the rest is the in-fs
+    path as it stands, as Hadoop's ``Path`` takes it, so an escaped
+    Hive dir name such as ``item_id=a%2Fb`` or ``item_id=sp ace`` is
+    not percent-decoded or rejected.
     """
     from pyarrow import fs as pafs
 
@@ -86,20 +94,25 @@ def resolve_fs(path: str):
         # only accepts file:///x — normalize both to a plain path
         return pafs.LocalFileSystem(), "/" + path[5:].lstrip("/")
     if "://" in path:
-        return pafs.FileSystem.from_uri(path)
+        scheme, rest = path.split("://", 1)
+        authority, slash, rest = rest.partition("/")
+        filesystem, root = pafs.FileSystem.from_uri(f"{scheme}://{authority}/")
+        return filesystem, root.rstrip("/") + slash + rest
     return pafs.LocalFileSystem(), path
 
 
-def write_parquet_object(table: pa.Table, path: str) -> None:
+def write_parquet_object(table: pa.Table, path: str,
+                         filesystem: pafs.FileSystem | None = None) -> None:
     """Write one Arrow table as a single parquet object at ``path``
-    (any pyarrow-supported filesystem; parent dirs created)."""
+    (any pyarrow-supported filesystem; parent dirs created).  Given a
+    ``filesystem`` from :func:`resolve_fs`, ``path`` is a path in it,
+    and no filesystem is built for the object."""
     import pyarrow.parquet as pq
 
-    filesystem, fs_path = resolve_fs(path)
-    parent = fs_path.rsplit("/", 1)[0]
-    filesystem.create_dir(parent, recursive=True)
-    pq.write_table(table, fs_path, filesystem=filesystem,
-                   compression="snappy")
+    if filesystem is None:
+        filesystem, path = resolve_fs(path)
+    filesystem.create_dir(path.rsplit("/", 1)[0], recursive=True)
+    pq.write_table(table, path, filesystem=filesystem, compression="snappy")
 
 
 def write_bytes(path: str, data: bytes) -> None:
@@ -111,24 +124,46 @@ def write_bytes(path: str, data: bytes) -> None:
         f.write(data)
 
 
-def parquet_footer(path: str) -> tuple[int, int, list[str]]:
-    """(row count, row-group count, top-level column names) from the
-    footer of the parquet object at ``path`` — metadata only, no data
-    pages read."""
+def parquet_footer(path: str) -> tuple[int, list[int], pa.Schema]:
+    """(row count, each row group's compressed bytes, Arrow schema) from
+    the footer of the parquet object at ``path`` — metadata only, no
+    data pages read."""
     import pyarrow.parquet as pq
 
     filesystem, fs_path = resolve_fs(path)
     with filesystem.open_input_file(fs_path) as f:
         pf = pq.ParquetFile(f)
-        return pf.metadata.num_rows, pf.num_row_groups, pf.schema_arrow.names
+        groups = map(pf.metadata.row_group, range(pf.num_row_groups))
+        return pf.metadata.num_rows, [
+            sum(g.column(j).total_compressed_size
+                for j in range(g.num_columns)) for g in groups
+        ], pf.schema_arrow
+
+
+def require_hive_key(schema: pa.Schema, key: str) -> None:
+    """Raise ``ValueError`` unless ``key`` is a string, integer, date or
+    decimal column (or a dictionary of one): the types whose
+    :func:`_hive_dir_value` equals the dir name ``partitionBy`` writes.
+    For the others Spark's cast differs from Python's ``str``: ``true``
+    for ``True``, ``1.0E20`` for ``1e+20``, ``...05.5`` for
+    ``...05.500000``."""
+    import pyarrow as pa
+
+    t = schema.field(key).type
+    t = t.value_type if pa.types.is_dictionary(t) else t
+    if not (pa.types.is_string(t) or pa.types.is_large_string(t)
+            or pa.types.is_integer(t) or pa.types.is_date(t)
+            or pa.types.is_decimal(t)):
+        raise ValueError(f"the Hive layout needs a string, integer, date or "
+                         f"decimal key; {key!r} is {t}")
 
 
 def _hive_dir_value(value) -> str:
-    """The ``<key>=`` dir name part ``partitionBy`` writes for a string,
-    integer, date or decimal key ``value``.  Python's ``str`` renders
-    the others, not Spark's cast: ``True``, ``1e+20`` and ``.500000``
-    where ``partitionBy`` writes ``true``, ``1.0E20`` and ``.5``."""
-    return str(value).translate(_ESCAPES) or "__HIVE_DEFAULT_PARTITION__"
+    """The ``<key>=`` dir name part ``partitionBy`` writes for a key
+    value of a type :func:`require_hive_key` accepts (a decimal in plain
+    notation, as Spark casts it: ``0.00000001``, not ``1E-8``)."""
+    text = format(value, "f") if isinstance(value, Decimal) else str(value)
+    return text.translate(_ESCAPES) or "__HIVE_DEFAULT_PARTITION__"
 
 
 def require_columns(df: DataFrame, cols: Iterable[str]) -> None:
@@ -208,7 +243,8 @@ def split_groups(df: DataFrame, out_dir: str, key: str,
 
 def split_files(spark: SparkSession, files: Mapping[str, str], out_dir: str,
                 key: str = "item_id", manifest_dir: str | None = None,
-                row_groups: Mapping[str, int] | None = None) -> DataFrame:
+                row_groups: Mapping[str, list[int]] | None = None,
+                ) -> DataFrame:
     """Fan-out of day files by ``key``, as a LAZY manifest DataFrame
     (``date``, ``out_path``, ``rows``), like :func:`split_groups`.
 
@@ -228,62 +264,96 @@ def split_files(spark: SparkSession, files: Mapping[str, str], out_dir: str,
       lines, one ``out_path`` and ``rows`` object per output, empty for
       a day whose keys are all null, replaced by a retry or a rerun of
       the day.
-    - With ``row_groups`` (date → the file's row-group count), the Hive
-      layout: a unit is row group ``i`` of a day file, and writes
-      ``<out>/date=<date>/<key>=<k>/part-<i:05d>.parquet`` without the
-      key column, ``<k>`` escaped as ``partitionBy`` escapes it.  It
-      yields one row, ``(date, <out>/date=<date>, rows)``, and none
-      when its keys are all null.  The caller empties the day dirs.
+    - With ``row_groups`` (date → the compressed bytes of each of the
+      file's row groups), the Hive layout: a unit is the run of row
+      groups of one day file that Spark's scan of these files would
+      give one split (:func:`_row_group_runs`), so a unit holds about
+      one split's bytes, or one row group when that is larger.  It writes
+      ``<out>/date=<date>/<key>=<k>/part-<i:05d>.parquet``, ``i`` its
+      first row group, without the key column and with ``<k>`` escaped
+      as ``partitionBy`` escapes it.  It yields one row, ``(date,
+      <out>/date=<date>, rows)``, and none when its keys are all null.
+      The caller empties the day dirs.
     """
-    units = [(date, files[date], i) for date in sorted(files)
-             for i in (range(row_groups[date]) if row_groups else [None])]
+    runs = {d: [None] for d in files}
+    if row_groups is not None:
+        # Spark's split size for a scan of these files
+        # (FilePartition.maxSplitBytes)
+        conf = spark._jsparkSession.sessionState().conf()
+        open_cost = conf.filesOpenCostInBytes()
+        total = sum(sum(g) + open_cost for g in row_groups.values())
+        split = min(conf.filesMaxPartitionBytes(), max(
+            open_cost, total // spark.sparkContext.defaultParallelism, 1))
+        runs = {d: _row_group_runs(g, split) for d, g in row_groups.items()}
+    units = [(date, files[date], run) for date in sorted(files)
+             for run in runs[date]]
     n_bins = min(len(units), spark.sparkContext.defaultParallelism)
     bins = [units[b::n_bins] for b in range(n_bins)]
 
     def _split(batches):
         for batch in batches:
             for b in batch.column(0).to_pylist():
-                for date, path, row_group in bins[b]:
+                for date, path, run in bins[b]:
                     yield from _split_file(path, date, out_dir, key,
-                                           manifest_dir, row_group)
+                                           manifest_dir, run)
 
     return (spark.range(n_bins, numPartitions=n_bins)
             .mapInArrow(_split, MANIFEST_SCHEMA))
 
 
+def _row_group_runs(sizes: list[int], split: int) -> list[list[int]]:
+    """A file's row groups, of ``sizes`` bytes, in runs: a group joins
+    the ``split``-byte range of the file that holds its midpoint, as
+    Spark's parquet scan gives row groups to file splits."""
+    runs: dict[int, list[int]] = {}
+    for i, end in enumerate(accumulate(sizes)):
+        runs.setdefault((end - sizes[i] // 2) // split, []).append(i)
+    return list(runs.values())
+
+
 def _split_file(path: str, date: str, out_dir: str, key: str,
                 manifest_dir: str | None,
-                row_group: int | None) -> Iterator[pa.RecordBatch]:
-    """Write the day file at ``path`` (or only its ``row_group``, in the
+                row_groups: list[int] | None) -> Iterator[pa.RecordBatch]:
+    """Write the day file at ``path`` (or only its ``row_groups``, in the
     Hive layout) as one object per non-null key, and the day's manifest
     under ``manifest_dir`` when given; yields its manifest rows (none
-    when every key is null)."""
+    when every key is null).  Objects are written through the
+    filesystem of ``out_dir``, with their names joined on as plain
+    paths."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     filesystem, fs_path = resolve_fs(path)
     with pq.ParquetFile(fs_path, filesystem=filesystem) as pf:
-        tbl = pf.read() if row_group is None else pf.read_row_group(row_group)
+        tbl = (pf.read() if row_groups is None
+               else pf.read_row_groups(row_groups))
     tbl = tbl.filter(pc.is_valid(tbl[key])).replace_schema_metadata(None)
+    by = tbl[key]
+    if pa.types.is_dictionary(by.type):  # Arrow sorts only the values
+        by = by.cast(by.type.value_type)
     # a stable sort: rows keep their input order within a key
-    tbl = tbl.take(pc.sort_indices(tbl[key]))
-    counts = pc.value_counts(tbl[key])  # keys in order of first appearance
+    order = pc.sort_indices(by)
+    tbl = tbl.take(order)
+    counts = pc.value_counts(by.take(order))  # keys in order of appearance
     keys, rows = (counts.field(f).to_pylist() for f in ("values", "counts"))
-    if row_group is None:
-        paths = [f"{out_dir}/{k}/{date}.parquet" for k in keys]
+    if row_groups is None:
+        names = [f"{k}/{date}.parquet" for k in keys]
     else:
-        day_dir = f"{out_dir}/date={date}"
-        paths = [f"{day_dir}/{key}={_hive_dir_value(k)}/"
-                 f"part-{row_group:05d}.parquet" for k in keys]
+        names = [f"date={date}/{key}={_hive_dir_value(k)}/"
+                 f"part-{row_groups[0]:05d}.parquet" for k in keys]
         tbl = tbl.drop_columns([key])
+    filesystem, base = resolve_fs(out_dir)
     start = 0
-    for p, n in zip(paths, rows):
-        write_parquet_object(tbl.slice(start, n), p)
+    for name, n in zip(names, rows):
+        write_parquet_object(tbl.slice(start, n),
+                             f"{base.rstrip('/')}/{name}", filesystem)
         start += n
-    if row_group is not None:
+    paths = [f"{out_dir}/{name}" for name in names]
+    if row_groups is not None:
         # one row for the unit: the day dir is the day's one output
-        paths, rows = ([day_dir], [start]) if paths else ([], [])
+        paths, rows = (([f"{out_dir}/date={date}"], [start]) if paths
+                       else ([], []))
     elif manifest_dir is not None:
         write_bytes(f"{manifest_dir}/{date}/part-0.json", "".join(
             json.dumps({"out_path": p, "rows": n}, ensure_ascii=False) + "\n"
